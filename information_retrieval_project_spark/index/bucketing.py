@@ -2,10 +2,10 @@
 
 Both the main compressed index (index/build.write_index → queryexec/wand
 pruning) and the positional index (index/positions) partition storage by
-`pmod(xxhash64(term), m)` and prune query-time scans by recomputing the
-bucket for the query terms. The hash, the modulus handling, and the prune
-condition live HERE so the write and read sides can never drift apart —
-a mismatched modulus silently drops valid postings (ADVICE r1)."""
+`pmod(xxhash64(term), m)` and prune query-time scans by applying the same
+expression to the query terms. The hash, the modulus handling, and the
+prune condition live HERE so the write and read sides can never drift
+apart — a mismatched modulus silently drops valid postings (ADVICE r1)."""
 
 from __future__ import annotations
 
@@ -13,9 +13,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def term_bucket_expr(term_buckets: int) -> Column:
-    """Stable bucket of the `term` column under modulus term_buckets."""
-    return F.pmod(F.xxhash64("term"), F.lit(int(term_buckets)))
+def term_bucket_expr(term_buckets: int, term: Column | str = "term") -> Column:
+    """Stable bucket of `term` (a column or column name; the writer's `term`
+    column by default) under modulus term_buckets."""
+    return F.pmod(F.xxhash64(term), F.lit(int(term_buckets)))
 
 
 def bucket_values_for_terms(spark, terms: list[str], term_buckets: int) -> list[int]:
@@ -34,12 +35,14 @@ def prune_terms(
     df: DataFrame, terms: list[str], term_buckets: int | None = None
 ) -> DataFrame:
     """Rows for `terms` only; when df carries a term_bucket partition column
-    and the stored modulus is supplied, the filter includes the bucket
-    values so the scan prunes whole partitions."""
+    and the stored modulus is supplied, the filter includes the bucket of
+    each term as the writer's expression over a literal. The optimizer
+    folds those to constants, so the scan prunes whole partitions
+    (`PartitionFilters: [term_bucket IN (...)]`) without running a job."""
     uniq = sorted(set(terms))
     cond = F.col("term").isin(uniq)
     if "term_bucket" in df.columns and term_buckets:
         cond = cond & F.col("term_bucket").isin(
-            bucket_values_for_terms(df.sparkSession, uniq, term_buckets)
+            [term_bucket_expr(term_buckets, F.lit(t)) for t in uniq]
         )
     return df.filter(cond)

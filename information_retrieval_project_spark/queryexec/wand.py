@@ -9,10 +9,10 @@ public literature); the reference scores every document every query
 (data_manager.py:126), so WAND is the engine's scale substitute.
 
 Distributed path: the index rows for the (few) query terms are filtered with
-partition pruning on term_bucket, decoded inside one Arrow batch per term,
-exploded to candidates, joined to doc_stats, aggregated, top-k — all native
-after the decode UDF. The single-node kernel is used by tests (WAND ==
-exhaustive property) and by the per-shard scorer.
+partition pruning on term_bucket, decoded exhaustively by one Arrow-batch
+UDF, joined to doc_stats, aggregated, top-k — all native after the decode.
+The single-node kernel is used by tests (WAND == exhaustive property) and
+by the per-shard scorer.
 """
 
 from __future__ import annotations
@@ -162,15 +162,14 @@ def wand_topk(
     return [(-nd, s) for s, nd in out]
 
 
-def decode_top_blocks(index_rows: DataFrame, n_blocks: int) -> DataFrame:
-    """Phase-1 sample of the two-phase block-max path: per index row
-    (term, segment), decode and emit ONLY the n_blocks blocks with the
-    highest block-max tf (the tf component is monotone in tf, so these are
-    the highest-upper-bound blocks). Bounded output — n_blocks * BLOCK rows
-    per index row — regardless of posting-list length. df (the TERM-TOTAL,
-    identical on every segment row) is emitted alongside so downstream
-    scoring computes idf from the decoded rows directly — no separate
-    distinct+broadcast idf subtree."""
+def _decode(index_rows: DataFrame, keep_blocks=None) -> DataFrame:
+    """index(term, df, postings, bm_tfs, ...) -> (term, doc_id, tf, df) via
+    Arrow batches: this module's one posting decoder. df is the stored
+    TERM-TOTAL, repeated per row, so downstream scoring computes idf inline
+    without a distinct+broadcast subtree.
+
+    keep_blocks(term, df, block_max_tfs) -> bool mask over the row's blocks,
+    applied before emission; None emits every posting."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..index.codec import varbyte_decode
@@ -184,16 +183,13 @@ def decode_top_blocks(index_rows: DataFrame, n_blocks: int) -> DataFrame:
                 pdf["bm_tfs"].values,
             ):
                 d, t = decode_postings(bytes(buf))
+                if d.size and keep_blocks is not None:
+                    keep = keep_blocks(term, int(df_), varbyte_decode(bytes(bmt_buf)))
+                    if not keep.all():
+                        mask = np.repeat(keep, BLOCK)[: d.size]
+                        d, t = d[mask], t[mask]
                 if d.size == 0:
                     continue
-                bmt = varbyte_decode(bytes(bmt_buf))
-                nb = bmt.size
-                if nb > n_blocks:
-                    sel = np.sort(np.argsort(bmt)[-n_blocks:])
-                    keep = np.zeros(nb, dtype=bool)
-                    keep[sel] = True
-                    mask = np.repeat(keep, BLOCK)[: d.size]
-                    d, t = d[mask], t[mask]
                 terms.append(np.full(d.size, term, dtype=object))
                 docs.append(d)
                 tfs.append(t)
@@ -213,14 +209,39 @@ def decode_top_blocks(index_rows: DataFrame, n_blocks: int) -> DataFrame:
     )
 
 
+def decode_top_blocks(index_rows: DataFrame, n_blocks: int) -> DataFrame:
+    """Sample for blockmax_prune_info: per index row (term, segment), decode
+    and emit ONLY the n_blocks blocks with the highest block-max tf (the tf
+    component is monotone in tf, so these are the highest-upper-bound
+    blocks). Bounded output — n_blocks * BLOCK rows per index row —
+    regardless of posting-list length."""
+
+    def keep(term, df, bmt):
+        sel = np.zeros(bmt.size, dtype=bool)
+        sel[np.argsort(bmt)[-n_blocks:]] = True
+        return sel
+
+    return _decode(index_rows, keep)
+
+
 def _idf_col(n_docs: int):
-    """idf as a codegen expression over the decoded df column — bit-identical
-    to the old broadcast-idf relation (same F.log expression over the same
-    LongType df), with the distinct + Exchange + BroadcastExchange subtree
-    it required gone (each was a scheduled job per serve at ~0.1-0.2 s of
-    fixed latency)."""
+    """idf as a codegen expression over the decoded df column — no
+    distinct + Exchange + BroadcastExchange subtree (each was a scheduled
+    job per serve at ~0.1-0.2 s of fixed latency)."""
     return F.log(
         1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+
+
+def _contrib_col(n_docs: int, avgdl: float, k1: float, b: float):
+    """Per-(term, doc) BM25 contribution over (df, tf, doc_len) columns."""
+    return (
+        _idf_col(n_docs)
+        * (F.col("tf") * (k1 + 1.0))
+        / (
+            F.col("tf")
+            + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
+        )
     )
 
 
@@ -236,15 +257,7 @@ def _score_decoded(
     the decoded df column, join doc_stats, sum codegen contributions."""
     return (
         cand.join(doc_stats_df, "doc_id")
-        .withColumn(
-            "contrib",
-            _idf_col(n_docs)
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-            ),
-        )
+        .withColumn("contrib", _contrib_col(n_docs, avgdl, k1, b))
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
@@ -260,17 +273,17 @@ def blockmax_prune_info(
     b: float = B,
     round_scores: int | None = None,
 ) -> dict | None:
-    """Phase 1 of two-phase block-max serving (VERDICT r4 #2): certify a
-    LOWER bound theta on the true k-th BM25 score by exactly scoring a
-    tiny, bounded sample — the few highest-block-max blocks of each query
-    term (decode_top_blocks). A sampled doc's sampled score sums a SUBSET
-    of its true per-term contributions, so sampled <= true; the k-th best
-    sampled score over >= k distinct docs therefore certifies >= k docs
-    with true score >= theta, i.e. k-th true >= theta.
+    """Block-max candidate generation (a diagnostic; not on the serve path):
+    certify a LOWER bound theta on the true k-th BM25 score by exactly
+    scoring a tiny, bounded sample — the few highest-block-max blocks of
+    each query term (decode_top_blocks). A sampled doc's sampled score sums
+    a SUBSET of its true per-term contributions, so sampled <= true; the
+    k-th best sampled score over >= k distinct docs therefore certifies
+    >= k docs with true score >= theta, i.e. k-th true >= theta.
 
-    decode_candidates then turns theta into a block mask (both rules are
-    individually sound for CANDIDATE-SET semantics — a doc is provably
-    below theta only if every one of its blocks is masked):
+    decode_candidates(prune=) then turns theta into a block mask (both
+    rules are individually sound for CANDIDATE-SET semantics — a doc is
+    provably below theta only if every one of its blocks is masked):
       1. pigeonhole: a doc scoring >= theta-margin has >= (theta-margin)/|Q|
          from at least one of its |Q| query terms, so a block whose upper
          bound ub_j < (theta-margin)/|Q| cannot host that term for any
@@ -279,25 +292,16 @@ def blockmax_prune_info(
          theta-margin means no doc in the block reaches theta-margin at
          all.
     Upper bounds use the dl_min normalizer (global min doc_len — tf
-    component is decreasing in doc_len). bm25_scores_compressed completes
-    the exactness: surviving blocks define a candidate DOC set, and every
-    candidate is re-scored from ALL its postings (left-semi on the full
-    decode), so no kept doc ever has a partial score. Docs pruned
-    everywhere score < theta-margin <= k-th true - margin: they cannot
-    enter the top-k even after rounding (margin adds one rounding unit
-    when ranking on round(score, round_scores)) — the served result is
-    IDENTICAL to the exhaustive decode (pytest rank-identity).
+    component is decreasing in doc_len). margin adds one rounding unit when
+    ranking on round(score, round_scores).
 
-    Since r6 this is the DIAGNOSTIC / candidate-generation API, not the
-    default serve: it costs TWO driver actions (the fused default path,
-    _bm25_scores_blockmax_fused, costs zero and reads its theta from the
-    stored block-max metadata), but its sampled theta + two-rule mask
-    prune hardest, so it remains the measurable candidate-set reducer for
-    shuffle-bound consumers (decode_candidates(prune=...); the >2x
-    decoded-row reduction is pinned by test_blockmax_candidate_generation
-    _prunes_stopword_postings). Returns None when the sample certifies
-    fewer than k docs — tiny collections, where exhaustive decode is
-    already cheap."""
+    The distributed serve does not use this: complete scores need the full
+    decode, so membership pruning cannot beat one exhaustive decode in this
+    row-parallel form (OPTIMIZATION_r06.md §5). It stays as the measurable
+    candidate-set reducer (the >2x decoded-row reduction is pinned by
+    test_blockmax_candidate_generation_prunes_stopword_postings). Costs two
+    driver actions. Returns None when the sample certifies fewer than k
+    docs — tiny collections, where exhaustive decode is already cheap."""
     # per-term (df, max max_tf) × global dl_min — ONE fused collect (the
     # dl bound repeats on each of the few term rows; that's free)
     meta = (
@@ -346,281 +350,37 @@ def blockmax_prune_info(
     }
 
 
-def decode_candidates_ub(
-    index_rows: DataFrame,
-    n_docs: int,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """THE fused two-phase path's single decode (VERDICT r5 #2): every
-    posting row is decoded exactly once and emitted as
-    (term, doc_id, tf, df, block_ub), where block_ub is the BM25 upper
-    bound of the row's block — idf × tf-component of the block-max tf under
-    the dl→0 length normalizer (1 - b), a data-free valid bound (the tf
-    component is decreasing in doc_len), so NO doc_stats aggregate has to
-    run before the decode. Membership pruning then happens NATIVELY
-    downstream: a codegen flag over block_ub aggregated per doc — no second
-    decode pass, no semi-join of the full decoded volume. df rides along so
-    idf is computed inline (_idf_col) with no broadcast subtree."""
-    norm = 1.0 - b
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..index.codec import varbyte_decode
-
-        for pdf in batches:
-            terms, docs, tfs, dfs, ubs = [], [], [], [], []
-            for term, df_, buf, bmt_buf in zip(
-                pdf["term"].values,
-                pdf["df"].values,
-                pdf["postings"].values,
-                pdf["bm_tfs"].values,
-            ):
-                d, t = decode_postings(bytes(buf))
-                if d.size == 0:
-                    continue
-                bmt = varbyte_decode(bytes(bmt_buf)).astype(np.float64)
-                ub = (
-                    bm25_idf(n_docs, int(df_))
-                    * (bmt * (k1 + 1.0))
-                    / (bmt + k1 * norm)
-                )
-                terms.append(np.full(d.size, term, dtype=object))
-                docs.append(d)
-                tfs.append(t)
-                dfs.append(np.full(d.size, int(df_), dtype=np.int64))
-                ubs.append(np.repeat(ub, BLOCK)[: d.size])
-            if terms:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms),
-                        "doc_id": np.concatenate(docs),
-                        "tf": np.concatenate(tfs),
-                        "df": np.concatenate(dfs),
-                        "block_ub": np.concatenate(ubs),
-                    }
-                )
-
-    return index_rows.select("term", "df", "postings", "bm_tfs").mapInPandas(
-        gen, "term string, doc_id long, tf long, df long, block_ub double"
-    )
-
-
 def decode_candidates(
     index_rows: DataFrame, prune: dict | None = None, n_docs: int | None = None
 ) -> DataFrame:
     """index(term, df, postings, ...) -> (term, doc_id, tf, df) via Arrow
-    batches (df = stored TERM-TOTAL, repeated per row, so downstream scoring
-    computes idf inline without a distinct+broadcast subtree).
+    batches — the serve path's single decode.
 
     prune (from blockmax_prune_info; requires n_docs for the local term's
     idf): emit only blocks that can still matter for the top-k — the
-    CANDIDATE-GENERATION pass of the two-phase path. The emitted — and
-    therefore shuffled — rows drop from every posting of every query term
-    to the surviving blocks; bm25_scores_compressed re-scores the surviving
-    DOCS from all their postings, keeping the final top-k identical to the
-    exhaustive decode (see blockmax_prune_info for the soundness argument).
-    Decoding stays one vectorized pass; pruning is a block-granular boolean
-    mask applied before emission."""
-    if prune is not None and n_docs is None:
+    candidate-generation pass (see blockmax_prune_info for the soundness
+    argument). A doc whose blocks are all dropped scores below the top-k;
+    the surviving rows are NOT complete scores."""
+    if prune is None:
+        return _decode(index_rows)
+    if n_docs is None:
         raise ValueError("decode_candidates pruning requires n_docs for idf")
+    k1, b = prune["k1"], prune["b"]
+    cutoff = prune["theta"] - prune["margin"]
+    norm = 1.0 - b + b * prune["dl_min"] / prune["avgdl"]
+    ub_global = prune["ub_global"]
+    ub_sum_all = sum(ub_global.values())
+    n_terms = max(1, len(ub_global))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..index.codec import varbyte_decode
+    def keep(term, df, bmt):
+        # sum of the OTHER query terms' global upper bounds; the local
+        # term's bound is per-block and tighter
+        rest = ub_sum_all - ub_global.get(term, 0.0)
+        bmt = bmt.astype(np.float64)
+        ub = bm25_idf(n_docs, df) * (bmt * (k1 + 1.0)) / (bmt + k1 * norm)
+        return (ub >= cutoff / n_terms) & (ub + rest >= cutoff)
 
-        if prune is not None:
-            k1, b = prune["k1"], prune["b"]
-            cutoff = prune["theta"] - prune["margin"]
-            norm = 1.0 - b + b * prune["dl_min"] / prune["avgdl"]
-            ub_sum_all = sum(prune["ub_global"].values())
-            n_terms = max(1, len(prune["ub_global"]))
-        for pdf in batches:
-            terms, docs, tfs, dfs = [], [], [], []
-            for term, df_, buf, bmt_buf in zip(
-                pdf["term"].values,
-                pdf["df"].values,
-                pdf["postings"].values,
-                pdf["bm_tfs"].values,
-            ):
-                d, t = decode_postings(bytes(buf))
-                if prune is not None and d.size > 0:
-                    # sum of the OTHER query terms' global upper bounds;
-                    # the local term's bound is per-block and tighter
-                    rest = ub_sum_all - prune["ub_global"].get(term, 0.0)
-                    bmt = varbyte_decode(bytes(bmt_buf)).astype(np.float64)
-                    ub = bm25_idf(n_docs, int(df_)) * (
-                        bmt * (k1 + 1.0)
-                    ) / (bmt + k1 * norm)
-                    keep = (ub >= cutoff / n_terms) & (ub + rest >= cutoff)
-                    if not keep.all():
-                        mask = np.repeat(keep, BLOCK)[: d.size]
-                        d, t = d[mask], t[mask]
-                        if d.size == 0:
-                            continue
-                terms.append(np.full(d.size, term, dtype=object))
-                docs.append(d)
-                tfs.append(t)
-                dfs.append(np.full(d.size, int(df_), dtype=np.int64))
-            if terms:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms),
-                        "doc_id": np.concatenate(docs),
-                        "tf": np.concatenate(tfs),
-                        "df": np.concatenate(dfs),
-                    }
-                )
-
-    return index_rows.select("term", "df", "postings", "bm_tfs").mapInPandas(
-        gen, "term string, doc_id long, tf long, df long"
-    )
-
-
-
-def _blockmax_theta_meta(
-    rows: DataFrame,
-    doc_stats_df: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """Theta certificate from the STORED block-max metadata alone — no
-    posting decode, no doc_stats join (the thin phase 1 the graded
-    single-query serve uses; _blockmax_theta's sampled-scores certificate
-    is tighter but decodes every query-term posting a second time).
-
-    Soundness: within one term, each block's max tf is attained by a REAL
-    doc, and those argmax docs are DISTINCT across blocks (blocks partition
-    the posting; segments partition the doc space). So the k largest
-    block-max tfs of a term certify k distinct docs whose true score is
-    >= idf_t * comp(kth_bmt, dl_max) — comp is increasing in tf and
-    decreasing in doc_len, and every doc's length is <= the global dl_max.
-    theta = max over terms with >= k blocks. Returns 1 row (cnt, theta)
-    with cnt = k when some term armed (interface-compatible with the keep
-    filter); theta null (keep-all) when no term has k blocks or doc_stats
-    is empty. This is the classic impact-ordered threshold seeding of
-    block-max WAND systems, expressed over the stored metadata."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..index.codec import varbyte_decode
-
-        for pdf in batches:
-            terms, dfs, nbs, tops = [], [], [], []
-            for term, df_, bmt_buf in zip(
-                pdf["term"].values, pdf["df"].values, pdf["bm_tfs"].values
-            ):
-                bmt = varbyte_decode(bytes(bmt_buf)).astype(np.int64)
-                if bmt.size == 0:
-                    continue
-                terms.append(term)
-                dfs.append(int(df_))
-                nbs.append(int(bmt.size))
-                t = np.sort(bmt)
-                tops.append(t[-min(k, t.size):][::-1].tolist())
-            if terms:
-                yield pd.DataFrame(
-                    {"term": terms, "df": dfs, "nb": nbs, "tops": tops}
-                )
-
-    meta = rows.select("term", "df", "bm_tfs").mapInPandas(
-        gen, "term string, df long, nb long, tops array<long>"
-    )
-    dlmax = doc_stats_df.agg(F.max("doc_len").cast("double").alias("dl_max"))
-    per_term = (
-        meta.groupBy("term")
-        .agg(
-            F.first("df").alias("df"),
-            F.sum("nb").alias("nb"),
-            F.sort_array(
-                F.flatten(F.collect_list("tops")), asc=False
-            ).alias("alltops"),
-        )
-        .crossJoin(F.broadcast(dlmax))
-    )
-    kth = F.element_at("alltops", k).cast("double")
-    theta_t = F.when(
-        (F.col("nb") >= k) & F.col("dl_max").isNotNull(),
-        _idf_col(n_docs)
-        * (kth * (k1 + 1.0))
-        / (kth + k1 * (1.0 - b + b * F.col("dl_max") / F.lit(float(avgdl)))),
-    )
-    return per_term.agg(
-        F.max(F.when(theta_t.isNotNull(), F.lit(k)).otherwise(0)).alias(
-            "cnt"
-        ),
-        F.max(theta_t).alias("theta"),
-    )
-
-
-def _bm25_scores_blockmax_fused(
-    rows: DataFrame,
-    doc_stats_df: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    n_query_terms: int,
-    k1: float,
-    b: float,
-    margin: float,
-) -> DataFrame:
-    """(doc_id, score — UNROUNDED, complete over ALL the doc's postings) for
-    every doc with at least one surviving block — the two-phase block-max
-    serve as ONE driver action with ONE decode pass.
-
-    Exactness: scores are summed from the FULL decode (never partial), and
-    a doc is dropped only when every one of its blocks fails the pigeonhole
-    mask — block_ub < (theta-margin)/n_query_terms means the block cannot
-    supply its 1/|Q| share of a theta-reaching score, so a fully-masked doc
-    provably scores < theta-margin <= true k-th - margin and cannot enter
-    the top-k even after rounding (margin carries one rounding unit in
-    rounded-rank mode). n_query_terms is the count of DISTINCT query
-    tokens, known at construction: it is >= the number of terms present in
-    the index, and a larger divisor only makes the mask keep MORE blocks —
-    sound for free, with no per-term meta aggregate. The r5 total-bound
-    rule (ub_j + rest < theta) is intentionally NOT replicated here: its
-    rest/ub_sum inputs cost two more aggregate subtrees per serve, and the
-    pigeonhole rule is the one that drops stopword blocks (CLAUDE.md r5
-    lesson); the full two-rule mask remains available through the
-    blockmax_prune_info/decode_candidates(prune=) diagnostic pair. When
-    phase 1 certifies fewer than k docs (cnt < k) the flag degrades to
-    all-true: the same single-decode plan serves the exhaustive fallback."""
-    th = _blockmax_theta_meta(rows, doc_stats_df, n_docs, avgdl, k, k1, b)
-    cand = decode_candidates_ub(rows, n_docs, k1, b)
-    # The theta certificate joins AFTER the per-doc aggregate: a doc's
-    # pigeonhole survival is max(block_ub) >= (theta-margin)/|Q|, and
-    # max(block_ub) is just one more agg column — so the heavy stage
-    # (decode + doc_stats join + partial aggregation) does not depend on
-    # the theta broadcast, and Spark executes the phase-1 subtree
-    # CONCURRENTLY with it (broadcast futures start at query submission).
-    # Wall-clock cost of phase 1 ~ max(0, theta_time - main_stage_time)
-    # instead of theta_time + main_time.
-    cutoff = F.col("theta") - F.lit(margin)
-    keep = (
-        F.col("theta").isNull()
-        | (F.col("cnt") < k)
-        | (F.col("ub_max") >= cutoff / F.lit(float(max(1, n_query_terms))))
-    )
-    return (
-        cand.join(doc_stats_df, "doc_id")
-        .withColumn(
-            "contrib",
-            _idf_col(n_docs)
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
-            F.max("block_ub").alias("ub_max"),
-        )
-        .crossJoin(F.broadcast(th))
-        .filter(keep)
-        .select("doc_id", "score")
-    )
+    return _decode(index_rows, keep)
 
 
 def bm25_scores_compressed(
@@ -634,13 +394,13 @@ def bm25_scores_compressed(
     b: float = B,
     term_buckets: int = 32,
     candidate_docs: DataFrame | None = None,
-    prune: dict | None = None,
 ) -> DataFrame:
     """Per-candidate-doc BM25 scores (doc_id, score — UNROUNDED) from the
     compressed index: prune to query terms (term + term_bucket predicate
-    pushdown), decode, score natively. The scores-level entry point —
-    composable rankers (proximity boost, re-scoring) consume this; plain
-    top-k serving wraps it (bm25_topk_compressed).
+    pushdown, folded to literals — no job), ONE decode, score natively.
+    The scores-level entry point — composable rankers (proximity boost,
+    re-scoring) consume this; plain top-k serving wraps it
+    (bm25_topk_compressed).
 
     `term_buckets` MUST match the modulus the index was written with
     (write_index param, recorded in its index_meta sidecar — see
@@ -651,36 +411,10 @@ def bm25_scores_compressed(
     statistics — df/idf stay global, read from the stored index rows) via
     a left-semi on the decoded candidates, so the per-doc aggregate only
     sees allowed docs. This is the filter hook for phrase/facet/any
-    filtered ranking.
-
-    prune (blockmax_prune_info output): two-phase candidate generation —
-    the pruned decode's surviving blocks define a candidate DOC set, and
-    candidates are re-scored from ALL their postings (left-semi on the
-    full decode), so every returned score is complete and the set provably
-    contains the true top-k. Docs absent from the result score below the
-    certified threshold — ONLY sound for plain top-k consumption.
-    Composable rankers that re-weight scores (proximity boost) or
-    post-filter (candidate_docs decided top-k membership) must leave it
-    None."""
+    filtered ranking."""
     from ..index.bucketing import prune_terms
 
-    rows = prune_terms(index_df, query_tokens, term_buckets)
-    cand = decode_candidates(rows)
-    if prune is not None:
-        # candidate generation: docs with >= 1 surviving block. BROADCAST
-        # the survivor set (<= candidate-docs-sized by construction —
-        # VERDICT r5 #2): without the hint AQE has no stats here and the
-        # full decoded stream would shuffle into a sort-merge semi-join,
-        # exactly the volume pruning exists to avoid. (The DEFAULT serving
-        # path no longer takes this branch at all — it computes the flag in
-        # the single decode pass, _bm25_scores_blockmax_fused; this prune=
-        # form stays as the measurable candidate-generation diagnostic.)
-        survivors = (
-            decode_candidates(rows, prune=prune, n_docs=n_docs)
-            .select("doc_id")
-            .distinct()
-        )
-        cand = cand.join(F.broadcast(survivors), "doc_id", "left_semi")
+    cand = decode_candidates(prune_terms(index_df, query_tokens, term_buckets))
     if candidate_docs is not None:
         cand = cand.join(candidate_docs, "doc_id", "left_semi")
     return _score_decoded(cand, doc_stats_df, n_docs, avgdl, k1, b)
@@ -699,56 +433,28 @@ def bm25_topk_compressed(
     term_buckets: int = 32,
     candidate_docs: DataFrame | None = None,
     round_scores: int | None = None,
-    blockmax: bool = True,
 ) -> DataFrame:
     """Top-k over bm25_scores_compressed. round_scores: round to this many
     decimals BEFORE ranking (rank ties on the rounded value — pass whatever
     the comparison oracle rounds to).
 
-    blockmax (default ON — this IS the default distributed serving path,
-    VERDICT r4 #2): two-phase block-max pruning, FULLY PLAN-FUSED since r6
-    (VERDICT r5 #1/#2): phase 1 (a theta lower-bound certificate read from
-    the stored block-max METADATA, _blockmax_theta_meta — no posting
-    decode) is a single broadcast subtree of the one final query, joined
-    AFTER the per-doc aggregate so it executes concurrently with the heavy
-    stage, and phase 2 is a single decode pass whose per-block upper bound
-    feeds a native pigeonhole survival filter — constructing this
-    DataFrame runs ZERO driver actions (the old path collected twice
-    before the serve job), and the result is identical to the exhaustive
-    decode (randomized-property-tested). Pruning degrades to a keep-all
-    filter when phase 1 certifies fewer than k docs, and is never applied
-    when candidate_docs filters membership (the k-th FILTERED score can be
-    far below the unfiltered bound)."""
-    if blockmax and candidate_docs is None:
-        from ..index.bucketing import prune_terms
-
-        margin = 1e-9 + (
-            10.0 ** (-round_scores) if round_scores is not None else 0.0
-        )
-        scored = _bm25_scores_blockmax_fused(
-            prune_terms(index_df, query_tokens, term_buckets),
-            doc_stats_df,
-            n_docs,
-            avgdl,
-            k,
-            len(set(query_tokens)),
-            k1,
-            b,
-            margin,
-        )
-    else:
-        scored = bm25_scores_compressed(
-            spark,
-            index_df,
-            doc_stats_df,
-            n_docs,
-            avgdl,
-            query_tokens,
-            k1=k1,
-            b=b,
-            term_buckets=term_buckets,
-            candidate_docs=candidate_docs,
-        )
+    One plan, and constructing it runs no driver action: bucket-pruned
+    scan, one decode, the doc_stats join, the codegen BM25 sum, top-k. A
+    sub-second query is bound by its Spark stage chain, not its data, so
+    this exhaustive decode beats any distributed block-max pruning that
+    needs a theta subtree (OPTIMIZATION_r06.md §5)."""
+    scored = bm25_scores_compressed(
+        spark,
+        index_df,
+        doc_stats_df,
+        n_docs,
+        avgdl,
+        query_tokens,
+        k1=k1,
+        b=b,
+        term_buckets=term_buckets,
+        candidate_docs=candidate_docs,
+    )
     if round_scores is not None:
         scored = scored.select(
             "doc_id", F.round("score", round_scores).alias("score")
@@ -814,7 +520,6 @@ def bm25_topk_batch_compressed(
     b: float = B,
     term_buckets: int = 32,
     round_scores: int | None = None,
-    blockmax: bool = True,
 ) -> DataFrame:
     """Whole-query-SET serving from the stored compressed index →
     (query_id, rank, doc_id, score): ONE bucket-pruned index scan and ONE
@@ -826,107 +531,25 @@ def bm25_topk_batch_compressed(
     are the stored TERM-TOTAL values, identical for every query in the
     batch. round_scores: round BEFORE ranking (the decode path's float
     summation order differs from the corpus-side oracle's, so ranking must
-    tie on the rounded value both sides).
-
-    blockmax (default ON — VERDICT r5 #3): the same fused two-phase
-    pruning as the single-query path, amortized across the query set. ONE
-    phase-1 sample over the union terms certifies a per-QUERY theta_q (the
-    k-th best sampled (query, doc) score), the broadcast (query_id, term)
-    relation carries theta_q and the per-query distinct-token count n_q
-    (a construction-time constant >= the terms present, so the pigeonhole
-    divisor is sound), and the single decode's block_ub column feeds a
-    native per-(query, doc) survival flag — exact (scores sum the full
-    decode; a (query, doc) is dropped only when every block fails the
-    pigeonhole mask for that query), one driver action, no extra decode.
-    Queries whose sample certifies < k docs degrade to all-true flags
-    individually."""
+    tie on the rounded value both sides)."""
     from pyspark.sql import Window
 
     from ..index.bucketing import prune_terms
 
     union_terms = sorted({t for toks in queries.values() for t in toks})
     rows = prune_terms(index_df, union_terms, term_buckets)
-    pairs = sorted(
-        {(qid, t) for qid, toks in queries.items() for t in set(toks)}
-    )
-    n_q = {qid: max(1, len(set(toks))) for qid, toks in queries.items()}
     qdf = spark.createDataFrame(
-        [(qid, t, n_q[qid]) for qid, t in pairs],
-        "query_id long, term string, n_q long",
+        sorted({(qid, t) for qid, toks in queries.items() for t in toks}),
+        "query_id long, term string",
     )
-    contrib = (
-        _idf_col(n_docs)
-        * (F.col("tf") * (k1 + 1.0))
-        / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-        )
+    scored = (
+        decode_candidates(rows)
+        .join(doc_stats_df, "doc_id")
+        .withColumn("contrib", _contrib_col(n_docs, avgdl, k1, b))
+        .join(F.broadcast(qdf), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("contrib").alias("score"))
     )
-    if blockmax:
-        nb = max(1, -(-2 * k // BLOCK) + 1)
-        sample = decode_top_blocks(rows, nb)
-        s_scored = (
-            sample.join(doc_stats_df, "doc_id")
-            .withColumn("contrib", contrib)
-            .join(F.broadcast(qdf.select("query_id", "term")), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
-        # per-query k-th sampled score via one sorted collect_list per
-        # query (bounded sample) — replaces the window-rank + filter +
-        # re-aggregate chain, same cnt/theta values
-        th = (
-            s_scored.groupBy("query_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list("score"), asc=False
-                ).alias("arr")
-            )
-            .select(
-                "query_id",
-                F.size("arr").alias("cnt"),
-                F.when(
-                    F.size("arr") >= k, F.element_at("arr", k)
-                ).alias("theta"),
-            )
-        )
-        margin = 1e-9 + (
-            10.0 ** (-round_scores) if round_scores is not None else 0.0
-        )
-        # per-(query, doc) survival = max(block_ub) vs theta_q, decided
-        # AFTER the aggregate (same concurrency rationale as the
-        # single-query path: the heavy decode+join+agg stage never waits
-        # on the theta broadcast)
-        cutoff = F.col("theta") - F.lit(margin)
-        keep = (
-            F.col("theta").isNull()
-            | (F.col("cnt") < k)
-            | (F.col("ub_max") >= cutoff / F.col("n_q"))
-        )
-        scored = (
-            decode_candidates_ub(rows, n_docs, k1, b)
-            .join(doc_stats_df, "doc_id")
-            .withColumn("contrib", contrib)
-            .join(F.broadcast(qdf), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.sum("contrib").alias("score"),
-                F.max("block_ub").alias("ub_max"),
-                F.first("n_q").alias("n_q"),
-            )
-            .join(F.broadcast(th), "query_id", "left")
-            .filter(keep)
-            .select("query_id", "doc_id", "score")
-        )
-    else:
-        scored = (
-            decode_candidates(rows)
-            .join(doc_stats_df, "doc_id")
-            .withColumn("contrib", contrib)
-            .join(F.broadcast(qdf.select("query_id", "term")), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
     if round_scores is not None:
         scored = scored.select(
             "query_id", "doc_id", F.round("score", round_scores).alias("score")

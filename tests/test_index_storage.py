@@ -141,3 +141,72 @@ def test_corrupt_index_meta_raises_not_falls_back(spark, tmp_path):
 
     # absent path = legacy layout -> documented fallback
     assert read_index_meta(spark, str(tmp_path / "nope"))["term_buckets"] == 32
+
+
+def _folded_buckets(df):
+    """Bucket literals in the scan's PartitionFilters of a pruned index."""
+    import re
+
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert pf and "term_bucket" in pf.group(1), plan
+    # IN (...) folds to INSET past the optimizer's conversion threshold and
+    # to = for a single distinct bucket
+    m = re.search(
+        r"term_bucket#\d+ (?:IN \(([\d, ]*)\)|INSET ([\d, ]+)|= (\d+))",
+        pf.group(1),
+    )
+    assert m, pf.group(1)
+    return {int(v) for v in next(g for g in m.groups() if g).split(",")}
+
+
+@pytest.mark.parametrize("term_buckets", [1, 16, 32])
+def test_folded_bucket_filter_matches_writer_hash(spark, tmp_path, term_buckets):
+    """prune_terms folds the writer's bucket expression into the scan
+    filter: for random terms, the folded literals must equal
+    bucket_values_for_terms and the term_bucket values write_index stored,
+    term by term and for the whole set."""
+    import random
+    import string
+
+    from information_retrieval_project_spark.index.bucketing import (
+        bucket_values_for_terms,
+        prune_terms,
+    )
+    from information_retrieval_project_spark.index.build import (
+        build_postings,
+        collection_stats,
+        doc_stats,
+    )
+
+    rng = random.Random(term_buckets)
+    alphabet = string.ascii_letters + string.digits + "_.-éß中"
+    terms = sorted(
+        {"".join(rng.choices(alphabet, k=rng.randint(1, 12))) for _ in range(12)}
+    )
+    tf = spark.createDataFrame(
+        [(d, t, 1 + d % 3) for d in range(5) for t in terms],
+        "doc_id long, term string, tf long",
+    )
+    ds = doc_stats(tf)
+    out = str(tmp_path / "idx")
+    write_index(
+        build_postings(tf, BuildConfig(hot_df_threshold=1000)),
+        ds,
+        collection_stats(ds),
+        out,
+        term_buckets=term_buckets,
+    )
+    idx, _, _ = read_index(spark, out)
+    stored = {
+        r["term"]: r["term_bucket"]
+        for r in idx.select("term", "term_bucket").distinct().collect()
+    }
+    assert sorted(stored) == terms
+    for t in terms:
+        assert _folded_buckets(prune_terms(idx, [t], term_buckets)) == {stored[t]}
+    want = set(stored.values())
+    assert _folded_buckets(prune_terms(idx, terms, term_buckets)) == want
+    assert set(bucket_values_for_terms(spark, terms, term_buckets)) == want
