@@ -10,13 +10,15 @@ refit, data_manager.py:122-123, with a build-once index):
     → doc_stats  = groupBy(doc_id).sum(tf)           [hash agg, AQE coalesce]
     → df per term= groupBy(term).count()             [partial+final agg —
       skew-safe: map-side partial bounds hot-term rows at one per task]
-    → SALTED posting encode: hot terms (df > hot_df_threshold) are split into
-      pmod(xxhash64(doc_id), n_salts) sub-groups so no single Arrow group
-      exceeds memory; each sub-group encodes a sorted delta+varbyte run;
-      a second per-term merge pass combines sub-runs (merge_sorted_runs).
-      Cold terms take the 1-salt path and skip nothing. This is the explicit
+    → SALTED posting build: hot terms (df > hot_df_threshold) are split into
+      pmod(xxhash64(doc_id), n_salts) sub-groups so no single group exceeds
+      memory; each sub-group is a JVM-sorted (doc_id, tf) run, and a second
+      per-term JVM pass (flatten + array_sort) combines the sub-runs. Cold
+      terms take the 1-salt path and skip nothing. This is the explicit
       skew handling required by BASELINE.json north_rule (AQE skew-join covers
       joins, not groupBy hot keys — SURVEY.md §4.2).
+    → one arrow_udf encodes every posting list of an Arrow batch at once
+      (codec.encode_posting_lists: delta+varbyte, block-max metadata)
     → index(term, df, postings:binary, bm_docs:binary, bm_tfs:binary)
     → collection_stats(n_docs, avgdl, total_terms)
 
@@ -30,10 +32,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa  # module scope: arrow_udf resolves its string annotations here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .codec import block_max_meta, encode_postings, varbyte_encode
+from .codec import encode_posting_lists
 
 TF_SCHEMA = "doc_id long, term string, tf long"
 
@@ -172,23 +175,20 @@ class BuildConfig:
 
 
 def _encode_pairs_udf():
-    """Series→Series Arrow UDF: (sorted doc_id array, tf array) → struct of
-    encoded postings + block-max metadata. Per-term work is pure numpy —
-    no per-group pandas machinery (applyInPandas costs ~ms per group; at
-    millions of terms that dominates the build)."""
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: array<struct<doc_id, tf>> sorted by doc_id → struct of
+    encoded postings + block-max metadata. The list offsets and flattened
+    values go straight to numpy and the whole batch is encoded in one
+    encode_posting_lists call: no pandas Series of per-term arrays and no
+    per-term Python loop (that loop was most of the build's encode stage)."""
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("postings binary, bm_docs binary, bm_tfs binary")
-    def encode(doc_arrs: pd.Series, tf_arrs: pd.Series) -> pd.DataFrame:
-        post, bmd, bmt = [], [], []
-        for d, t in zip(doc_arrs.values, tf_arrs.values):
-            d = np.asarray(d, dtype=np.int64)
-            t = np.asarray(t, dtype=np.int64)
-            bm_d, bm_t = block_max_meta(d, t)
-            post.append(encode_postings(d, t))
-            bmd.append(varbyte_encode(bm_d.astype(np.uint64) + np.uint64(1 << 63)))
-            bmt.append(varbyte_encode(bm_t.astype(np.uint64)))
-        return pd.DataFrame({"postings": post, "bm_docs": bmd, "bm_tfs": bmt})
+    @arrow_udf("postings binary, bm_docs binary, bm_tfs binary")
+    def encode(pairs: pa.Array) -> pa.Array:
+        doc_ids, tfs = pairs.flatten().flatten()
+        return pa.StructArray.from_arrays(
+            encode_posting_lists(pairs.offsets, doc_ids, tfs),
+            names=["postings", "bm_docs", "bm_tfs"],
+        )
 
     return encode
 
@@ -270,10 +270,9 @@ def build_postings(
             F.col("salt").alias("segment"),
             F.size("pairs").alias("seg_df"),
             F.array_max(F.col("pairs").getField("tf")).alias("max_tf"),
-            F.col("pairs").getField("doc_id").alias("_docs"),
-            F.col("pairs").getField("tf").alias("_tfs"),
+            "pairs",
         ).withColumn("df", F.sum("seg_df").over(w))
-        return seg.withColumn("_enc", enc(F.col("_docs"), F.col("_tfs"))).select(
+        return seg.withColumn("_enc", enc(F.col("pairs"))).select(
             "term",
             "segment",
             "df",
@@ -289,11 +288,10 @@ def build_postings(
             "term",
             F.size("pairs").alias("df"),
             F.array_max(F.col("pairs").getField("tf")).alias("max_tf"),
-            F.col("pairs").getField("doc_id").alias("_docs"),
-            F.col("pairs").getField("tf").alias("_tfs"),
+            "pairs",
         )
     )
-    return merged.withColumn("_enc", enc(F.col("_docs"), F.col("_tfs"))).select(
+    return merged.withColumn("_enc", enc(F.col("pairs"))).select(
         "term",
         "df",
         "max_tf",

@@ -7,9 +7,11 @@ classic IR posting compression (Manning/Raghavan/Schütze ch. 5 — public
 algorithm); the reference has no index at all (it refits TF-IDF per query,
 data_manager.py:122-123), so this is the engine's scale substitute.
 
-Both encode and decode are vectorized over the whole array (no per-element
-Python), so they run fast inside Arrow batches per input_hint's
-"no per-row Python" rule.
+encode_postings / decode_postings work on one posting list and are the
+reference format. encode_posting_lists writes the same bytes for every list
+of an Arrow batch in one set of numpy passes, so the build and the merge
+never loop over terms in Python (a per-term loop of the per-list encoder
+was most of a build's encode stage).
 
 Block-max metadata for WAND: postings are chunked into BLOCK docs; per block
 we keep the max tf and max doc_id so the scorer can skip whole blocks that
@@ -19,35 +21,48 @@ cannot reach the current top-k threshold (SURVEY.md §4.2).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK = 128  # docs per block for block-max metadata
+
+
+def _varbyte_lens(v: np.ndarray) -> np.ndarray:
+    """Bytes per uint64 value: ceil(bitlen/7), min 1 — computed by comparing
+    against the 9 fixed 2^(7L) thresholds (vectorized, float-safe)."""
+    lens = np.ones(v.shape, dtype=np.int64)
+    for L in range(1, 10):
+        lens += v >= (np.uint64(1) << np.uint64(7 * L))
+    return lens
+
+
+def _varbyte_put(out: np.ndarray, v: np.ndarray, lens: np.ndarray, ends: np.ndarray) -> None:
+    """Write each value's 7-bit groups into out, ending just before ends.
+
+    Byte j (0-based from the end) of a value, out[end-1-j], holds bits
+    j*7..j*7+6; the continuation bit is set on all but the last byte."""
+    for j in range(int(lens.max(initial=0))):
+        mask = lens > j
+        b = ((v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
+        if j > 0:
+            b |= np.uint8(0x80)
+        out[ends[mask] - 1 - j] = b
+
+
+def _excl_cumsum(x: np.ndarray) -> np.ndarray:
+    """[0, x0, x0+x1, ...]: offsets of consecutive runs of lengths x."""
+    out = np.zeros(x.size + 1, dtype=np.int64)
+    np.cumsum(x, out=out[1:])
+    return out
 
 
 def varbyte_encode(values: np.ndarray) -> bytes:
     """Encode a uint64 array to varbyte. Vectorized: compute per-value byte
     lengths, scatter 7-bit groups into a flat output buffer."""
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # bytes needed per value: ceil(bitlen/7), min 1 — computed by comparing
-    # against the 9 fixed 2^(7L) thresholds (vectorized, float-safe)
-    lens = np.ones(v.shape, dtype=np.int64)
-    for L in range(1, 10):
-        lens += (v >= (np.uint64(1) << np.uint64(7 * L))).astype(np.int64)
-    total = int(lens.sum())
-    out = np.empty(total, dtype=np.uint8)
+    lens = _varbyte_lens(v)
     ends = np.cumsum(lens)  # position AFTER each value's last byte
-    # For byte j (0-based from the end) of each value: out[end-1-j] holds bits
-    # j*7..j*7+6; continuation bit set on all but the last byte (j == 0).
-    maxlen = int(lens.max())
-    for j in range(maxlen):
-        mask = lens > j
-        idx = ends[mask] - 1 - j
-        chunk = (v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)
-        b = chunk.astype(np.uint8)
-        if j > 0:
-            b |= np.uint8(0x80)
-        out[idx] = b
+    out = np.empty(int(ends[-1]) if ends.size else 0, dtype=np.uint8)
+    _varbyte_put(out, v, lens, ends)
     return out.tobytes()
 
 
@@ -118,6 +133,70 @@ def block_max_meta(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[np.ndarray, np
         d.reshape(nblocks, BLOCK).max(axis=1),
         t.reshape(nblocks, BLOCK).max(axis=1),
     )
+
+
+def _binary_array(offsets: np.ndarray, data: np.ndarray) -> pa.BinaryArray:
+    # pa.array raises if a batch's bytes overflow binary's int32 offsets
+    return pa.Array.from_buffers(
+        pa.binary(),
+        offsets.size - 1,
+        [None, pa.array(offsets, pa.int32()).buffers()[1], pa.py_buffer(data)],
+    )
+
+
+def encode_posting_lists(
+    offsets: np.ndarray | pa.Array, doc_ids: np.ndarray | pa.Array, tfs: np.ndarray | pa.Array
+) -> tuple[pa.BinaryArray, pa.BinaryArray, pa.BinaryArray]:
+    """Encode many posting lists at once → (postings, bm_docs, bm_tfs).
+
+    List i is doc_ids/tfs[offsets[i] - offsets[0] : offsets[i+1] - offsets[0]]
+    (an Arrow ListArray's .offsets and .flatten(), which keep a slice's
+    offsets but drop the values before it). Each list obeys encode_postings'
+    precondition (doc ids sorted ascending and unique). Element i of the
+    outputs equals encode_postings(d, t) and the varbyte-encoded
+    block_max_meta(d, t) of list i byte for byte, empty lists included; the
+    work is one set of numpy passes over the whole batch.
+    """
+    off = np.asarray(offsets, dtype=np.int64)
+    off = off - off[0]
+    n = np.diff(off)
+    starts = off[:-1]
+    u = np.asarray(doc_ids, dtype=np.int64).astype(np.uint64) + np.uint64(1 << 63)
+    t = np.asarray(tfs, dtype=np.int64).astype(np.uint64)
+
+    # postings: [n][delta bytes][varbyte deltas][varbyte tfs], or [0] if empty
+    deltas = u.copy()
+    deltas[1:] -= u[:-1]
+    first = starts[n > 0]
+    deltas[first] = u[first]  # each list's first value is absolute
+    ld, lt = _varbyte_lens(deltas), _varbyte_lens(t)
+    cd, ct = _excl_cumsum(ld), _excl_cumsum(lt)
+    dlen = cd[off[1:]] - cd[starts]
+    tlen = ct[off[1:]] - ct[starts]
+    poff = _excl_cumsum(np.where(n > 0, 16 + dlen + tlen, 8))
+    buf = np.zeros(int(poff[-1]), dtype=np.uint8)  # an empty list's n=0 stays 0
+    ne = np.flatnonzero(n)
+    header = np.stack([n[ne], dlen[ne]], axis=1).view(np.uint8)
+    buf[poff[ne, None] + np.arange(16)] = header
+    _varbyte_put(buf, deltas, ld, cd[1:] + np.repeat(poff[:-1] + 16 - cd[starts], n))
+    _varbyte_put(buf, t, lt, ct[1:] + np.repeat(poff[:-1] + 16 + dlen - ct[starts], n))
+
+    # block-max metadata: a block's max doc id is its last (lists are sorted)
+    nb = (n + BLOCK - 1) // BLOCK
+    boff = _excl_cumsum(nb)
+    bstart = np.repeat(starts - BLOCK * boff[:-1], nb) + BLOCK * np.arange(boff[-1])
+    bend = np.minimum(bstart + BLOCK, np.repeat(off[1:], nb))
+    bm_d = u[bend - 1]
+    bm_t = np.maximum.reduceat(t, bstart) if bstart.size else np.empty(0, np.uint64)
+
+    def varbyte_lists(v: np.ndarray) -> pa.BinaryArray:
+        lens = _varbyte_lens(v)
+        c = _excl_cumsum(lens)
+        out = np.empty(int(c[-1]), dtype=np.uint8)
+        _varbyte_put(out, v, lens, c[1:])
+        return _binary_array(c[boff], out)
+
+    return _binary_array(poff, buf), varbyte_lists(bm_d), varbyte_lists(bm_t)
 
 
 def merge_sorted_runs(runs: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:

@@ -10,8 +10,9 @@ way the index is bucketed, so with a bucketed layout it's co-located), then
 - terms touched only by ONE side pass through BYTE-IDENTICAL — no posting
   decode at all (the overwhelming majority for a small delta);
 - terms present in both sides decode both postings, merge the sorted runs
-  (codec.merge_sorted_runs — sums tf on duplicate doc_ids), and re-encode
-  with fresh block-max metadata in one Arrow pass.
+  (codec.merge_sorted_runs — sums tf on duplicate doc_ids), and the batch
+  is re-encoded with fresh block-max metadata in one
+  codec.encode_posting_lists call.
 
 Append-only assumption: delta doc_ids are NEW documents. A re-ingested
 (doc_id, term) pair would have its tf SUMMED (merge_sorted_runs semantics) —
@@ -25,46 +26,41 @@ to build(A ∪ B) — postings, block-max arrays, df, max_tf.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa  # module scope: arrow_udf resolves its string annotations here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .codec import (
-    block_max_meta,
-    decode_postings,
-    encode_postings,
-    merge_sorted_runs,
-    varbyte_encode,
-)
+from .codec import decode_postings, encode_posting_lists, merge_sorted_runs
 
 _IDX_COLS = ["df", "max_tf", "postings", "bm_docs", "bm_tfs"]
+_IDX_TYPE = "df long, max_tf long, postings binary, bm_docs binary, bm_tfs binary"
+
+
+def _encode_runs(runs: list[tuple[np.ndarray, np.ndarray]]) -> pa.StructArray:
+    """Index columns for decoded (doc_ids, tfs) runs, one per term, all
+    encoded in one encode_posting_lists call."""
+    df = np.array([d.size for d, _ in runs], dtype=np.int64)
+    max_tf = [int(t.max()) if t.size else 0 for _, t in runs]
+    off = np.zeros(len(runs) + 1, dtype=np.int64)
+    np.cumsum(df, out=off[1:])
+    doc_ids = np.concatenate([d for d, _ in runs] or [np.empty(0, np.int64)])
+    tfs = np.concatenate([t for _, t in runs] or [np.empty(0, np.int64)])
+    return pa.StructArray.from_arrays(
+        [pa.array(df), pa.array(max_tf, pa.int64()),
+         *encode_posting_lists(off, doc_ids, tfs)],
+        names=_IDX_COLS,
+    )
 
 
 def _merge_pair_udf():
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("df long, max_tf long, postings binary, bm_docs binary, bm_tfs binary")
-    def merge_pair(b_post: pd.Series, d_post: pd.Series) -> pd.DataFrame:
-        dfs, maxtfs, posts, bmds, bmts = [], [], [], [], []
-        for pb, pdl in zip(b_post.values, d_post.values):
-            d1, t1 = decode_postings(bytes(pb))
-            d2, t2 = decode_postings(bytes(pdl))
-            dm, tm = merge_sorted_runs([(d1, t1), (d2, t2)])
-            bm_d, bm_t = block_max_meta(dm, tm)
-            dfs.append(int(dm.size))
-            maxtfs.append(int(tm.max()) if tm.size else 0)
-            posts.append(encode_postings(dm, tm))
-            bmds.append(varbyte_encode(bm_d.astype(np.uint64) + np.uint64(1 << 63)))
-            bmts.append(varbyte_encode(bm_t.astype(np.uint64)))
-        return pd.DataFrame(
-            {
-                "df": dfs,
-                "max_tf": maxtfs,
-                "postings": posts,
-                "bm_docs": bmds,
-                "bm_tfs": bmts,
-            }
-        )
+    @arrow_udf(_IDX_TYPE)
+    def merge_pair(b_post: pa.Array, d_post: pa.Array) -> pa.Array:
+        return _encode_runs([
+            merge_sorted_runs([decode_postings(pb), decode_postings(pdl)])
+            for pb, pdl in zip(b_post.to_pylist(), d_post.to_pylist())
+        ])
 
     return merge_pair
 
@@ -152,30 +148,16 @@ def merge_index_colocated(
 
 
 def _delete_udf():
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("df long, max_tf long, postings binary, bm_docs binary, bm_tfs binary")
-    def drop_docs(post: pd.Series, victims: pd.Series) -> pd.DataFrame:
-        dfs, maxtfs, posts, bmds, bmts = [], [], [], [], []
-        for pb, vs in zip(post.values, victims.values):
-            d, t = decode_postings(bytes(pb))
+    @arrow_udf(_IDX_TYPE)
+    def drop_docs(post: pa.Array, victims: pa.Array) -> pa.Array:
+        runs = []
+        for pb, vs in zip(post.to_pylist(), victims.to_pylist()):
+            d, t = decode_postings(pb)
             keep = ~np.isin(d, np.asarray(vs, dtype=np.int64))
-            d, t = d[keep], t[keep]
-            bm_d, bm_t = block_max_meta(d, t)
-            dfs.append(int(d.size))
-            maxtfs.append(int(t.max()) if t.size else 0)
-            posts.append(encode_postings(d, t))
-            bmds.append(varbyte_encode(bm_d.astype(np.uint64) + np.uint64(1 << 63)))
-            bmts.append(varbyte_encode(bm_t.astype(np.uint64)))
-        return pd.DataFrame(
-            {
-                "df": dfs,
-                "max_tf": maxtfs,
-                "postings": posts,
-                "bm_docs": bmds,
-                "bm_tfs": bmts,
-            }
-        )
+            runs.append((d[keep], t[keep]))
+        return _encode_runs(runs)
 
     return drop_docs
 

@@ -46,12 +46,11 @@ def build_sharded_index(tf_df: DataFrame, n_shards: int = 32) -> DataFrame:
             "shard",
             "term",
             F.size("pairs").alias("df"),
-            F.col("pairs").getField("doc_id").alias("_docs"),
-            F.col("pairs").getField("tf").alias("_tfs"),
+            "pairs",
         )
     )
     enc = _encode_pairs_udf()
-    return merged.withColumn("_enc", enc(F.col("_docs"), F.col("_tfs"))).select(
+    return merged.withColumn("_enc", enc(F.col("pairs"))).select(
         "shard",
         "term",
         "df",

@@ -1,6 +1,7 @@
 """Property tests for the delta+varbyte posting codec (SURVEY.md §5.2.3)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -8,6 +9,7 @@ from hypothesis import strategies as st
 from information_retrieval_project_spark.index.codec import (
     block_max_meta,
     decode_postings,
+    encode_posting_lists,
     encode_postings,
     merge_sorted_runs,
     varbyte_decode,
@@ -104,3 +106,58 @@ def test_merge_overlapping_runs_sums_tf(runs_raw):
     md, mt = merge_sorted_runs(runs)
     assert md.tolist() == sorted(model)
     assert mt.tolist() == [model[x] for x in sorted(model)]
+
+
+_I64 = np.iinfo(np.int64)
+
+
+@st.composite
+def _posting_lists(draw):
+    """Posting lists as an encoder sees them: sorted unique doc ids (dense or
+    spread over the whole hash range, optionally pinned to both int64
+    extremes), tfs >= 1 up to 9-byte varbytes; lengths favour the block
+    edges and empty lists can sit between non-empty ones."""
+    lens = draw(st.lists(
+        st.one_of(st.sampled_from([0, 1, 127, 128, 129, 256, 257]), st.integers(0, 40)),
+        max_size=8,
+    ))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    out = []
+    for n in lens:
+        if draw(st.booleans()):
+            d = np.cumsum(rng.integers(1, 200, size=n)) + draw(st.integers(_I64.min, _I64.max - 200 * n))
+        else:
+            d = np.unique(rng.integers(_I64.min, _I64.max, size=n, endpoint=True))
+            if n >= 2 and draw(st.booleans()):
+                d[0], d[-1] = _I64.min, _I64.max
+                d = np.unique(d)
+        t = rng.integers(1, draw(st.sampled_from([2, 128, 2**40, _I64.max])), size=d.size, endpoint=True)
+        out.append((d.astype(np.int64), t.astype(np.int64)))
+    return out
+
+
+@given(_posting_lists(), st.integers(0, 8))
+@settings(max_examples=200, deadline=None)
+def test_batch_encoder_equals_per_list_reference(lists, skip):
+    """encode_posting_lists == encode_postings + varbyte(block_max_meta) byte
+    for byte on every list, also when the Arrow list array is sliced to a
+    non-zero offset (Spark can hand a UDF sliced arrays)."""
+    skip = min(skip, len(lists))
+    off = np.cumsum([0] + [d.size for d, _ in lists])
+    doc_ids = np.concatenate([d for d, _ in lists] + [np.empty(0, np.int64)])
+    tfs = np.concatenate([t for _, t in lists] + [np.empty(0, np.int64)])
+    pairs = pa.ListArray.from_arrays(
+        pa.array(off, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(doc_ids, pa.int64()), pa.array(tfs, pa.int64())], names=["doc_id", "tf"]
+        ),
+    ).slice(skip)
+    post, bm_docs, bm_tfs = encode_posting_lists(pairs.offsets, *pairs.flatten().flatten())
+    assert len(post) == len(bm_docs) == len(bm_tfs) == len(lists) - skip
+    for i, (d, t) in enumerate(lists[skip:]):
+        bm_d, bm_t = block_max_meta(d, t)
+        assert post[i].as_py() == encode_postings(d, t)
+        assert bm_docs[i].as_py() == varbyte_encode(bm_d.astype(np.uint64) + np.uint64(1 << 63))
+        assert bm_tfs[i].as_py() == varbyte_encode(bm_t.astype(np.uint64))
+        dd, tt = decode_postings(post[i].as_py())
+        assert np.array_equal(dd, d) and np.array_equal(tt, t)

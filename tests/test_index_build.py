@@ -2,6 +2,8 @@
 (SURVEY.md §5.2 items 1/2/5; BASELINE.json north_rule rank-identical top-k +
 sha256 per-row invariant)."""
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -181,3 +183,34 @@ def test_segmented_hot_terms_rank_identical(spark, built):
         assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
             (r["doc_id"], round(r["score"], 9)) for r in b
         ], query
+
+
+# sha256 over the term-sorted stored rows of build_postings(generate_corpus(
+# spark, 1000, seed=42)) with salting on (hot_df_threshold=200), keyed by
+# segment_hot_terms. The rows are the on-disk index format: if this digest
+# changes, the format changed, and that change needs a version in index_meta.
+GOLDEN_INDEX_SHA256 = {
+    False: "b8edf358fcda017c63ce705cbf407881b9e2cf3d12041fcb02971342c176f63d",
+    True: "2674b8b8e198862eb0cd76e54926425fbc35ddca477c537d4695aed7f2a1affc",
+}
+
+
+def test_index_bytes_match_golden_digest(spark):
+    tf_df = tokenize_tf(with_doc_id(generate_corpus(spark, 1000, seed=42))).cache()
+    for segmented, want in GOLDEN_INDEX_SHA256.items():
+        cfg = BuildConfig(
+            hot_df_threshold=200, docs_per_salt=250, hot_detection_sample=1.0,
+            segment_hot_terms=segmented,
+        )
+        keys = ["term", "segment"] if segmented else ["term"]
+        rows = (
+            build_postings(tf_df, cfg)
+            .select(*keys, "df", "max_tf", "postings", "bm_docs", "bm_tfs")
+            .orderBy(*keys)
+            .collect()
+        )
+        h = hashlib.sha256()
+        for r in rows:
+            h.update(repr(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)).encode())
+        assert h.hexdigest() == want, f"segment_hot_terms={segmented}"
+    tf_df.unpersist()
