@@ -1,2 +1,1 @@
 from .lineage import finalize_index, load_manifest, resumable_build  # noqa: F401
-from .skew import salted_join  # noqa: F401

@@ -1,2 +1,1 @@
-from .incremental import incremental_tf_ingest, windowed_event_counts  # noqa: F401
-from .stateful import sessionize_batch, sessionize_stream  # noqa: F401
+from .incremental import incremental_tf_ingest  # noqa: F401

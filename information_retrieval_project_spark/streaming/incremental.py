@@ -1,11 +1,10 @@
-"""Structured Streaming: incremental index ingest + event-time windows.
+"""Structured Streaming: incremental index ingest and served-index updates.
 
 The reference is strictly batch (SURVEY.md §2.9), so streaming here is the
 documented upgrade path, not parity: Trigger.AvailableNow + foreachBatch
 drives the SAME batch build function (index/build.tokenize_tf) over newly
 arrived corpus files, with Spark's checkpoint giving exactly-once file-source
-progress on top of the build's own lineage manifest. A watermarked
-tumbling-window aggregate over the events table shows the late-data path.
+progress on top of the build's own lineage manifest.
 
 At cluster scale the file source becomes an Iceberg/Kafka source and
 foreachBatch appends tf-unit partitions exactly like pipelines/lineage.py —
@@ -352,29 +351,3 @@ def read_served_positions(spark: SparkSession, out_dir: str):
     from ..index.positions import read_positions
 
     return read_positions(spark, os.path.join(out_dir, "positions_store"))
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type. Works identically
-    on a streaming DataFrame (late rows beyond the watermark dropped) and on
-    a batch DataFrame (watermark is a no-op) — the test asserts the batch
-    semantics; the streaming wiring is the production path."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )

@@ -259,25 +259,6 @@ def test_ivf_ann_recall_and_exactness_in_probed_buckets(spark):
     assert [r["vec_id"] for r in full] == [r["vec_id"] for r in brute]
 
 
-def test_salted_join_equals_plain_join(spark):
-    from information_retrieval_project_spark.pipelines.skew import salted_join
-
-    # skewed fact: 90% of rows share one key
-    rows = [(1 if i % 10 else 7, i) for i in range(2000)]
-    fact = spark.createDataFrame(rows, "k long, payload long")
-    dim = spark.createDataFrame([(1, "hot"), (7, "cold"), (9, "unused")], "k long, name string")
-    got = salted_join(fact, dim, "k", n_salts=8)
-    want = fact.join(dim, "k")
-    assert sorted(got.columns) == sorted(want.columns)
-    assert got.count() == want.count() == 2000
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # left join preserves unmatched fact rows too
-    fact2 = fact.union(spark.createDataFrame([(99, 0)], "k long, payload long"))
-    g2 = salted_join(fact2, dim, "k", n_salts=4, how="left")
-    assert g2.filter("k = 99").count() == 1
-
-
 def test_kmv_estimate_accuracy(spark):
     from information_retrieval_project_spark.textstats.sketches import (
         kmv_estimate,

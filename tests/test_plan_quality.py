@@ -47,14 +47,17 @@ def test_bm25_uses_broadcast_and_takeordered(spark, sf_dir):
 
 
 def test_semi_and_anti_join_strategies(spark, sf_dir):
-    ps = plan(EQ.q_semi_join_customers(spark, sf_dir))
-    pa = plan(EQ.q_anti_join_customers(spark, sf_dir))
+    """The facet drill-down filters scores by a left-semi join and boolean
+    NOT is a left-anti join: neither may degrade to an inner join plus
+    distinct or a not-in filter."""
+    ps = plan(EQ.q_bm25_topk_faceted(spark, sf_dir))
+    pa = plan(EQ.q_boolean_or_not_docs(spark, sf_dir))
     assert "LeftSemi" in ps
     assert "LeftAnti" in pa
 
 
 def test_aggregate_is_hash_partial_final(spark, sf_dir):
-    p = plan(EQ.q_pricing_summary(spark, sf_dir))
+    p = plan(EQ.q_term_df(spark, sf_dir))
     assert p.count("HashAggregate") >= 2     # partial + final
     assert "SortAggregate" not in p
 
@@ -92,8 +95,9 @@ def test_emb_near_dup_has_no_cartesian(spark, sf_dir):
 
 def test_capped_band_join_stays_hash_equi(spark, sf_dir):
     """The bucket-size guard must not change the join strategy of the
-    band self-join (equi hash/SMJ, no nested loop)."""
-    p = plan(EQ.q_minhash_band_pairs(spark, sf_dir))
+    band self-join (equi hash/SMJ, no nested loop). Asserted on the
+    banding plan itself: the gate returns a checkpoint scan."""
+    p = plan(EQ._band_pairs(EQ.q_minhash_signatures(spark, sf_dir)))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -162,3 +166,19 @@ def test_facet_counts_plan_shape(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
     assert "BroadcastHashJoin" in p
     assert "Generate" in p  # the stack() of all facet dims, one pass
+
+
+def test_minhash_gates_release_their_signatures(spark, sf_dir):
+    """Both banding gates persist their signature table only while the
+    pairs are computed: the returned DataFrame is an eager checkpoint of
+    the small pairs result (a LogicalRDD leaf), and that checkpoint is the
+    only RDD the call leaves persisted — the signatures are released."""
+    jsc = spark.sparkContext._jsc
+    for q in (EQ.q_minhash_band_pairs, EQ.q_minhash_band_pairs_fast):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = q(spark, sf_dir)
+        added = set(jsc.getPersistentRDDs().keySet()) - before
+        leaf = out._jdf.queryExecution().analyzed()
+        assert leaf.getClass().getSimpleName() == "LogicalRDD", q.__name__
+        assert leaf.children().isEmpty()
+        assert added == {leaf.rdd().id()}, q.__name__

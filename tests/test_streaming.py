@@ -1,5 +1,5 @@
 """Streaming incremental ingest: only-new-files semantics + equality with
-the one-shot batch build; watermarked window agg."""
+the one-shot batch build."""
 
 import os
 import shutil
@@ -10,7 +10,6 @@ from information_retrieval_project_spark.corpus import generate_pdf
 from information_retrieval_project_spark.index.build import tokenize_tf, with_doc_id
 from information_retrieval_project_spark.streaming.incremental import (
     incremental_tf_ingest,
-    windowed_event_counts,
 )
 
 
@@ -56,16 +55,6 @@ def test_incremental_ingest_matches_batch(spark, tmp_path):
     want = tokenize_tf(with_doc_id(full))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-
-
-def test_windowed_event_counts_batch_semantics(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = windowed_event_counts(ev, window="1 day")
-    total = out.agg(F.sum("n_events")).collect()[0][0]
-    assert total == ev.count()  # tumbling windows partition all events
-    # window bounds are day-aligned and disjoint per event_type
-    rows = out.collect()
-    assert all(r["window_start"] < r["window_end"] for r in rows)
 
 
 def test_incremental_index_update_merges_only_new_files(spark, tmp_path):

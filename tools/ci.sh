@@ -5,23 +5,19 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 
-echo "== 1/6 pytest (full suite) =="
+echo "== 1/5 pytest (full suite) =="
 python -m pytest tests/ -x -q
 
-echo "== 2/6 perfbench self-test (APIs the benchmark's traced run calls) =="
+echo "== 2/5 perfbench self-test (APIs the benchmark's traced run calls) =="
 python -m pytest perfbench/tests -q
 
-echo "== 3/6 driver-gate replica (tuned session) =="
+echo "== 3/5 correctness-gate replica (tuned session) =="
 python tools/check_contract.py "$SF"
 
-echo "== 4/6 driver-gate replica (vanilla default-config session) =="
+echo "== 4/5 correctness-gate replica (vanilla default-config session) =="
 CONTRACT_VANILLA=1 python tools/check_contract.py "$SF"
 
-echo "== 5/6 bench JSON contract (scaling skipped) =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_CPUS=4 BENCH_SCALING=0 \
-    python bench.py | python -c "import json,sys; json.loads(sys.stdin.read()); print('bench JSON ok')"
-
-echo "== 6/6 spark-submit launch + checkpoint-resume probe =="
+echo "== 5/5 spark-submit launch + checkpoint-resume probe =="
 OUT=$(mktemp -d /tmp/ir_ci_idx.XXXX)
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1 \

@@ -3,7 +3,7 @@
 Usage: python tools/explain_dump.py <out_dir> <suffix> [names...]
 Writes <out_dir>/<name>_<suffix>.txt per query. Suffix is e.g. "before" /
 "after". The serving path entry ("bm25_served") builds a small index
-in-process and explains bm25_topk_compressed (the query_latency path).
+in-process and explains bm25_topk_compressed (the served top-k path).
 """
 
 from __future__ import annotations
@@ -21,8 +21,6 @@ DEFAULT = [
     "minhash_band_pairs_fast",
     "token_stats",
     "cosine_scores",
-    "pricing_summary",
-    "top_customers",
 ]
 
 
