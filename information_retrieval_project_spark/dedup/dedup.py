@@ -17,7 +17,9 @@ First-class training-data-pipeline ops (graded alongside SURVEY.md §2):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -104,6 +106,7 @@ def minhash_lsh_pairs(
     n_bands: int = 4,
     rows_per_band: int = 4,
     max_bucket: int | None = None,
+    key: Callable[..., Column] = F.xxhash64,
 ) -> DataFrame:
     """Candidate near-dup pairs sharing any band signature (bucket join).
 
@@ -112,10 +115,14 @@ def minhash_lsh_pairs(
     members are still found through their other n_bands-1 bands unless they
     collide everywhere. At 100 TB ALWAYS set it (one hot bucket of size d
     fans out d²/2 join rows); measure what it drops with
-    bucket_cap_stats(bands, ["band", "key"], max_bucket)."""
+    bucket_cap_stats(bands, ["band", "key"], max_bucket).
+
+    key: column function from a band's signature columns to its bucket
+    key. xxhash64 by default; F.concat keeps md5 hex signatures
+    comparable with a SQL oracle that concatenates them."""
     # one scan of sig, bands via in-row explode — the union-of-n_bands form
     # instantiated the whole signature subtree once per band per join side
-    # (guide §2.4/§3.3); values are identical (same per-band xxhash64 keys)
+    # (guide §2.4/§3.3); values are identical (same per-band keys)
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -123,7 +130,7 @@ def minhash_lsh_pairs(
                 *[
                     F.struct(
                         F.lit(bidx).alias("band"),
-                        F.xxhash64(
+                        key(
                             *[
                                 F.col(f"h{bidx * rows_per_band + r}")
                                 for r in range(rows_per_band)

@@ -527,49 +527,12 @@ SQL_MINHASH_SIGNATURES = f"""
 """
 
 
-def _band_pairs(sig):
-    """Candidate pairs of the md5 signatures: 4 bands x 2 rows, buckets
-    above 1000 members skipped, then a self-join on (band, key)."""
-    from .dedup.dedup import cap_buckets
-
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bidx).alias("band"),
-                        F.concat(
-                            F.col(f"h{2 * bidx}"), F.col(f"h{2 * bidx + 1}")
-                        ).alias("key"),
-                    )
-                    for bidx in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    bands = cap_buckets(bands, ["band", "key"], 1000)
-    left = bands.alias("a")
-    right = bands.alias("b")
-    return (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-
 def q_minhash_band_pairs(spark, sf_dir):
     """LSH banding: 4 bands × 2 rows; candidate pairs share any band value.
-    Classic MinHash-LSH (Broder; MMDS ch.3) as a self-join on band keys,
-    with the skew guard of dedup.minhash_lsh_pairs: buckets above 1000
-    members are skipped before the self-join (oracle mirrors the HAVING)."""
+    Classic MinHash-LSH (Broder; MMDS ch.3) as a self-join on band keys
+    (dedup.minhash_lsh_pairs with the oracle's concatenated md5 keys,
+    h0 || h1), with its skew guard: buckets above 1000 members are skipped
+    before the self-join (oracle mirrors the HAVING)."""
     # The bands relation feeds FOUR plan instantiations (self-join left +
     # right, each carrying the bucket-cap aggregate) — persist the
     # shuffle-free signature computation so tokenize+shingle+8×md5 runs a
@@ -577,8 +540,12 @@ def q_minhash_band_pairs(spark, sf_dir):
     # an intermediate rather than recompute a duplicated subtree). The small
     # pairs result is checkpointed eagerly and the signatures released
     # before returning (the gate persist-hygiene pattern).
+    from .dedup.dedup import minhash_lsh_pairs
+
     sig = q_minhash_signatures(spark, sf_dir).persist()
-    out = _band_pairs(sig).localCheckpoint(eager=True)
+    out = minhash_lsh_pairs(
+        sig, rows_per_band=2, max_bucket=1000, key=F.concat
+    ).localCheckpoint(eager=True)
     sig.unpersist()
     return out
 

@@ -24,6 +24,8 @@ on (doc_id, aligned_pos); every stream is term-filtered before the decode.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import manifest
 from .codec import varbyte_decode, varbyte_encode
 
 POS_SCHEMA = "term string, doc_id long, n_occ long, positions binary"
@@ -113,171 +116,37 @@ def build_positions(corpus_with_id: DataFrame) -> DataFrame:
     )
 
 
-_POS_CURRENT = "POSITIONS_CURRENT"
-_POS_PREFIX = "positions_v"
-_STAGING_GC_AGE_S = 15 * 60  # staging dirs younger than this may be live
-
-
 def write_positions(
     pos_idx: DataFrame,
     out_dir: str,
     term_buckets: int = 32,
-    state_files: dict[str, str] | None = None,
+    state: dict | None = None,
 ) -> None:
     """Persist the positional index partitioned by the shared term-bucket
-    scheme (index/bucketing.py — same hash as the main index), with the
-    modulus recorded next to the data.
+    scheme (index/bucketing.py — same hash as the main index) as the next
+    snapshot of the store at out_dir (index/manifest.py). The modulus is
+    committed in the snapshot's state.json together with its data, so no
+    crash can pair data with a modulus it was not written at (the
+    silent-pruning bug class ADVICE r1 flagged). state: caller state
+    committed with the snapshot (e.g. the incorporated corpus files of
+    streaming.incremental.incremental_corpus_update)."""
+    staging = manifest.begin(out_dir)
+    _write_data(pos_idx, staging, term_buckets)
+    manifest.commit(
+        out_dir, staging, {**(state or {}), "term_buckets": int(term_buckets)}
+    )
 
-    Commit protocol = the CURRENT-pointer protocol of
-    streaming/incremental.py (ADVICE r3: the old rename(bundle→old) +
-    rename(tmp→bundle) pair had a window with NO bundle on disk, so a
-    concurrent read failed and a crash between the renames needed manual
-    repair): each write stages a complete versioned snapshot dir
-    (data/ + meta/), publishes it with one os.rename, then flips the
-    POSITIONS_CURRENT pointer file atomically (write tmp + os.replace).
-    The committed snapshot is therefore never absent — a reader pinned to
-    the old version keeps its files (retain snapshots are kept), and a
-    crash at any point leaves the pointer on the last consistent version.
-    At cluster scale the pointer flip is an Iceberg/metastore snapshot
-    commit. No crash window can leave a modulus that mismatches the data
-    (the silent-pruning bug class ADVICE r1 flagged): data and sidecar
-    commit together.
 
-    Writer concurrency contract (ADVICE r4): SINGLE WRITER per store —
-    two concurrent writers can compute the same next version number and
-    collide on the publish rename (the loser's os.rename raises; no
-    committed state is ever corrupted, but the losing write is lost). At
-    cluster scale the metastore/Iceberg commit supplies the compare-and-swap
-    this local layout doesn't. Staging-dir GC is age-gated (only dirs older
-    than _STAGING_GC_AGE_S are reclaimed) so a slow LIVE writer's staging
-    area is never reaped by a newly started one."""
-    import os
-
+def _write_data(pos_idx: DataFrame, snapshot: str, term_buckets: int) -> None:
     from .bucketing import term_bucket_expr
 
-    vname, tmp = _begin_staging(out_dir)
     (
         pos_idx.withColumn("term_bucket", term_bucket_expr(term_buckets))
         .repartition("term_bucket")
         .write.mode("overwrite")
         .partitionBy("term_bucket")
-        .parquet(os.path.join(tmp, "data"))
+        .parquet(os.path.join(snapshot, "data"))
     )
-    _write_meta(pos_idx.sparkSession, tmp, term_buckets)
-    _write_state(tmp, state_files)
-    _commit_version(out_dir, tmp, vname)
-
-
-def _begin_staging(out_dir: str) -> tuple[str, str]:
-    """Allocate the next version name and its staging dir, GC'ing staging
-    leftovers from CRASHED writers first — age-gated: a dir younger than
-    the threshold may belong to a live concurrent writer mid-stage
-    (ADVICE r4), so it is left alone."""
-    import os
-    import shutil
-    import time
-
-    os.makedirs(out_dir, exist_ok=True)
-    versions = sorted(
-        d for d in os.listdir(out_dir)
-        if d.startswith(_POS_PREFIX) and not d.startswith("_")
-    )
-    nxt = 1 + max(
-        (int(v[len(_POS_PREFIX):]) for v in versions), default=0
-    )
-    vname = f"{_POS_PREFIX}{nxt:06d}"
-    now = time.time()
-    for d in os.listdir(out_dir):
-        if d.startswith("_positions_staging"):
-            p = os.path.join(out_dir, d)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age > _STAGING_GC_AGE_S:
-                shutil.rmtree(p, ignore_errors=True)
-    return vname, os.path.join(out_dir, f"_positions_staging_{vname}")
-
-
-def _write_meta(spark: SparkSession, staging: str, term_buckets: int) -> None:
-    import os
-
-    meta = spark.createDataFrame([(int(term_buckets),)], "term_buckets int")
-    meta.coalesce(1).write.mode("overwrite").json(
-        os.path.join(staging, "meta")
-    )
-
-
-def _write_state(staging: str, state_files: dict[str, str] | None) -> None:
-    """Caller-supplied state files (e.g. the incorporated-corpus-file list
-    of streaming.incremental.incremental_corpus_update) committed WITH the
-    snapshot — state and data flip together, the same all-or-nothing rule
-    the main index snapshots follow."""
-    import os
-
-    for name, content in (state_files or {}).items():
-        with open(os.path.join(staging, name), "w") as f:
-            f.write(content)
-
-
-def read_positions_state(out_dir: str, name: str) -> str | None:
-    """Content of a state file committed with the CURRENT snapshot, or None
-    (no snapshot / no such file — legacy bundles carry no state)."""
-    import os
-
-    ptr = os.path.join(out_dir, _POS_CURRENT)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        vname = f.read().strip()
-    path = os.path.join(out_dir, vname, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return f.read()
-
-
-def _commit_version(out_dir: str, tmp: str, vname: str) -> None:
-    """Publish a fully staged snapshot: one os.rename, then the atomic
-    pointer flip (write tmp + os.replace), then retention GC. The
-    previously COMMITTED version (pointer content, not directory listing —
-    a dir published by a writer that crashed before its pointer flip is
-    garbage, not history) survives one more write so in-flight readers
-    pinned to it keep their files."""
-    import os
-    import shutil
-
-    versions = sorted(
-        d for d in os.listdir(out_dir)
-        if d.startswith(_POS_PREFIX) and not d.startswith("_")
-    )
-    ptr_path = os.path.join(out_dir, _POS_CURRENT)
-    prev = None
-    if os.path.exists(ptr_path):
-        with open(ptr_path) as f:
-            prev = f.read().strip()
-    os.rename(tmp, os.path.join(out_dir, vname))
-    ptr_tmp = ptr_path + ".tmp"
-    with open(ptr_tmp, "w") as f:
-        f.write(vname)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(ptr_tmp, ptr_path)
-    keep = {vname, prev}
-    for v in versions:
-        if v not in keep:
-            shutil.rmtree(os.path.join(out_dir, v), ignore_errors=True)
-    # a store migrated from the legacy single-bundle layout: once a pointer
-    # commit exists the bundle is unreachable for NEW readers (read_positions
-    # prefers the pointer), but a reader that resolved the bundle just before
-    # this first pointer commit may still be mid-scan on its files — so the
-    # bundle gets the same one-write retention as versioned snapshots
-    # (ADVICE r4): kept through the migration write, deleted on the next
-    # pointer-style write (prev is set exactly then).
-    if prev is not None:
-        shutil.rmtree(
-            os.path.join(out_dir, "positions_bundle"), ignore_errors=True
-        )
 
 
 def _link_tree(src_data: str, dst_data: str, prefix: str) -> int:
@@ -287,9 +156,6 @@ def _link_tree(src_data: str, dst_data: str, prefix: str) -> int:
     O(bytes) — the previous snapshot's payload is never rewritten or
     copied (falls back to copy on filesystems without link support).
     Returns the number of files linked."""
-    import os
-    import shutil
-
     n = 0
     for root, _dirs, files in os.walk(src_data):
         rel = os.path.relpath(root, src_data)
@@ -302,10 +168,6 @@ def _link_tree(src_data: str, dst_data: str, prefix: str) -> int:
             os.makedirs(dst_dir, exist_ok=True)
             src = os.path.join(root, fn)
             dst = os.path.join(dst_dir, f"{prefix}{fn}")
-            # retry after a crash re-stages into the same staging dir —
-            # replace any leftover from the earlier attempt
-            if os.path.exists(dst):
-                os.remove(dst)
             try:
                 os.link(src, dst)
             except OSError:
@@ -319,14 +181,13 @@ def append_positions(
     out_dir: str,
     new_docs_corpus: DataFrame | None = None,
     delta_positions: DataFrame | None = None,
-    state_files: dict[str, str] | None = None,
+    state: dict | None = None,
 ) -> dict:
     """Incremental positional-index maintenance (VERDICT r4 #7): tokenize
     ONLY the new documents, stage a snapshot whose data = hardlinks to the
     committed snapshot's files + the new docs' freshly written partitions,
-    and commit through the same versioned CURRENT-pointer protocol as
-    write_positions. The dominant cost is the new docs' tokenize pass —
-    history is never re-read, re-encoded, or copied.
+    and commit it like write_positions. The dominant cost is the new docs'
+    tokenize pass — history is never re-read, re-encoded, or copied.
 
     new_docs_corpus: (doc_id, content) rows for documents NOT yet in the
     store (append-only, same contract as incremental_index_update: the
@@ -336,119 +197,73 @@ def append_positions(
     relation for those docs instead (pass ONE of the two) — the hook for
     callers that derive postings AND positions from one fused tokenize
     pass (streaming.incremental.incremental_corpus_update) and must not
-    pay a second corpus scan here. state_files: caller state committed
-    atomically WITH the snapshot (read back via read_positions_state).
-    The stored term-bucket modulus is REUSED (read from the sidecar) so
-    partition pruning stays valid.
+    pay a second corpus scan here. state: caller state committed with the
+    snapshot. The committed term-bucket modulus is REUSED so partition
+    pruning stays valid.
 
-    Crash-safe like every write here: a crash at any point leaves the
-    pointer on the previous consistent snapshot (hardlinks live inside the
-    staging dir until the single publish rename), and the next append
-    simply re-stages. A store with no committed snapshot gets an initial
-    full write at the default modulus."""
-    import os
-
-    from .bucketing import term_bucket_expr
-
+    A crash at any point leaves the pointer on the previous complete
+    snapshot (hardlinks live inside the staging dir until the publish
+    rename), and the next append re-stages. A store with no committed
+    snapshot gets an initial full write at the default modulus."""
     if (new_docs_corpus is None) == (delta_positions is None):
         raise ValueError(
             "pass exactly one of new_docs_corpus / delta_positions"
         )
-
-    ptr = os.path.join(out_dir, _POS_CURRENT)
-    if not os.path.exists(ptr):
-        if os.path.isdir(os.path.join(out_dir, "positions_bundle")):
-            # legacy single-bundle store: treating it as a fresh start
-            # would write an initial snapshot containing ONLY the delta
-            # and orphan every previously indexed document (the next
-            # commit then GC's the bundle permanently). Same refusal as
-            # incremental_index_update's legacy-layout guard.
-            raise RuntimeError(
-                f"{out_dir} uses the legacy positions_bundle layout; "
-                "migrate it first with write_positions(read_positions(...)"
-                ") before appending — appending now would silently drop "
-                "all existing documents"
-            )
-        delta = (
-            delta_positions
-            if delta_positions is not None
-            else build_positions(new_docs_corpus)
-        )
-        write_positions(delta, out_dir, state_files=state_files)
-        return {"mode": "initial", "linked_files": 0}
-    with open(ptr) as f:
-        cur_name = f.read().strip()
-    cur_dir = os.path.join(out_dir, cur_name)
-    if not cur_name or not os.path.isdir(cur_dir):
-        raise ValueError(
-            f"POSITIONS_CURRENT in {out_dir} names missing snapshot "
-            f"{cur_name!r}"
-        )
-    _, term_buckets = read_positions(spark, out_dir)
-
-    vname, tmp = _begin_staging(out_dir)
     delta = (
         delta_positions
         if delta_positions is not None
         else build_positions(new_docs_corpus)
     )
-    (
-        delta.withColumn("term_bucket", term_bucket_expr(term_buckets))
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(tmp, "data"))
-    )
+    cur = manifest.current(out_dir)
+    if cur is None:
+        write_positions(delta, out_dir, state=state)
+        return {"mode": "initial", "linked_files": 0}
+    term_buckets = _state(cur)["term_buckets"]
+    staging = manifest.begin(out_dir)
+    _write_data(delta, staging, term_buckets)
     linked = _link_tree(
-        os.path.join(cur_dir, "data"),
-        os.path.join(tmp, "data"),
-        prefix=f"{cur_name}_",
+        os.path.join(cur, "data"),
+        os.path.join(staging, "data"),
+        prefix=f"{os.path.basename(cur)}_",
     )
-    _write_meta(spark, tmp, term_buckets)
-    _write_state(tmp, state_files)
-    _commit_version(out_dir, tmp, vname)
-    return {"mode": "appended", "linked_files": linked, "snapshot": vname}
+    name = manifest.commit(
+        out_dir, staging, {**(state or {}), "term_buckets": term_buckets}
+    )
+    return {"mode": "appended", "linked_files": linked, "snapshot": name}
+
+
+def _n_data_files(snapshot: str) -> int:
+    return sum(
+        1
+        for _root, _d, fs in os.walk(os.path.join(snapshot, "data"))
+        for f in fs
+        if not f.startswith(("_", "."))
+    )
 
 
 def compact_positions(spark: SparkSession, out_dir: str) -> dict:
     """Rewrite the committed snapshot as one fresh bounded-file-count
-    write (same modulus, same pointer protocol, state files carried
-    forward). Hardlink appends (append_positions) add one file set per
-    batch — after many batches the per-partition file count, not the data
-    volume, dominates scan planning; compaction is the positional
-    counterpart of index/merge.compact_segments. Readers pinned to the
-    old snapshot keep their files (one-write retention)."""
-    import os
-
-    stored, term_buckets = read_positions(spark, out_dir)
-    inc = read_positions_state(out_dir, "incorporated.json")
-    state = {"incorporated.json": inc} if inc is not None else None
-    n_files_before = sum(
-        1
-        for _root, _d, fs in os.walk(
-            os.path.join(_current_snapshot_dir(out_dir), "data")
-        )
-        for f in fs
-        if not f.startswith(("_", "."))
-    )
+    write (same modulus, committed state carried forward). Hardlink
+    appends (append_positions) add one file set per batch — after many
+    batches the per-partition file count, not the data volume, dominates
+    scan planning; compaction is the positional counterpart of
+    index/merge.compact_segments. Readers pinned to the old snapshot keep
+    their files (one-commit retention)."""
+    snap = _snapshot(out_dir)
+    state = _state(snap)
+    n_files_before = _n_data_files(snap)
     write_positions(
-        stored.select("term", "doc_id", "n_occ", "positions"),
+        spark.read.parquet(os.path.join(snap, "data")).select(
+            "term", "doc_id", "n_occ", "positions"
+        ),
         out_dir,
-        term_buckets=term_buckets,
-        state_files=state,
-    )
-    n_files_after = sum(
-        1
-        for _root, _d, fs in os.walk(
-            os.path.join(_current_snapshot_dir(out_dir), "data")
-        )
-        for f in fs
-        if not f.startswith(("_", "."))
+        term_buckets=state["term_buckets"],
+        state=state,
     )
     return {
         "mode": "compacted",
         "files_before": n_files_before,
-        "files_after": n_files_after,
+        "files_after": _n_data_files(_snapshot(out_dir)),
     }
 
 
@@ -458,66 +273,52 @@ def delete_positions_docs(
     """Tombstone delete from the positional store (parity with
     index/merge.delete_docs on the postings side): drop every
     (term, doc) row of the given docs and commit the result as a new
-    versioned snapshot through the same pointer protocol — phrase and
-    proximity queries over the new snapshot can never resurrect a deleted
-    doc. Implemented as a broadcast anti-join rewrite; at 100 TB this is
-    the rewrite-on-delete path, and bulk deletes should batch doc_ids
-    rather than loop. State files are carried forward."""
-    stored, term_buckets = read_positions(spark, out_dir)
+    snapshot — phrase and proximity queries over the new snapshot can
+    never resurrect a deleted doc. Implemented as a broadcast anti-join
+    rewrite; at 100 TB this is the rewrite-on-delete path, and bulk
+    deletes should batch doc_ids rather than loop. Committed state is
+    carried forward."""
+    snap = _snapshot(out_dir)
+    state = _state(snap)
     tomb = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-    kept = stored.select("term", "doc_id", "n_occ", "positions").join(
-        F.broadcast(tomb), "doc_id", "left_anti"
+    kept = (
+        spark.read.parquet(os.path.join(snap, "data"))
+        .select("term", "doc_id", "n_occ", "positions")
+        .join(F.broadcast(tomb), "doc_id", "left_anti")
     )
-    inc = read_positions_state(out_dir, "incorporated.json")
-    state = {"incorporated.json": inc} if inc is not None else None
-    write_positions(kept, out_dir, term_buckets=term_buckets, state_files=state)
+    write_positions(
+        kept, out_dir, term_buckets=state["term_buckets"], state=state
+    )
     return {"mode": "deleted", "n_tombstones": len(doc_ids)}
 
 
-def _current_snapshot_dir(out_dir: str) -> str:
-    import os
+def _snapshot(out_dir: str) -> str:
+    snap = manifest.current(out_dir)
+    if snap is None:
+        raise ValueError(f"no positional index committed in {out_dir}")
+    return snap
 
-    ptr = os.path.join(out_dir, _POS_CURRENT)
-    with open(ptr) as f:
-        vname = f.read().strip()
-    return os.path.join(out_dir, vname)
+
+def _state(snapshot: str) -> dict:
+    """The snapshot's committed state; raises on a missing or invalid
+    modulus (assuming one would silently drop valid rows)."""
+    state = manifest.read_state(snapshot)
+    tb = state.get("term_buckets")
+    if type(tb) is not int or tb < 1:
+        raise manifest.SnapshotStoreError(
+            f"corrupt {manifest.STATE} in {snapshot}: term_buckets={tb!r}"
+        )
+    return state
 
 
 def read_positions(spark: SparkSession, out_dir: str) -> tuple[DataFrame, int]:
-    """(positions DataFrame, term_buckets) of the committed snapshot —
-    resolved through the POSITIONS_CURRENT pointer (legacy single-bundle
-    layouts are still readable). Raises on a corrupt sidecar (assuming a
-    wrong modulus would silently drop valid rows) and on a pointer naming
-    a missing snapshot (never guess a layout)."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    ptr = os.path.join(out_dir, _POS_CURRENT)
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            vname = f.read().strip()
-        bundle = os.path.join(out_dir, vname)
-        if not vname or not os.path.isdir(bundle):
-            raise ValueError(
-                f"POSITIONS_CURRENT in {out_dir} names missing snapshot "
-                f"{vname!r}"
-            )
-    elif os.path.isdir(os.path.join(out_dir, "positions_bundle")):
-        bundle = os.path.join(out_dir, "positions_bundle")  # legacy layout
-    else:
-        raise ValueError(f"no positional index committed in {out_dir}")
-    try:
-        rows = spark.read.json(os.path.join(bundle, "meta")).collect()
-    except AnalysisException as e:
-        if "CORRUPT_RECORD" in str(e):
-            raise ValueError(f"corrupt positions_meta in {out_dir}") from e
-        raise
-    if not rows or "term_buckets" not in rows[0].asDict() or rows[0]["term_buckets"] is None:
-        raise ValueError(f"corrupt positions_meta in {out_dir}")
+    """(positions DataFrame, term_buckets) of the committed snapshot. The
+    modulus is read from the snapshot's state.json on the driver, with no
+    Spark job."""
+    snap = _snapshot(out_dir)
     return (
-        spark.read.parquet(os.path.join(bundle, "data")),
-        int(rows[0]["term_buckets"]),
+        spark.read.parquet(os.path.join(snap, "data")),
+        _state(snap)["term_buckets"],
     )
 
 

@@ -13,14 +13,13 @@ the batch and streaming ingest paths share one implementation.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index import manifest
 from ..index.build import BuildConfig, build_postings, tokenize_tf, with_doc_id
 
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -55,47 +54,13 @@ def incremental_tf_ingest(
     q.awaitTermination()
 
 
-def _read_current(out_dir: str) -> tuple[str, str] | None:
-    """(snapshot_name, snapshot_path) the CURRENT pointer commits to, or None.
-    A pointer naming a missing directory is corruption, not a fresh start —
-    silently rebuilding from only new files would drop all history."""
-    cur = os.path.join(out_dir, "CURRENT")
-    if not os.path.exists(cur):
-        return None
-    with open(cur) as f:
-        name = f.read().strip()
-    path = os.path.join(out_dir, name)
-    if not os.path.isdir(path):
-        raise RuntimeError(
-            f"CURRENT points at missing snapshot {name!r} in {out_dir}"
-        )
-    return name, path
-
-
-def _recover(out_dir: str, current_name: str | None, retain: int) -> None:
-    """Drop uncommitted leftovers from a crashed update: staging dirs,
-    snapshot dirs newer than CURRENT (published data whose state commit
-    never happened), and superseded snapshots beyond the retention window
-    (a crash between the pointer flip and retirement would otherwise leak a
-    full index copy forever). The committed snapshot is never touched."""
-    cur_id = int(current_name[1:]) if current_name else -1
-    for entry in os.listdir(out_dir):
-        p = os.path.join(out_dir, entry)
-        if entry.startswith("_staging_"):
-            shutil.rmtree(p, ignore_errors=True)
-        elif entry.startswith("v") and entry[1:].isdigit():
-            eid = int(entry[1:])
-            if eid > cur_id or eid <= cur_id - retain:
-                shutil.rmtree(p, ignore_errors=True)
-
-
 def current_snapshot_dir(out_dir: str) -> str:
     """Path of the committed snapshot (contains index/, doc_stats/,
-    collection_stats/, incorporated.json)."""
-    cur = _read_current(out_dir)
-    if cur is None:
+    collection_stats/, state.json)."""
+    snap = manifest.current(out_dir)
+    if snap is None:
         raise FileNotFoundError(f"no committed snapshot in {out_dir}")
-    return cur[1]
+    return snap
 
 
 def read_served_index(spark: SparkSession, out_dir: str):
@@ -109,12 +74,18 @@ def read_served_index(spark: SparkSession, out_dir: str):
     )
 
 
+def _incorporated(snapshot: str | None) -> set[str]:
+    """Input files a committed snapshot already holds."""
+    if snapshot is None:
+        return set()
+    return set(manifest.read_state(snapshot).get("incorporated", ()))
+
+
 def incremental_index_update(
     spark: SparkSession,
     tf_dir: str,
     out_dir: str,
     cfg: BuildConfig = BuildConfig(),
-    retain: int = 2,
 ) -> dict:
     """Maintain a SERVED index over the append-only tf stream: merge only the
     tf part-files that arrived since the last update into the stored index
@@ -125,58 +96,32 @@ def incremental_index_update(
 
     Crash idempotence (the merge is ADDITIVE — re-applying a delta would SUM
     tf into existing postings — so state and data must commit together):
-    every update writes a complete versioned snapshot dir
-    (index/ + doc_stats/ + collection_stats/ + incorporated.json) under
-    _staging_vN, publishes it with ONE os.rename to vN, then flips the
-    CURRENT pointer file atomically (write tmp + os.replace). A crash at any
-    point leaves CURRENT on the previous consistent snapshot; the next run
-    garbage-collects staging dirs and never-committed snapshots and re-merges
-    the same new files against the unchanged base. At cluster scale the
-    snapshot commit is an Iceberg snapshot (atomic data+metadata), which is
-    exactly this protocol. Append-only: re-ingesting a document would sum
-    its tf into existing postings; dedupe upstream.
-
-    retain: how many committed snapshots to keep (default 2 — the previous
-    snapshot survives one update so in-flight read_served_index readers
-    pinned to it don't lose files mid-query; raise for longer grace)."""
-    if retain < 1:
-        raise ValueError("retain must be >= 1")
-    os.makedirs(out_dir, exist_ok=True)
-    cur = _read_current(out_dir)
-    if cur is None and (
-        os.path.isdir(os.path.join(out_dir, "index"))
-        or os.path.exists(os.path.join(out_dir, "incorporated.json"))
-    ):
-        # pre-snapshot layout (top-level index/ + incorporated.json, no
-        # CURRENT): treating it as a fresh start would re-merge everything
-        # and orphan the old index — refuse instead of silently losing
-        # history
-        raise RuntimeError(
-            f"{out_dir} uses the legacy pre-snapshot layout; migrate by "
-            "moving index/, doc_stats/, collection_stats/ and "
-            "incorporated.json into a v000001/ dir and writing 'v000001' "
-            "to a CURRENT file"
-        )
-    cur_name = cur[0] if cur else None
-    _recover(out_dir, cur_name, retain)
-    incorporated: set[str] = set()
-    if cur:
-        with open(os.path.join(cur[1], "incorporated.json")) as f:
-            incorporated = set(json.load(f))
+    every update commits a complete snapshot (index/ + doc_stats/ +
+    collection_stats/, with the incorporated files in its state.json)
+    through index/manifest.py. A crash at any point leaves CURRENT on the
+    previous complete snapshot, and the next run re-merges the same new
+    files against the unchanged base. The previous snapshot survives one
+    update, so in-flight readers pinned to it keep their files.
+    Append-only: re-ingesting a document would sum its tf into existing
+    postings; dedupe upstream."""
+    cur = manifest.current(out_dir)
+    incorporated = _incorporated(cur)
     files = sorted(glob(os.path.join(tf_dir, "*.parquet")))
     new = [f for f in files if os.path.basename(f) not in incorporated]
     if not new:
-        return {"mode": "noop", "new_files": 0, "snapshot": cur_name}
-    delta_tf = spark.read.parquet(*new)
+        return {
+            "mode": "noop",
+            "new_files": 0,
+            "snapshot": os.path.basename(cur) if cur else None,
+        }
     return _apply_index_delta(
         spark,
-        delta_tf,
+        spark.read.parquet(*new),
         out_dir,
         cur,
         incorporated | {os.path.basename(f) for f in new},
         len(new),
         cfg,
-        retain,
     )
 
 
@@ -184,11 +129,10 @@ def _apply_index_delta(
     spark: SparkSession,
     delta_tf: DataFrame,
     out_dir: str,
-    cur: tuple[str, str] | None,
+    cur: str | None,
     incorporated: set[str],
     n_new: int,
     cfg: BuildConfig,
-    retain: int,
 ) -> dict:
     """The merge + snapshot-commit core of incremental_index_update, with
     the delta already materialized as a tf relation — shared by the
@@ -197,44 +141,31 @@ def _apply_index_delta(
     positional store)."""
     from ..index.build import collection_stats, doc_stats
 
-    cur_name = cur[0] if cur else None
     delta_idx = build_postings(delta_tf, cfg)
     delta_ds = doc_stats(delta_tf)
     if cur:
         from ..index.merge import merge_doc_stats, merge_index
 
         merged = merge_index(
-            spark.read.parquet(os.path.join(cur[1], "index")), delta_idx
+            spark.read.parquet(os.path.join(cur, "index")), delta_idx
         )
         ds = merge_doc_stats(
-            spark.read.parquet(os.path.join(cur[1], "doc_stats")), delta_ds
+            spark.read.parquet(os.path.join(cur, "doc_stats")), delta_ds
         )
         mode = "merged"
     else:
         merged, ds, mode = delta_idx, delta_ds, "initial"
 
-    next_id = (int(cur_name[1:]) if cur_name else 0) + 1
-    next_name = f"v{next_id:06d}"
-    staging = os.path.join(out_dir, f"_staging_{next_name}")
+    staging = manifest.begin(out_dir)
     merged.write.mode("overwrite").parquet(os.path.join(staging, "index"))
     ds.write.mode("overwrite").parquet(os.path.join(staging, "doc_stats"))
     collection_stats(
         spark.read.parquet(os.path.join(staging, "doc_stats"))
     ).write.mode("overwrite").parquet(os.path.join(staging, "collection_stats"))
-    with open(os.path.join(staging, "incorporated.json"), "w") as f:
-        json.dump(sorted(incorporated), f)
-    # one rename publishes data AND state together; the pointer flip commits
-    os.rename(staging, os.path.join(out_dir, next_name))
-    ptr_tmp = os.path.join(out_dir, "CURRENT.tmp")
-    with open(ptr_tmp, "w") as f:
-        f.write(next_name)
-    os.replace(ptr_tmp, os.path.join(out_dir, "CURRENT"))
-    # retire snapshots beyond the retention window (the new snapshot plus
-    # retain-1 predecessors stay): _recover's retention branch is exactly
-    # this deletion relative to the just-committed snapshot, and it also
-    # runs on startup in case of a crash right here
-    _recover(out_dir, next_name, retain)
-    return {"mode": mode, "new_files": n_new, "snapshot": next_name}
+    name = manifest.commit(
+        out_dir, staging, {"incorporated": sorted(incorporated)}
+    )
+    return {"mode": mode, "new_files": n_new, "snapshot": name}
 
 
 def incremental_corpus_update(
@@ -242,7 +173,6 @@ def incremental_corpus_update(
     corpus_dir: str,
     out_dir: str,
     cfg: BuildConfig = BuildConfig(),
-    retain: int = 2,
 ) -> dict:
     """Maintain BOTH servable stores from the corpus itself: the merged
     postings index (incremental_index_update's snapshot protocol, under
@@ -254,36 +184,25 @@ def incremental_corpus_update(
     so a deployment serving BM25 + phrase/proximity must not scan twice).
 
     Each store commits its own incorporated-file list atomically WITH its
-    snapshot (incorporated.json — the positions side rides
-    append_positions' state_files). The two commits are sequential, not
-    transactional: a crash between them leaves the index store one batch
-    ahead, and the next run CATCHES THE LAGGING STORE UP with its own
-    scan of exactly the missed files — each store converges independently
-    and append-only idempotence holds per store. Corpus files are
-    append-only immutable batches (the file-source contract of
+    snapshot (in the snapshot's state.json). The two commits are
+    sequential, not transactional: a crash between them leaves the index
+    store one batch ahead, and the next run CATCHES THE LAGGING STORE UP
+    with its own scan of exactly the missed files — each store converges
+    independently and append-only idempotence holds per store. Corpus
+    files are append-only immutable batches (the file-source contract of
     incremental_tf_ingest); re-writing an already-incorporated file is
     NOT detected (same rule as incremental_index_update: dedupe upstream).
     """
     from ..index.build import with_doc_id
-    from ..index.positions import (
-        append_positions,
-        read_positions_state,
-        tokenize_tf_positions,
-    )
+    from ..index.positions import append_positions, tokenize_tf_positions
 
     idx_dir = os.path.join(out_dir, "index_store")
     pos_dir = os.path.join(out_dir, "positions_store")
-    os.makedirs(idx_dir, exist_ok=True)
     files = sorted(glob(os.path.join(corpus_dir, "*.parquet")))
 
-    cur = _read_current(idx_dir)
-    inc_idx: set[str] = set()
-    if cur:
-        with open(os.path.join(cur[1], "incorporated.json")) as f:
-            inc_idx = set(json.load(f))
-    _recover(idx_dir, cur[0] if cur else None, retain)
-    pos_state = read_positions_state(pos_dir, "incorporated.json")
-    inc_pos: set[str] = set(json.loads(pos_state)) if pos_state else set()
+    cur = manifest.current(idx_dir)
+    inc_idx = _incorporated(cur)
+    inc_pos = _incorporated(manifest.current(pos_dir))
 
     new_idx = [f for f in files if os.path.basename(f) not in inc_idx]
     new_pos = [f for f in files if os.path.basename(f) not in inc_pos]
@@ -305,15 +224,13 @@ def incremental_corpus_update(
             names = {os.path.basename(f) for f in new_idx}
             out["index"] = _apply_index_delta(
                 spark, tf_delta, idx_dir, cur, inc_idx | names,
-                len(new_idx), cfg, retain,
+                len(new_idx), cfg,
             )
             out["positions"] = append_positions(
                 spark,
                 pos_dir,
                 delta_positions=pos_delta,
-                state_files={
-                    "incorporated.json": json.dumps(sorted(inc_pos | names))
-                },
+                state={"incorporated": sorted(inc_pos | names)},
             )
         finally:
             # a failure between the two commits must not leave the full
@@ -327,8 +244,7 @@ def incremental_corpus_update(
         names = {os.path.basename(f) for f in new_idx}
         tf_delta = tokenize_tf(with_doc_id(spark.read.parquet(*new_idx)))
         out["index"] = _apply_index_delta(
-            spark, tf_delta, idx_dir, cur, inc_idx | names, len(new_idx),
-            cfg, retain,
+            spark, tf_delta, idx_dir, cur, inc_idx | names, len(new_idx), cfg
         )
     if new_pos:
         names = {os.path.basename(f) for f in new_pos}
@@ -336,9 +252,7 @@ def incremental_corpus_update(
             spark,
             pos_dir,
             new_docs_corpus=with_doc_id(spark.read.parquet(*new_pos)),
-            state_files={
-                "incorporated.json": json.dumps(sorted(inc_pos | names))
-            },
+            state={"incorporated": sorted(inc_pos | names)},
         )
     out["mode"] = "catchup"
     return out

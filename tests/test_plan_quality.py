@@ -97,7 +97,14 @@ def test_capped_band_join_stays_hash_equi(spark, sf_dir):
     """The bucket-size guard must not change the join strategy of the
     band self-join (equi hash/SMJ, no nested loop). Asserted on the
     banding plan itself: the gate returns a checkpoint scan."""
-    p = plan(EQ._band_pairs(EQ.q_minhash_signatures(spark, sf_dir)))
+    from information_retrieval_project_spark.dedup.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    sig = EQ.q_minhash_signatures(spark, sf_dir)
+    p = plan(
+        minhash_lsh_pairs(sig, rows_per_band=2, max_bucket=1000, key=F.concat)
+    )
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 

@@ -337,10 +337,9 @@ def test_fused_build_identity_and_single_scan(spark, tmp_path):
 
 def test_positions_storage_roundtrip_and_pruning(spark, tmp_path):
     """write_positions/read_positions: stored phrase serving is identical to
-    in-memory, the scan prunes term_bucket partitions, and a corrupt sidecar
-    raises (the wrong-modulus lesson from the main index, ADVICE r1)."""
-    import os
-
+    in-memory, the scan prunes term_bucket partitions, and a corrupt
+    committed state raises (the wrong-modulus lesson from the main index,
+    ADVICE r1)."""
     import pytest
 
     from information_retrieval_project_spark.index.positions import (
@@ -389,28 +388,21 @@ def test_positions_storage_roundtrip_and_pruning(spark, tmp_path):
     )
     assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:300]
 
-    # corrupt sidecar raises instead of assuming a modulus
-    with open(f"{out}/POSITIONS_CURRENT") as f:
-        meta_dir = f"{out}/{f.read().strip()}/meta"
-    part = next(
-        f for f in os.listdir(meta_dir)
-        if f.startswith("part-") and f.endswith(".json")
-    )
-    with open(os.path.join(meta_dir, part), "w") as f:
+    # corrupt committed state raises instead of assuming a modulus
+    with open(f"{out}/CURRENT") as f:
+        state = f"{out}/{f.read().strip()}/state.json"
+    with open(state, "w") as f:
         f.write("{nope")
-    for crc in os.listdir(meta_dir):
-        if crc.endswith(".crc"):  # stale checksum would fail the read first
-            os.remove(os.path.join(meta_dir, crc))
-    with pytest.raises(ValueError, match="corrupt positions_meta"):
+    with pytest.raises(ValueError, match="corrupt state.json"):
         read_positions(spark, out)
 
 
 def test_write_positions_crash_never_mismatches_modulus(spark, tmp_path):
-    """CURRENT-pointer snapshot protocol (ADVICE r3 — same as
+    """CURRENT-pointer snapshot protocol (index/manifest.py, shared with
     streaming/incremental.py): simulate every crash window and assert the
     reader always sees A consistent committed snapshot — never 8-bucket
-    data paired with a 32-bucket sidecar, and never NO bundle at all (the
-    old rename-pair protocol's gap)."""
+    data paired with a 32-bucket modulus, and never NO snapshot at all
+    (the old rename-pair protocol's gap)."""
     import os
 
     from information_retrieval_project_spark.index.positions import (
@@ -428,7 +420,7 @@ def test_write_positions_crash_never_mismatches_modulus(spark, tmp_path):
     # crash window 1: a re-bucketing run dies before the version-dir
     # rename (staging written, never published); backdated mtime — the
     # staging GC is age-gated (ADVICE r4), young dirs may be live writers
-    staging = os.path.join(out, "_positions_staging_positions_v000042")
+    staging = os.path.join(out, "_staging_v000042")
     os.makedirs(os.path.join(staging, "data"), exist_ok=True)
     os.utime(staging, (0, 0))
     stored, tb = read_positions(spark, out)
@@ -436,14 +428,14 @@ def test_write_positions_crash_never_mismatches_modulus(spark, tmp_path):
 
     # crash window 2: version dir published but the pointer flip never ran
     # — the pointer still names the old consistent snapshot
-    orphan = os.path.join(out, "positions_v000099")
+    orphan = os.path.join(out, "v000099")
     os.makedirs(os.path.join(orphan, "data"), exist_ok=True)
     stored, tb = read_positions(spark, out)
     assert tb == 32 and stored.count() == idx.count()
 
     # the next write cleans stale staging, publishes a fresh version, and
     # flips the pointer; the PREVIOUS committed snapshot is retained for
-    # in-flight readers (retain=2)
+    # in-flight readers
     write_positions(idx, out, term_buckets=8)
     stored2, tb2 = read_positions(spark, out)
     assert tb2 == 8 and stored2.count() == idx.count()
@@ -451,8 +443,8 @@ def test_write_positions_crash_never_mismatches_modulus(spark, tmp_path):
     assert not os.path.exists(orphan)  # never-committed dirs are GC'd
 
     # a pointer naming a missing snapshot fails LOUDLY, never guesses
-    with open(os.path.join(out, "POSITIONS_CURRENT"), "w") as f:
-        f.write("positions_v999999")
+    with open(os.path.join(out, "CURRENT"), "w") as f:
+        f.write("v999999")
     import pytest
 
     with pytest.raises(ValueError, match="missing snapshot"):
@@ -500,11 +492,12 @@ def test_phrase_topk_served_from_stored_segmented_indexes(spark, tmp_path):
     idx, ds, cs, pos = build_index(corpus, cfg, positions=True)
     assert idx.filter(F.col("segment") > 0).count() > 0  # segmentation real
     write_index(idx, ds, cs, out, term_buckets=16)
-    write_positions(pos, out, term_buckets=8)
+    # the positions store owns its dir (index/manifest.py)
+    write_positions(pos, f"{out}/positions", term_buckets=8)
 
     r_idx, r_ds, r_cs = read_index(spark, out)
     meta = read_index_meta(spark, out)
-    r_pos, ptb = read_positions(spark, out)
+    r_pos, ptb = read_positions(spark, f"{out}/positions")
     assert ptb == 8 and meta["term_buckets"] == 16
     cs_row = r_cs.collect()[0]
 
@@ -603,11 +596,12 @@ def test_proximity_topk_served_from_stored_segmented_indexes(spark, tmp_path):
     )
     idx, ds, cs, pos = build_index(corpus, cfg, positions=True)
     write_index(idx, ds, cs, out, term_buckets=16)
-    write_positions(pos, out, term_buckets=8)
+    # the positions store owns its dir (index/manifest.py)
+    write_positions(pos, f"{out}/positions", term_buckets=8)
 
     r_idx, r_ds, r_cs = read_index(spark, out)
     meta = read_index_meta(spark, out)
-    r_pos, ptb = read_positions(spark, out)
+    r_pos, ptb = read_positions(spark, f"{out}/positions")
     cs_row = r_cs.collect()[0]
 
     term_a, term_b, window = "def", "return", 6
@@ -690,17 +684,17 @@ def test_append_positions_incremental_maintenance(spark, tmp_path):
     _, tb0 = read_positions(spark, out)
 
     # crash simulation: stale staging + a published version with no pointer
-    os.makedirs(os.path.join(out, "_positions_staging_positions_v000042"))
+    os.makedirs(os.path.join(out, "_staging_v000042"))
     os.utime(
-        os.path.join(out, "_positions_staging_positions_v000042"),
+        os.path.join(out, "_staging_v000042"),
         (0, 0),  # old enough for the age-gated GC
     )
-    os.makedirs(os.path.join(out, "positions_v000099", "data"))
+    os.makedirs(os.path.join(out, "v000099", "data"))
 
     r1 = append_positions(spark, out, corpus_b)
     assert r1["mode"] == "appended" and r1["linked_files"] > 0
     stored, tb1 = read_positions(spark, out)
-    assert tb1 == tb0  # modulus reused from the sidecar
+    assert tb1 == tb0  # modulus reused from the committed state
 
     # full rebuild over the union — the appended store must match exactly
     union = corpus_a.unionByName(corpus_b)
@@ -773,18 +767,18 @@ def test_compact_and_delete_positions_store(spark, tmp_path):
     result or losing committed state; tombstone delete must drop exactly
     the given docs from phrase/proximity results and keep everything
     else byte-stable."""
-    import json
-    import os
-
+    from information_retrieval_project_spark.index import manifest
     from information_retrieval_project_spark.index.positions import (
         append_positions,
         compact_positions,
         delete_positions_docs,
         proximity_match_indexed,
         read_positions,
-        read_positions_state,
         write_positions,
     )
+
+    def incorporated():
+        return manifest.read_state(manifest.current(out))["incorporated"]
 
     out = str(tmp_path / "poslife")
     batches = [
@@ -796,16 +790,14 @@ def test_compact_and_delete_positions_store(spark, tmp_path):
     write_positions(
         build_positions(batches[0]),
         out,
-        state_files={"incorporated.json": json.dumps(["b0"])},
+        state={"incorporated": ["b0"]},
     )
     for i, b in enumerate(batches[1:], start=1):
         append_positions(
             spark,
             out,
             new_docs_corpus=b,
-            state_files={
-                "incorporated.json": json.dumps([f"b{j}" for j in range(i + 1)])
-            },
+            state={"incorporated": [f"b{j}" for j in range(i + 1)]},
         )
 
     stored, tb = read_positions(spark, out)
@@ -829,9 +821,7 @@ def test_compact_and_delete_positions_store(spark, tmp_path):
     }
     assert prox_after == prox_before and len(prox_before) > 0
     # committed state survived the compaction
-    assert json.loads(read_positions_state(out, "incorporated.json")) == [
-        "b0", "b1", "b2",
-    ]
+    assert incorporated() == ["b0", "b1", "b2"]
 
     # tombstone delete: pick docs that currently match, drop them
     victims = sorted({d for d, _ in prox_before})[:3]
@@ -848,9 +838,7 @@ def test_compact_and_delete_positions_store(spark, tmp_path):
     assert prox_del == {
         (d, m) for d, m in prox_before if d not in victims
     }
-    assert json.loads(read_positions_state(out, "incorporated.json")) == [
-        "b0", "b1", "b2",
-    ]
+    assert incorporated() == ["b0", "b1", "b2"]
 
 
 def test_min_dist_sorted_property():
@@ -876,78 +864,3 @@ def test_min_dist_sorted_property():
         assert got == want
 
     check()
-
-
-def test_write_positions_gcs_legacy_bundle(spark, tmp_path):
-    """A store migrated from the pre-pointer single-bundle layout: the
-    first pointer-style write makes the bundle unreachable for new reads
-    (POSITIONS_CURRENT wins) but RETAINS its files one write — a reader
-    that resolved the bundle just before the migration commit keeps its
-    files, same one-write retention as versioned snapshots (ADVICE r4).
-    The SECOND pointer-style write GC's it (else a full stale copy of the
-    index lingers forever)."""
-    import os
-
-    from information_retrieval_project_spark.index.positions import (
-        read_positions,
-        write_positions,
-    )
-
-    out = str(tmp_path / "legacy")
-    docs = spark.createDataFrame(
-        [(1, "a b c")], "doc_id long, content string"
-    )
-    idx = build_positions(docs)
-    # fabricate the legacy layout: bundle dir with data/ + meta/
-    legacy = os.path.join(out, "positions_bundle")
-    os.makedirs(os.path.join(legacy, "data"))
-    idx.withColumn("term_bucket", F.lit(0)).write.parquet(
-        os.path.join(legacy, "data"), mode="overwrite"
-    )
-    spark.createDataFrame([(4,)], "term_buckets int").coalesce(1).write.json(
-        os.path.join(legacy, "meta"), mode="overwrite"
-    )
-    stored, tb = read_positions(spark, out)  # legacy fallback path works
-    assert tb == 4
-
-    write_positions(idx, out, term_buckets=8)
-    stored2, tb2 = read_positions(spark, out)
-    assert tb2 == 8  # new reads resolve through the pointer...
-    assert os.path.exists(legacy)  # ...but in-flight legacy readers survive
-
-    write_positions(idx, out, term_buckets=8)
-    _, tb3 = read_positions(spark, out)
-    assert tb3 == 8
-    assert not os.path.exists(legacy)  # GC'd on the second pointer commit
-
-
-def test_append_positions_refuses_legacy_bundle_store(spark, tmp_path):
-    """Appending to a pre-pointer single-bundle store must REFUSE loudly:
-    the no-pointer branch would otherwise commit an initial snapshot
-    holding only the delta and orphan every legacy document."""
-    import os
-
-    import pytest
-
-    from information_retrieval_project_spark.index.positions import (
-        append_positions,
-        read_positions,
-    )
-
-    out = str(tmp_path / "legacy_append")
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, content string")
-    idx = build_positions(docs)
-    legacy = os.path.join(out, "positions_bundle")
-    os.makedirs(os.path.join(legacy, "data"))
-    idx.withColumn("term_bucket", F.lit(0)).write.parquet(
-        os.path.join(legacy, "data"), mode="overwrite"
-    )
-    spark.createDataFrame([(4,)], "term_buckets int").coalesce(1).write.json(
-        os.path.join(legacy, "meta"), mode="overwrite"
-    )
-    more = spark.createDataFrame([(2, "c d")], "doc_id long, content string")
-    with pytest.raises(RuntimeError, match="legacy positions_bundle"):
-        append_positions(spark, out, new_docs_corpus=more)
-    # the legacy store is untouched and still served
-    stored, tb = read_positions(spark, out)
-    assert tb == 4 and stored.count() == 3

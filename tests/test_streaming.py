@@ -175,8 +175,9 @@ def test_incremental_update_crash_recovery(spark, tmp_path):
     # crash window (b): a fully-published v000002 whose CURRENT flip never
     # happened — its contents are a stale double-merge hazard
     shutil.copytree(snap1, os.path.join(out, "v000002"))
-    with open(os.path.join(out, "v000002", "incorporated.json"), "w") as f:
-        json.dump([], f)  # poison: would re-merge EVERYTHING if trusted
+    with open(os.path.join(out, "v000002", "state.json"), "w") as f:
+        # poison: would re-merge EVERYTHING if trusted
+        json.dump({"incorporated": []}, f)
 
     r2 = incremental_index_update(spark, tf_dir, out, cfg)
     assert r2["mode"] == "merged" and r2["snapshot"] == "v000002"
@@ -219,32 +220,9 @@ def test_incremental_update_corrupt_pointer_raises(spark, tmp_path):
         )
 
 
-def test_incremental_update_legacy_layout_raises(spark, tmp_path):
-    """A pre-snapshot out_dir (top-level index/, no CURRENT) must raise, not
-    silently re-merge everything as a fresh start (code-review r3)."""
-    import json
-    import os
-
-    import pytest
-
-    from information_retrieval_project_spark.index.build import BuildConfig
-    from information_retrieval_project_spark.streaming.incremental import (
-        incremental_index_update,
-    )
-
-    out = str(tmp_path / "legacy")
-    os.makedirs(os.path.join(out, "index"))
-    with open(os.path.join(out, "incorporated.json"), "w") as f:
-        json.dump(["part-old.parquet"], f)
-    with pytest.raises(RuntimeError, match="legacy pre-snapshot layout"):
-        incremental_index_update(
-            spark, str(tmp_path), out, BuildConfig(hot_detection_sample=1.0)
-        )
-
-
 def test_incremental_update_retention_keeps_previous_snapshot(spark, tmp_path):
-    """retain=2 (default): the superseded snapshot survives one update so
-    in-flight readers pinned to it keep their files; older ones are GC'd."""
+    """The superseded snapshot survives one update so in-flight readers
+    pinned to it keep their files; older ones are GC'd."""
     import os
 
     from information_retrieval_project_spark.index.build import BuildConfig
@@ -274,6 +252,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     noop."""
     import shutil as _sh
 
+    from information_retrieval_project_spark.index.codec import decode_postings
     from information_retrieval_project_spark.index.positions import (
         build_positions,
         phrase_match_indexed,
@@ -302,9 +281,21 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
         _sh.move(os.path.join(tmp, part), os.path.join(corpus_dir, name))
         _sh.rmtree(tmp)
 
+    def _assert_indexed_docs_have_stats():
+        # serving assumes every indexed doc has a doc_stats row
+        idx, ds, _ = read_served_index(spark, os.path.join(out, "index_store"))
+        indexed = {
+            int(d)
+            for r in idx.select("postings").collect()
+            for d in decode_postings(bytes(r["postings"]))[0]
+        }
+        with_stats = {r["doc_id"] for r in ds.select("doc_id").collect()}
+        assert indexed and indexed <= with_stats
+
     _add_file(generate_pdf(60, start=0), "f1.parquet")
     r1 = incremental_corpus_update(spark, corpus_dir, out)
     assert r1["mode"] == "fused"
+    _assert_indexed_docs_have_stats()
     assert r1["index"]["mode"] == "initial"
     assert r1["positions"]["mode"] == "initial"
 
@@ -314,6 +305,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     assert r2["index"]["mode"] == "merged"
     assert r2["positions"]["mode"] == "appended"
     assert r2["positions"]["linked_files"] > 0
+    _assert_indexed_docs_have_stats()
 
     # both stores must now equal a full rebuild over ALL ingested docs
     all_docs = with_doc_id(spark.read.parquet(corpus_dir))
@@ -371,11 +363,13 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     _add_file(generate_pdf(40, start=120), "f3.parquet")
     r3 = incremental_corpus_update(spark, corpus_dir, out)
     assert r3["mode"] == "fused"
+    _assert_indexed_docs_have_stats()
     _sh.rmtree(pos_dir)
     _sh.copytree(backup, pos_dir)  # positions now one batch behind
     r4 = incremental_corpus_update(spark, corpus_dir, out)
     assert r4["mode"] == "catchup"
     assert "index" not in r4  # index store was already current
+    _assert_indexed_docs_have_stats()
     pos2, ptb2 = read_served_positions(spark, out)
     all_docs2 = with_doc_id(spark.read.parquet(corpus_dir))
     assert pos2.count() == build_positions(all_docs2).count()

@@ -4,6 +4,8 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
+# spark_submit.sh launches local[$SPARK_GRAFT_CPUS]; default to this host's cores
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 
 echo "== 1/5 pytest (full suite) =="
 python -m pytest tests/ -x -q
@@ -17,11 +19,16 @@ python tools/check_contract.py "$SF"
 echo "== 4/5 correctness-gate replica (vanilla default-config session) =="
 CONTRACT_VANILLA=1 python tools/check_contract.py "$SF"
 
-echo "== 5/5 spark-submit launch + checkpoint-resume probe =="
+echo "== 5/5 spark-submit launch + checkpoint-resume + query probe =="
 OUT=$(mktemp -d /tmp/ir_ci_idx.XXXX)
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1
+# no `&& echo` after a check: set -e ignores a failure on the left of &&
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1 \
-    | grep -q '"units_built_this_run": 0' && echo "resume no-op ok"
+    | grep -q '"units_built_this_run": 0'
+echo "resume no-op ok"
+tools/spark_submit.sh --out "$OUT" --query "def return buffer" --k 5 | tail -1 \
+    | python -c 'import json, sys; assert len(json.load(sys.stdin)["hits"]) == 5'
+echo "query mode ok"
 rm -rf "$OUT"
 
 echo "ALL GREEN"

@@ -9,9 +9,9 @@ Build mode: builds the synthetic input_hint corpus, runs the
 checkpoint-resumable build, finalizes the compressed index, and prints
 JSON metrics; re-running with the same --out resumes from the lineage
 manifest. Query mode (--query): loads the finalized index from --out and
-serves a BM25 top-k through the default two-phase block-max compressed
-path, printing the ranked hits as JSON — the full build-then-serve
-lifecycle through one spark-submit surface.
+serves a BM25 top-k through bm25_topk_compressed (one bucket-pruned scan,
+one exhaustive posting decode), printing the ranked hits as JSON — the
+full build-then-serve lifecycle through one spark-submit surface.
 """
 
 from __future__ import annotations
