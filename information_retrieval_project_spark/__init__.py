@@ -28,6 +28,13 @@ Layout
   fingerprinting.
 - ``corpus.py``   deterministic synthetic source-code corpus per
   BASELINE.json input_hint (repo,path,commit,lang,content).
+- ``zipguard.py`` installed on import: a Python worker re-reads a zip on
+  its sys.path only when the zip changed (Python < 3.12 re-parsed every
+  archive on every task).
 """
+
+from . import zipguard
+
+zipguard.install()
 
 __version__ = "0.1.0"

@@ -27,8 +27,12 @@ All row-wise compute is vectorized pandas/Arrow (input_hint rule).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -62,6 +66,32 @@ def with_doc_id(corpus: DataFrame) -> DataFrame:
     ).withColumn("content_sha", F.sha2("content", 256))
 
 
+def _tokenize_arrow(split_pat: str, batches):
+    """tokenize_tf's mapInArrow body. Module level, so the UDF is pickled by
+    reference: unpickling it imports the package on the worker, which
+    installs zipguard for the worker's later tasks (a nested closure would
+    be pickled by value and import nothing of the package)."""
+    import pyarrow.compute as pc
+
+    # Spark owns parallelism: one Arrow CPU thread per task worker.
+    # Arrow's default pool is os.cpu_count() wide, so every task
+    # would otherwise fan out machine-wide — oversubscribing the
+    # executor and silently breaking task-level scaling measurements.
+    pa.set_cpu_count(1)
+
+    for batch in batches:
+        tbl = pa.Table.from_batches([batch])
+        low = pc.utf8_lower(tbl["content"].combine_chunks())
+        toks = pc.split_pattern_regex(low, split_pat)
+        flat = pc.list_flatten(toks)
+        parents = pc.list_parent_indices(toks)
+        doc_ids = pc.take(tbl["doc_id"].combine_chunks(), parents)
+        t = pa.table({"doc_id": doc_ids, "term": flat})
+        t = t.filter(pc.not_equal(t["term"], ""))
+        agg = t.group_by(["doc_id", "term"]).aggregate([([], "count_all")])
+        yield from agg.rename_columns(["doc_id", "term", "tf"]).to_batches()
+
+
 def tokenize_tf(
     corpus_with_id: DataFrame,
     strategy: str = "code",
@@ -85,32 +115,8 @@ def tokenize_tf(
     pass instead; it shares code with the oracle by construction.
     """
     if not stem and not stopwords:
-        split_pat = _SPLIT_PATTERNS[strategy]
-
-        def gen_arrow(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            # Spark owns parallelism: one Arrow CPU thread per task worker.
-            # Arrow's default pool is os.cpu_count() wide, so every task
-            # would otherwise fan out machine-wide — oversubscribing the
-            # executor and silently breaking task-level scaling measurements.
-            pa.set_cpu_count(1)
-
-            for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                low = pc.utf8_lower(tbl["content"].combine_chunks())
-                toks = pc.split_pattern_regex(low, split_pat)
-                flat = pc.list_flatten(toks)
-                parents = pc.list_parent_indices(toks)
-                doc_ids = pc.take(tbl["doc_id"].combine_chunks(), parents)
-                t = pa.table({"doc_id": doc_ids, "term": flat})
-                t = t.filter(pc.not_equal(t["term"], ""))
-                agg = t.group_by(["doc_id", "term"]).aggregate([([], "count_all")])
-                yield from agg.rename_columns(["doc_id", "term", "tf"]).to_batches()
-
         return corpus_with_id.select("doc_id", "content").mapInArrow(
-            gen_arrow, TF_SCHEMA
+            partial(_tokenize_arrow, _SPLIT_PATTERNS[strategy]), TF_SCHEMA
         )
 
     from ..functions.textnorm import _TOKEN_PATTERNS, clean_normalize
@@ -379,7 +385,8 @@ def write_index(
     term lookups prune partitions (SURVEY.md §4.2 partition pruning). The
     bucket count is recorded in an `index_meta` sidecar — the query path must
     hash query terms with the SAME modulus or pruning silently drops valid
-    postings (ADVICE r1).
+    postings (ADVICE r1). The sidecar is one JSON line the driver writes
+    itself (index_meta/part-00000.json), not a Spark job.
 
     fmt: "parquet" (default; the sandbox has no Iceberg jars) or "iceberg"
     (north_rule target layout — path-based HadoopTables; on a real cluster
@@ -398,43 +405,38 @@ def write_index(
     )
     ds.write.mode("overwrite").format(fmt).save(f"{out_dir}/doc_stats")
     cs.write.mode("overwrite").format(fmt).save(f"{out_dir}/collection_stats")
-    meta = idx.sparkSession.createDataFrame(
-        [(int(term_buckets), fmt)], "term_buckets int, fmt string"
-    )
-    meta.coalesce(1).write.mode("overwrite").json(f"{out_dir}/index_meta")
+    meta_dir = os.path.join(out_dir, "index_meta")
+    shutil.rmtree(meta_dir, ignore_errors=True)
+    os.makedirs(meta_dir)
+    with open(os.path.join(meta_dir, "part-00000.json"), "w") as f:
+        meta = {"term_buckets": int(term_buckets), "fmt": fmt}
+        f.write(json.dumps(meta, separators=(",", ":")) + "\n")
 
 
 def read_index_meta(spark: SparkSession, out_dir: str) -> dict:
-    """Sidecar layout metadata; {'term_buckets': 32, 'fmt': 'parquet'}
-    fallback ONLY for indexes written before the sidecar existed (path
-    absent). A sidecar that exists but cannot be parsed raises: silently
-    assuming 32 buckets against an index written with a different modulus
-    would reintroduce the pruning bug (valid postings dropped) the sidecar
-    prevents (ADVICE r2)."""
-    from pyspark.errors import AnalysisException
-
-    meta_path = f"{out_dir}/index_meta"
+    """Sidecar layout metadata, read on the driver with no Spark job (the
+    JSON-lines part file(s) of `index_meta/`, as Spark's JSON writer left
+    them in indexes written before the sidecar was driver-written);
+    {'term_buckets': 32, 'fmt': 'parquet'} fallback ONLY for indexes
+    written before the sidecar existed (dir absent). A sidecar that exists
+    but cannot be parsed raises: silently assuming 32 buckets against an
+    index written with a different modulus would reintroduce the pruning
+    bug (valid postings dropped) the sidecar prevents (ADVICE r2)."""
+    meta_dir = os.path.join(out_dir, "index_meta")
+    if not os.path.isdir(meta_dir):
+        return {"term_buckets": 32, "fmt": "parquet"}  # legacy layout
+    lines = []
+    for name in sorted(os.listdir(meta_dir)):
+        if name.startswith("part-"):
+            with open(os.path.join(meta_dir, name)) as f:
+                lines += [line for line in f if line.strip()]
     try:
-        rows = spark.read.json(meta_path).collect()
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return {"term_buckets": 32, "fmt": "parquet"}  # legacy layout
-        if "CORRUPT_RECORD" in msg:  # unparseable JSON in an existing sidecar
-            raise ValueError(
-                f"corrupt index_meta sidecar at {meta_path}: {msg[:200]}"
-            ) from e
-        raise
-    if not rows or "term_buckets" not in rows[0].asDict() or rows[0]["term_buckets"] is None:
+        d = json.loads(lines[0])
+        return {"term_buckets": int(d["term_buckets"]), "fmt": d.get("fmt") or "parquet"}
+    except (ValueError, LookupError, TypeError) as e:
         raise ValueError(
-            f"corrupt index_meta sidecar at {meta_path}: "
-            f"{rows[0].asDict() if rows else 'no rows'}"
-        )
-    d = rows[0].asDict()
-    return {
-        "term_buckets": int(d["term_buckets"]),
-        "fmt": d.get("fmt") or "parquet",
-    }
+            f"corrupt index_meta sidecar at {meta_dir}: {type(e).__name__}: {e}"
+        ) from e
 
 
 def read_index(

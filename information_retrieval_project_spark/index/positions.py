@@ -149,6 +149,15 @@ def _write_data(pos_idx: DataFrame, snapshot: str, term_buckets: int) -> None:
     )
 
 
+def _read_data(spark: SparkSession, snapshot: str) -> DataFrame:
+    """A snapshot's data with its written schema, POS_SCHEMA plus the
+    term_bucket partition column (the int partition inference gives), so
+    no job infers it from the files' footers."""
+    return spark.read.schema(f"{POS_SCHEMA}, term_bucket int").parquet(
+        os.path.join(snapshot, "data")
+    )
+
+
 def _link_tree(src_data: str, dst_data: str, prefix: str) -> int:
     """Hardlink every data file under src_data into the same relative
     location under dst_data, basenames prefixed to avoid collisions with
@@ -253,9 +262,7 @@ def compact_positions(spark: SparkSession, out_dir: str) -> dict:
     state = _state(snap)
     n_files_before = _n_data_files(snap)
     write_positions(
-        spark.read.parquet(os.path.join(snap, "data")).select(
-            "term", "doc_id", "n_occ", "positions"
-        ),
+        _read_data(spark, snap).select("term", "doc_id", "n_occ", "positions"),
         out_dir,
         term_buckets=state["term_buckets"],
         state=state,
@@ -282,7 +289,7 @@ def delete_positions_docs(
     state = _state(snap)
     tomb = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
     kept = (
-        spark.read.parquet(os.path.join(snap, "data"))
+        _read_data(spark, snap)
         .select("term", "doc_id", "n_occ", "positions")
         .join(F.broadcast(tomb), "doc_id", "left_anti")
     )
@@ -313,13 +320,10 @@ def _state(snapshot: str) -> dict:
 
 def read_positions(spark: SparkSession, out_dir: str) -> tuple[DataFrame, int]:
     """(positions DataFrame, term_buckets) of the committed snapshot. The
-    modulus is read from the snapshot's state.json on the driver, with no
-    Spark job."""
+    modulus is read from the snapshot's state.json on the driver, and the
+    data with the schema the writer wrote: no Spark job."""
     snap = _snapshot(out_dir)
-    return (
-        spark.read.parquet(os.path.join(snap, "data")),
-        _state(snap)["term_buckets"],
-    )
+    return _read_data(spark, snap), _state(snap)["term_buckets"]
 
 
 def prune_terms(

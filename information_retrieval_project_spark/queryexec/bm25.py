@@ -17,17 +17,31 @@ per doc, and finish with TakeOrderedAndProject (ORDER BY ... LIMIT k).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 K1 = 1.2
 B = 0.75
 
 
+def local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small query-constant relation (rows matching the DDL `schema`)
+    planned as a JVM LocalTableScan: the rows go to the JVM once, as an
+    Arrow table, when the DataFrame is built, and reading them runs no job.
+    `createDataFrame(list)` plans a Python-RDD scan instead (ExistingRDD),
+    one more job of Python tasks in every query that reads it; a literal
+    `inline(array(struct(...)))` makes Catalyst plan every element."""
+    struct = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table({f.name: list(c) for f, c in zip(struct.fields, cols)})
+    return spark.createDataFrame(table, struct)
+
+
 def query_terms_df(spark: SparkSession, tokens: list[str]) -> DataFrame:
     """Distinct query terms as a 1-column broadcastable DataFrame."""
-    uniq = sorted(set(tokens))
-    return spark.createDataFrame([(t,) for t in uniq], "term string")
+    return local_relation(spark, [(t,) for t in sorted(set(tokens))], "term string")
 
 
 def bm25_scores(
@@ -124,7 +138,7 @@ def bm25_topk_batch(
     queries — they are computed once from the candidate rows of the union of
     query terms, not per query."""
     pairs = sorted({(qid, t) for qid, toks in queries.items() for t in set(toks)})
-    qdf = spark.createDataFrame(pairs, "query_id long, term string")
+    qdf = local_relation(spark, pairs, "query_id long, term string")
     uniq_terms = qdf.select("term").distinct()
     cand = tf_df.join(F.broadcast(uniq_terms), "term")
     dfq = cand.groupBy("term").agg(F.count("*").alias("df"))

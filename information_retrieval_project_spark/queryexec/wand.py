@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.codec import BLOCK, decode_postings
-from .bm25 import B, K1, topk
+from .bm25 import B, K1, local_relation, topk
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
@@ -524,7 +524,8 @@ def bm25_topk_batch_compressed(
     """Whole-query-SET serving from the stored compressed index →
     (query_id, rank, doc_id, score): ONE bucket-pruned index scan and ONE
     decode for the UNION of all queries' terms, contributions joined to
-    the broadcast (query_id, term) relation, aggregated per
+    the broadcast (query_id, term) relation (a JVM-local relation, see
+    bm25.local_relation: no job of its own), aggregated per
     (query_id, doc_id), ranked per query_id. The index-served sibling of
     queryexec/bm25.bm25_topk_batch — |Q| separate queries would decode
     shared hot terms |Q| times; the batch decodes each term once. df/idf
@@ -538,7 +539,8 @@ def bm25_topk_batch_compressed(
 
     union_terms = sorted({t for toks in queries.values() for t in toks})
     rows = prune_terms(index_df, union_terms, term_buckets)
-    qdf = spark.createDataFrame(
+    qdf = local_relation(
+        spark,
         sorted({(qid, t) for qid, toks in queries.items() for t in toks}),
         "query_id long, term string",
     )

@@ -19,11 +19,11 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    own = str(len(os.sched_getaffinity(0)))  # the CPUs this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", own)
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else "32"
-        shuffle_partitions = max(int(n), 8)
+        shuffle_partitions = max(int(cpus if cpus.isdigit() else own), 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -214,3 +214,55 @@ def test_index_bytes_match_golden_digest(spark):
             h.update(repr(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)).encode())
         assert h.hexdigest() == want, f"segment_hot_terms={segmented}"
     tf_df.unpersist()
+
+
+def test_index_meta_sidecar_runs_no_spark_job(spark, tmp_path, jobs_run):
+    """write_index writes its index_meta sidecar on the driver and
+    read_index_meta reads it there: write_index runs exactly the jobs of its
+    three data writes (the sidecar used to be one more), the read runs
+    none, and a sidecar written by Spark's JSON writer (indexes written
+    before) still reads."""
+    import os
+
+    from information_retrieval_project_spark.index.bucketing import term_bucket_expr
+    from information_retrieval_project_spark.index.build import (
+        read_index_meta,
+        write_index,
+    )
+
+    tf = spark.createDataFrame(
+        [(d, t, d % 4 + 1) for d in range(80) for t in ("aa", "bb", "cc")],
+        "doc_id long, term string, tf long",
+    )
+    ds = doc_stats(tf).cache()
+    cs = collection_stats(ds).cache()
+    idx = build_postings(tf, BuildConfig(hot_detection_sample=1.0)).cache()
+    idx.count()
+    cs.count()
+
+    def data_writes(out):
+        (
+            idx.withColumn("term_bucket", term_bucket_expr(8))
+            .repartition("term_bucket")
+            .write.partitionBy("term_bucket")
+            .parquet(f"{out}/index")
+        )
+        ds.write.parquet(f"{out}/doc_stats")
+        cs.write.parquet(f"{out}/collection_stats")
+
+    _, n_data = jobs_run(lambda: data_writes(str(tmp_path / "data_only")))
+    out = str(tmp_path / "idx")
+    _, n_write = jobs_run(lambda: write_index(idx, ds, cs, out, term_buckets=8))
+    assert n_write == n_data
+    assert os.listdir(f"{out}/index_meta") == ["part-00000.json"]
+    with open(f"{out}/index_meta/part-00000.json") as f:
+        assert f.read() == '{"term_buckets":8,"fmt":"parquet"}\n'
+    meta, n_read = jobs_run(lambda: read_index_meta(spark, out))
+    assert meta == {"term_buckets": 8, "fmt": "parquet"} and n_read == 0
+
+    legacy = str(tmp_path / "legacy")
+    legacy_meta = spark.createDataFrame([(16, "parquet")], "term_buckets int, fmt string")
+    legacy_meta.coalesce(1).write.json(f"{legacy}/index_meta")
+    assert read_index_meta(spark, legacy) == {"term_buckets": 16, "fmt": "parquet"}
+    for df in (idx, cs, ds):
+        df.unpersist()

@@ -864,3 +864,27 @@ def test_min_dist_sorted_property():
         assert got == want
 
     check()
+
+
+def test_read_positions_runs_no_job_and_equals_inferred_read(spark, tmp_path, jobs_run):
+    """read_positions reads with the schema the writer wrote (POS_SCHEMA
+    plus the term_bucket partition column): no schema-inference job, and
+    the same columns, types and rows as a read that infers them."""
+    import os
+
+    from information_retrieval_project_spark.index import manifest
+    from information_retrieval_project_spark.index.positions import (
+        read_positions,
+        write_positions,
+    )
+
+    out = str(tmp_path / "posidx")
+    ids = with_doc_id(generate_corpus(spark, 60, partitions=2))
+    write_positions(build_positions(ids), out, term_buckets=4)
+    (stored, tb), n_jobs = jobs_run(lambda: read_positions(spark, out))
+    assert tb == 4 and n_jobs == 0
+    inferred = spark.read.parquet(os.path.join(manifest.current(out), "data"))
+    assert stored.dtypes == inferred.dtypes
+    key = ["term", "doc_id", "n_occ"]
+    want = inferred.orderBy(*key).collect()
+    assert stored.orderBy(*key).collect() == want and want

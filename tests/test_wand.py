@@ -362,7 +362,8 @@ def test_served_plan_one_python_stage_pruned_scan(spark, tmp_path):
     """Plan shape of the served single and batch top-k over a stored,
     term-bucketed index: exactly ONE Python-evaluated operator (the posting
     decode) under any Python-UDF node name, no semi-join, and the query
-    terms' buckets in the scan's PartitionFilters."""
+    terms' buckets in the scan's PartitionFilters; the batch's query
+    relation is a LocalTableScan, with no ExistingRDD scan."""
     import re
 
     from information_retrieval_project_spark.queryexec.wand import (
@@ -393,6 +394,9 @@ def test_served_plan_one_python_stage_pruned_scan(spark, tmp_path):
         assert len(python_ops) == 1, plan
         assert "LeftSemi" not in plan, plan
         assert re.search(r"PartitionFilters: \[[^\]]*term_bucket", plan), plan
+    # `plan` is the batch's: its (query_id, term) relation is JVM-local,
+    # a Python-RDD scan would cost one more job of Python tasks per batch
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 @pytest.mark.parametrize("seed", [5, 23])

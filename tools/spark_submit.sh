@@ -5,7 +5,7 @@ set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 ZIP="/tmp/information_retrieval_project_spark.zip"
 (cd "$REPO" && zip -qr "$ZIP" information_retrieval_project_spark -x '*__pycache__*')
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"  # default: this process's CPUs
 exec spark-submit \
   --master "local[$CPUS]" \
   --conf spark.sql.shuffle.partitions="$CPUS" \
