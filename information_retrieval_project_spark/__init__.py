@@ -4,7 +4,7 @@ A from-scratch re-expression of the capabilities of
 flavioforenza/Information-Retrieval-project (reference at /root/reference,
 surveyed in SURVEY.md) on idiomatic PySpark: DataFrame/SQL plans optimized by
 Catalyst, vectorized Arrow/pandas UDFs for the few genuinely custom operators
-(posting-list codec, block-max WAND), and explicit partitioning/skew handling
+(tokenize, posting-list encode and decode), and explicit partitioning/skew handling
 for web-scale corpora.
 
 Layout
@@ -14,7 +14,8 @@ Layout
   native-column helpers.
 - ``index/``      inverted-index build: tf/df aggregation, salted hot-term
   handling, delta+varbyte posting codec, stats tables, lineage manifest.
-- ``queryexec/``  BM25 / TF-IDF-cosine scoring, posting-merge, block-max WAND,
+- ``queryexec/``  BM25 (one scorer, ``bm25.py``) / TF-IDF-cosine /
+  query-likelihood scoring, compressed and sharded index serving,
   deterministic top-k.
 - ``oracle/``     pure numpy/pandas reference scorer used by pytest for
   rank-identity checks (mirrors the reference semantics per SURVEY.md §7.0).

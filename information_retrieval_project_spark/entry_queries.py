@@ -18,8 +18,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-K1 = 1.2
-B = 0.75
+from .queryexec.bm25 import (
+    B,
+    K1,
+    bm25_contrib,
+    local_relation,
+    query_terms_df,
+    topk,
+    with_df,
+)
+
 BM25_QUERY = ["join", "spark", "window"]     # terms present in the driver corpus
 LM_QUERY = ["table", "query"]
 
@@ -157,6 +165,23 @@ SQL_COLLECTION_STATS = f"""
 """
 
 
+def _bm25_contribs(tf, terms, w=None):
+    """(term, doc_id, ..., contrib) candidate rows of the broadcast `terms`
+    relation, BM25 contributions over collection statistics cross-joined in
+    as columns (n_docs, avgdl), so no statistic is collected. w: a weight
+    column of `terms` that scales each contribution."""
+    ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    stats = ds.agg(
+        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
+    )
+    return (
+        with_df(tf, terms)
+        .join(ds, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .withColumn("contrib", bm25_contrib(F.col("n_docs"), F.col("avgdl"), w=w))
+    )
+
+
 def _bm25_scores(spark, sf_dir, terms: list[str]) -> DataFrame:
     """Candidate-doc BM25 scores, fully native column math (SURVEY.md §3.1).
 
@@ -172,26 +197,8 @@ def _bm25_scores(spark, sf_dir, terms: list[str]) -> DataFrame:
     Downstream composition (phrase/facet semi-joins, rank windows) reads the
     materialized scores instead of re-deriving the whole subtree."""
     tf = _tf(spark, sf_dir).persist()
-    ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    stats = ds.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    terms_df = spark.createDataFrame([(t,) for t in sorted(set(terms))], "term string")
-    cand = tf.join(F.broadcast(terms_df), "term")
-    dfq = cand.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
-        cand.join(F.broadcast(dfq), "term")
-        .join(ds, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .withColumn(
-            "contrib",
-            F.col("idf") * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / F.col("avgdl"))),
-        )
+        _bm25_contribs(tf, query_terms_df(spark, terms))
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
@@ -200,49 +207,13 @@ def _bm25_scores(spark, sf_dir, terms: list[str]) -> DataFrame:
     return out
 
 
-def _rank_limit(scored, k: int):
-    """The deterministic rank idiom shared by every top-k gate: ORDER BY
-    score DESC, doc_id ASC LIMIT k (TakeOrderedAndProject — per-partition
-    heaps) then row_number over the k survivors. Constant nullable int
-    partition key (doc_id*0 — never NaN, unlike score*0; ADVICE r3) keeps
-    the single-partition window intentional and warning-free."""
-    w = Window.partitionBy(F.col("doc_id") * 0).orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w))
-        .select("rank", "doc_id", "score")
-    )
-
-
 def _bm25_scores_weighted(tf, wterms, exclude_doc=None):
     """Per-doc BM25 over a (term, w) weight relation, contributions scaled
     by w, score rounded to 5 decimals — the shared scorer behind the
     PRF and MoreLikeThis gates (weights 1.0 reproduce plain BM25). df is
     the term's full-collection df; exclude_doc drops one doc_id BEFORE the
     aggregate (MoreLikeThis never returns its seed)."""
-    ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    stats = ds.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    cand = tf.join(F.broadcast(wterms), "term")
-    dfq = cand.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        cand.join(F.broadcast(dfq), "term")
-        .join(ds, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .withColumn(
-            "contrib",
-            F.col("w") * F.col("idf") * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len") / F.col("avgdl"))),
-        )
-    )
+    scored = _bm25_contribs(tf, wterms, w=F.col("w"))
     if exclude_doc is not None:
         scored = scored.filter(F.col("doc_id") != exclude_doc)
     return scored.groupBy("doc_id").agg(
@@ -299,18 +270,7 @@ SQL_BM25_SCORES = _bm25_sql(BM25_QUERY, with_topk=False)
 
 def q_bm25_topk(spark, sf_dir):
     s = _bm25_scores(spark, sf_dir, BM25_QUERY)
-    # constant nullable int key: the window runs over the 10 post-limit
-    # rows by design — the key silences the WindowExec single-partition
-    # warning (doc_id*0, never NaN; see queryexec/bm25.topk)
-    w = Window.partitionBy(F.col("doc_id") * 0).orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        s.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(10)
-        .withColumn("rank", F.row_number().over(w))
-        .select("rank", "doc_id", F.round("score", 5).alias("score"))
-    )
+    return topk(s, 10).select("rank", "doc_id", F.round("score", 5).alias("score"))
 
 
 SQL_BM25_TOPK = _bm25_sql(BM25_QUERY, with_topk=True)
@@ -1090,23 +1050,18 @@ def q_bm25_topk_compressed(spark, sf_dir):
 
 
 def q_bm25_topk_sharded(spark, sf_dir):
-    """BM25 top-10 via the document-sharded per-shard WAND serving path
+    """BM25 top-10 served from a document-sharded index
     (queryexec/sharded.py) — oracle is the same SQL BM25: proves the
-    sharded kernel + global-idf + top-k merge end-to-end."""
+    global-df join, the decode and the shared scorer end-to-end."""
     from .index.build import collection_stats, doc_stats, tokenize_tf
-    from .queryexec.sharded import (
-        bm25_topk_sharded,
-        build_sharded_index,
-        shard_doc_stats,
-    )
+    from .queryexec.sharded import bm25_topk_sharded, build_sharded_index
 
     tf = tokenize_tf(_docs_as_corpus(spark, sf_dir))
     ds = doc_stats(tf).cache()
     cs = collection_stats(ds).collect()[0]
     idx = build_sharded_index(tf, n_shards=8)
-    sds = shard_doc_stats(ds, n_shards=8)
     out = bm25_topk_sharded(
-        spark, idx, sds, cs["n_docs"], cs["avgdl"], BM25_QUERY, k=10
+        spark, idx, ds, cs["n_docs"], cs["avgdl"], BM25_QUERY, k=10
     ).select("rank", "doc_id", F.round("score", 5).alias("score"))
     out = out.localCheckpoint(eager=True)
     ds.unpersist()
@@ -1226,9 +1181,7 @@ SQL_EMB_NEAR_DUP_PAIRS = _emb_near_dup_sql()
 
 def q_boolean_and_docs(spark, sf_dir):
     """Conjunctive retrieval: documents containing ALL query terms — the
-    relational form of posting-list intersection (SURVEY.md §2.3; the WAND
-    kernel's merge path is the served form, pytest-proven equal to
-    exhaustive scoring)."""
+    relational form of posting-list intersection (SURVEY.md §2.3)."""
     toks = _tokens(spark, sf_dir).distinct()
     return (
         toks.filter(F.col("term").isin(BM25_QUERY))
@@ -1352,7 +1305,7 @@ def q_more_like_this(spark, sf_dir):
         .limit(MLT_N_TERMS)
         .select("term", F.lit(1.0).alias("w"))
     )
-    out = _rank_limit(
+    out = topk(
         _bm25_scores_weighted(tf, seed_terms, exclude_doc=MLT_DOC), 10
     )
     out = out.localCheckpoint(eager=True)
@@ -2005,7 +1958,7 @@ def q_bm25_boosted_topk(spark, sf_dir):
             5,
         ).alias("score"),
     )
-    return _rank_limit(boosted, 10)
+    return topk(boosted, 10)
 
 
 SQL_BM25_BOOSTED_TOPK = f"""
@@ -2045,10 +1998,10 @@ def q_hybrid_rrf_topk(spark, sf_dir):
     # weighted scorer at weight 1.0 (identical values to _bm25_scores —
     # both round the same sum to 5 decimals), QL via its tf_df parameter
     tf = _tf(spark, sf_dir).persist()
-    w1 = spark.createDataFrame(
-        [(t, 1.0) for t in sorted(set(BM25_QUERY))], "term string, w double"
+    w1 = local_relation(
+        spark, [(t, 1.0) for t in sorted(set(BM25_QUERY))], "term string, w double"
     )
-    b_top = _rank_limit(
+    b_top = topk(
         _bm25_scores_weighted(tf, w1), RRF_DEPTH
     ).select("doc_id", F.col("rank").alias("b_rank"))
     ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
@@ -2068,7 +2021,7 @@ def q_hybrid_rrf_topk(spark, sf_dir):
             ).alias("score"),
         )
     )
-    out = _rank_limit(fused, 10)
+    out = topk(fused, 10)
     out = out.localCheckpoint(eager=True)
     tf.unpersist()
     return out
@@ -2455,7 +2408,7 @@ def q_bm25_phrase_topk(spark, sf_dir):
         scores.join(phrase_docs, "doc_id", "left_semi")
         .select("doc_id", F.round("score", 5).alias("score"))
     )
-    return _rank_limit(filtered, 5)
+    return topk(filtered, 5)
 
 
 SQL_BM25_PHRASE_TOPK = f"""
@@ -2553,7 +2506,7 @@ def q_bm25_proximity_topk(spark, sf_dir):
     boosted = scores.join(prox, "doc_id", "left").select(
         "doc_id", F.round(F.col("score") * boost, 5).alias("score")
     )
-    return _rank_limit(boosted, 10)
+    return topk(boosted, 10)
 
 
 SQL_BM25_PROXIMITY_TOPK = f"""
@@ -2648,7 +2601,7 @@ def q_prf_bm25_topk(spark, sf_dir):
     scores so near-ties cannot flip membership between engine and oracle."""
     orig = sorted(set(BM25_QUERY))
     tf = _tf(spark, sf_dir).persist()
-    w1 = spark.createDataFrame([(t, 1.0) for t in orig], "term string, w double")
+    w1 = local_relation(spark, [(t, 1.0) for t in orig], "term string, w double")
     fb_docs = (
         _bm25_scores_weighted(tf, w1)
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2665,7 +2618,7 @@ def q_prf_bm25_topk(spark, sf_dir):
         .select("term", F.lit(float(PRF_BETA)).alias("w"))
     )
     w2 = w1.unionByName(exp_terms)
-    out = _rank_limit(_bm25_scores_weighted(tf, w2), 10)
+    out = topk(_bm25_scores_weighted(tf, w2), 10)
     out = out.localCheckpoint(eager=True)
     tf.unpersist()
     return out
@@ -2779,7 +2732,7 @@ def q_bm25_topk_faceted(spark, sf_dir):
     filtered = scores.join(facet_docs, "doc_id", "left_semi").select(
         "doc_id", F.round("score", 5).alias("score")
     )
-    return _rank_limit(filtered, 5)
+    return topk(filtered, 5)
 
 
 SQL_BM25_TOPK_FACETED = f"""

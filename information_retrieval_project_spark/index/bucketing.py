@@ -22,8 +22,10 @@ def term_bucket_expr(term_buckets: int, term: Column | str = "term") -> Column:
 def bucket_values_for_terms(spark, terms: list[str], term_buckets: int) -> list[int]:
     """Bucket values the given query terms hash to — computed with the SAME
     expression the writer used (never reimplement the hash driver-side)."""
+    from ..queryexec.bm25 import query_terms_df
+
     rows = (
-        spark.createDataFrame([(t,) for t in sorted(set(terms))], "term string")
+        query_terms_df(spark, terms)
         .select(term_bucket_expr(term_buckets).alias("tb"))
         .distinct()
         .collect()

@@ -10,5 +10,4 @@ from .tfidf import tfidf_cosine_topk, tfidf_weights  # noqa: F401
 from .wand import (  # noqa: F401
     bm25_phrase_topk_compressed,
     bm25_topk_compressed,
-    wand_topk,
 )

@@ -9,16 +9,19 @@ choices required by BASELINE.json north_star):
     k1 = 1.2, b = 0.75; each unique query term counts once (qtf ignored);
     tie-break: score DESC, doc_id ASC (deterministic).
 
-The plan is fully native (no Python in the hot path): broadcast the tiny
-query-term list into an equi-join against the (term, doc_id, tf) relation,
-compute the score as column arithmetic inside whole-stage codegen, aggregate
-per doc, and finish with TakeOrderedAndProject (ORDER BY ... LIMIT k).
+This module is the package's one BM25 scorer: `bm25_contrib` is the only
+copy of the formula, and `score_rows` sums it over (term, doc_id, tf, df)
+rows, whether they come from the tf relation (`with_df`) or from the
+decoded stored index (queryexec/wand, queryexec/sharded). The plan is fully
+native after the rows: a doc_stats join, the score as column arithmetic
+inside whole-stage codegen, a per-doc aggregate, and TakeOrderedAndProject
+(ORDER BY ... LIMIT k) or the per-query window (`topk_per_query`).
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -44,6 +47,63 @@ def query_terms_df(spark: SparkSession, tokens: list[str]) -> DataFrame:
     return local_relation(spark, [(t,) for t in sorted(set(tokens))], "term string")
 
 
+def bm25_contrib(
+    n_docs: int | Column,
+    avgdl: float | Column,
+    k1: float = K1,
+    b: float = B,
+    w: Column | None = None,
+) -> Column:
+    """The package's one BM25 expression: the per-(term, doc) contribution
+    over the `tf`, `df` and `doc_len` columns. idf is computed inline from
+    the df column: no per-term idf subtree to distinct and broadcast (each
+    was one more scheduled job per served query). `n_docs` and `avgdl` are literals or columns (the gates cross-join them
+    in). `w` scales the idf first, `(w · idf) · tf-part`, the evaluation
+    order of the weighted gates' DuckDB SQL."""
+    n_docs = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
+    avgdl = avgdl if isinstance(avgdl, Column) else F.lit(float(avgdl))
+    idf = F.log(1.0 + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    if w is not None:
+        idf = w * idf
+    return (
+        idf
+        * (F.col("tf") * (k1 + 1.0))
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    )
+
+
+def with_df(tf_df: DataFrame, terms: DataFrame) -> DataFrame:
+    """(term, doc_id, tf) rows of the broadcast `terms` relation with each
+    term's df joined on: the scoring rows the decoded index yields, built
+    from the tf relation. df is counted over the candidate rows only."""
+    cand = tf_df.join(F.broadcast(terms), "term")
+    dfq = cand.groupBy("term").agg(F.count("*").alias("df"))
+    return cand.join(F.broadcast(dfq), "term")
+
+
+def score_rows(
+    rows: DataFrame,
+    doc_stats_df: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    k1: float = K1,
+    b: float = B,
+    queries: DataFrame | None = None,
+) -> DataFrame:
+    """(term, doc_id, tf, df) rows -> (doc_id, score): join doc_stats, sum
+    the codegen contributions per doc. With a (query_id, term) relation
+    `queries` (broadcast), per (query_id, doc_id) instead. Every served and
+    corpus-side BM25 scorer ends here."""
+    scored = rows.join(doc_stats_df, "doc_id").withColumn(
+        "contrib", bm25_contrib(n_docs, avgdl, k1, b)
+    )
+    keys = ["doc_id"]
+    if queries is not None:
+        scored = scored.join(F.broadcast(queries), "term")
+        keys = ["query_id", "doc_id"]
+    return scored.groupBy(*keys).agg(F.sum("contrib").alias("score"))
+
+
 def bm25_scores(
     tf_df: DataFrame,
     doc_stats_df: DataFrame,
@@ -60,30 +120,7 @@ def bm25_scores(
     already filtered down, so df is computed on |query| rows per term), one
     shuffle keyed by doc_id for the join with doc_stats + final aggregation.
     """
-    cand = tf_df.join(F.broadcast(terms), "term")  # BHJ: prunes to query terms
-    df_per_term = cand.groupBy("term").agg(F.count("*").alias("df"))
-    idf = df_per_term.withColumn(
-        "idf",
-        F.log(
-            1.0
-            + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ),
-    ).select("term", "idf")
-    scored = (
-        cand.join(F.broadcast(idf), "term")
-        .join(doc_stats_df, "doc_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1
-                * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-            ),
-        )
-    )
-    return scored.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
+    return score_rows(with_df(tf_df, terms), doc_stats_df, n_docs, avgdl, k1, b)
 
 
 def topk(scores: DataFrame, k: int) -> DataFrame:
@@ -103,6 +140,25 @@ def topk(scores: DataFrame, k: int) -> DataFrame:
     return out.withColumn("rank", F.row_number().over(w)).select(
         "rank", "doc_id", "score"
     )
+
+
+def topk_per_query(scores: DataFrame, k: int) -> DataFrame:
+    """(query_id, doc_id, score) -> the top k of each query_id as
+    (query_id, rank, doc_id, score), ties by doc_id ASC. Spark plans the
+    rank filter as a WindowGroupLimit, Partial before the query_id shuffle
+    and Final after it, so each partition ships at most k rows per query."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        scores.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "score")
+    )
+
+
+def query_pairs_df(spark: SparkSession, queries: dict[int, list[str]]) -> DataFrame:
+    """The distinct (query_id, term) pairs of a query set, JVM-local."""
+    pairs = sorted({(qid, t) for qid, toks in queries.items() for t in toks})
+    return local_relation(spark, pairs, "query_id long, term string")
 
 
 def bm25_topk(
@@ -137,31 +193,7 @@ def bm25_topk_batch(
     by query_id. df/idf stay per-term GLOBAL quantities shared by all
     queries — they are computed once from the candidate rows of the union of
     query terms, not per query."""
-    pairs = sorted({(qid, t) for qid, toks in queries.items() for t in set(toks)})
-    qdf = local_relation(spark, pairs, "query_id long, term string")
-    uniq_terms = qdf.select("term").distinct()
-    cand = tf_df.join(F.broadcast(uniq_terms), "term")
-    dfq = cand.groupBy("term").agg(F.count("*").alias("df"))
-    idf = dfq.withColumn(
-        "idf",
-        F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-    ).select("term", "idf")
-    scored = (
-        cand.join(F.broadcast(idf), "term")
-        .join(doc_stats_df, "doc_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))),
-        )
-        .join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    qdf = query_pairs_df(spark, queries)
+    rows = with_df(tf_df, qdf.select("term").distinct())
+    scored = score_rows(rows, doc_stats_df, n_docs, avgdl, k1, b, queries=qdf)
+    return topk_per_query(scored, k)

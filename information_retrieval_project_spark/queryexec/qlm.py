@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bm25 import topk
+from .bm25 import query_terms_df, topk
 
 MU = 300.0  # Dirichlet pseudo-count; frozen engine choice (gate constant)
 
@@ -38,8 +38,7 @@ def ql_dirichlet_scores(
     mu: float = MU,
 ) -> DataFrame:
     """(doc_id, score) for docs matching >= 1 in-collection query term."""
-    terms = sorted(set(query_tokens))
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = query_terms_df(spark, query_tokens)
     # collection statistics: cf per query term + total token count
     totals = tf_df.agg(F.sum("tf").alias("coll_total"))
     cf = (

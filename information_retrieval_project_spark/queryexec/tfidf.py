@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bm25 import topk
+from .bm25 import local_relation, topk
 
 
 def tfidf_weights(tf_df: DataFrame, n_docs: int) -> DataFrame:
@@ -48,8 +48,8 @@ def tfidf_cosine_topk(
     counts: dict[str, int] = {}
     for t in query_tokens:
         counts[t] = counts.get(t, 0) + 1
-    qdf = spark.createDataFrame(
-        [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
+    qdf = local_relation(
+        spark, [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
     )
     df_per_term = tf_df.groupBy("term").agg(F.count("*").alias("df"))
     qw = (

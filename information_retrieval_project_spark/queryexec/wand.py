@@ -1,23 +1,17 @@
-"""Block-max WAND top-k over compressed postings + the distributed
-compressed-index query path.
+"""The compressed-index query path: posting decode and served top-k.
 
-The kernel is pure numpy over decoded (doc_id, tf) runs with per-block max-tf
-metadata (codec.block_max_meta): blocks whose best-possible score cannot beat
-the current k-th score are skipped without decoding their docs' contributions.
-Classic algorithm (Broder et al. 2003; Ding & Suel 2011 block-max variant —
-public literature); the reference scores every document every query
-(data_manager.py:126), so WAND is the engine's scale substitute.
+The index rows for the (few) query terms are filtered with partition
+pruning on term_bucket, decoded exhaustively by one Arrow-batch UDF (the
+plan's only Python operator), then scored by queryexec/bm25.score_rows:
+doc_stats join, codegen BM25 sum, top-k, all native after the decode.
 
-Distributed path: the index rows for the (few) query terms are filtered with
-partition pruning on term_bucket, decoded exhaustively by one Arrow-batch
-UDF, joined to doc_stats, aggregated, top-k — all native after the decode.
-The single-node kernel is used by tests (WAND == exhaustive property) and
-by the per-shard scorer.
+Block-max candidate generation (blockmax_prune_info, decode_candidates with
+`prune=`) is a measured diagnostic, not a serve path: its per-block upper
+bounds (Ding & Suel 2011) are the only other place the BM25 idf appears.
 """
 
 from __future__ import annotations
 
-import heapq
 from collections.abc import Iterator
 
 import numpy as np
@@ -26,140 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.codec import BLOCK, decode_postings
-from .bm25 import B, K1, local_relation, topk
+from .bm25 import B, K1, query_pairs_df, score_rows, topk, topk_per_query
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
+    """BM25 idf as a Python float, for the block-max upper bounds only;
+    scores come from bm25.bm25_contrib."""
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-
-
-def bm25_tf_component(tf, doc_len, avgdl: float, k1: float = K1, b: float = B):
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * doc_len / avgdl))
-
-
-def wand_topk(
-    postings: dict[str, tuple[np.ndarray, np.ndarray]],
-    doc_len: dict[int, int],
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    block_max_tf: dict[str, np.ndarray] | None = None,
-    k1: float = K1,
-    b: float = B,
-    idf_override: dict[str, float] | None = None,
-    stats: dict | None = None,
-) -> list[tuple[int, float]]:
-    """Exact top-k via block-max WAND. postings: term → (sorted doc_ids, tfs).
-
-    Returns [(doc_id, score)] sorted by (score desc, doc_id asc). Exact:
-    pruning only skips docs provably below the entry threshold.
-    idf_override supplies GLOBAL idf when postings are one shard of a
-    document-sharded index (queryexec/sharded.py)."""
-    terms = [t for t in postings if postings[t][0].size > 0]
-    if not terms:
-        return []
-    idf = idf_override or {t: bm25_idf(n_docs, postings[t][0].size) for t in terms}
-    # per-term upper bound on the tf component is (k1+1) when tf→∞; tighter:
-    # use max tf with the *minimum* length normalizer (dl→0 ⇒ denom tf+k1(1-b))
-    ub = {}
-    for t in terms:
-        mt = float(postings[t][1].max())
-        ub[t] = idf[t] * (mt * (k1 + 1.0)) / (mt + k1 * (1.0 - b))
-    # block-level upper bounds for skipping
-    bub = {}
-    for t in terms:
-        if block_max_tf is not None and t in block_max_tf:
-            bmt = block_max_tf[t].astype(np.float64)
-        else:
-            d, tf = postings[t]
-            nb = (d.size + BLOCK - 1) // BLOCK
-            bmt = np.array(
-                [tf[i * BLOCK : (i + 1) * BLOCK].max() for i in range(nb)],
-                dtype=np.float64,
-            )
-        bub[t] = idf[t] * (bmt * (k1 + 1.0)) / (bmt + k1 * (1.0 - b))
-
-    cursors = {t: 0 for t in terms}  # index into postings[t]
-    heap: list[tuple[float, int]] = []  # (score, -?) min-heap of top-k
-    INF = np.iinfo(np.int64).max
-    n_scored = n_block_skips = 0
-
-    def cur_doc(t):
-        c = cursors[t]
-        d = postings[t][0]
-        return int(d[c]) if c < d.size else INF
-
-    while True:
-        order = sorted(terms, key=cur_doc)
-        # accumulate term upper bounds until they could beat the threshold
-        theta = heap[0][0] if len(heap) >= k else -1.0
-        acc = 0.0
-        pivot_term = None
-        for t in order:
-            if cur_doc(t) == INF:
-                break
-            acc += ub[t]
-            if acc > theta + 1e-12:
-                pivot_term = t
-                break
-        if pivot_term is None:
-            break
-        pivot_doc = cur_doc(pivot_term)
-        if pivot_doc == INF:
-            break
-        first_doc = cur_doc(order[0])
-        if first_doc == pivot_doc:
-            # block-max check: refine the bound using block maxima at pivot
-            block_bound = 0.0
-            active = []
-            for t in order:
-                if cur_doc(t) > pivot_doc:
-                    break
-                blk = cursors[t] // BLOCK
-                # advance the block view to the one containing pivot_doc
-                d = postings[t][0]
-                c = cursors[t]
-                while (blk + 1) * BLOCK <= c or (
-                    (blk + 1) * BLOCK < d.size and d[min((blk + 1) * BLOCK, d.size) - 1] < pivot_doc
-                ):
-                    blk += 1
-                block_bound += bub[t][min(blk, len(bub[t]) - 1)]
-                active.append(t)
-            if len(heap) >= k and block_bound <= heap[0][0] + 1e-12:
-                # skip: advance the lowest cursor past pivot_doc
-                n_block_skips += 1
-                t0 = order[0]
-                d0 = postings[t0][0]
-                cursors[t0] = int(np.searchsorted(d0, pivot_doc + 1))
-                continue
-            # fully score pivot_doc
-            n_scored += 1
-            dl = doc_len.get(pivot_doc, avgdl)
-            s = 0.0
-            for t in active:
-                d, tf = postings[t]
-                c = cursors[t]
-                j = int(np.searchsorted(d, pivot_doc))
-                if j < d.size and d[j] == pivot_doc:
-                    s += idf[t] * bm25_tf_component(float(tf[j]), float(dl), avgdl, k1, b)
-                    cursors[t] = j + 1
-            if len(heap) < k:
-                heapq.heappush(heap, (s, -pivot_doc))
-            elif (s, -pivot_doc) > heap[0]:
-                heapq.heapreplace(heap, (s, -pivot_doc))
-        else:
-            # advance all cursors before the pivot to pivot_doc
-            for t in order:
-                if cur_doc(t) >= pivot_doc:
-                    break
-                d = postings[t][0]
-                cursors[t] = int(np.searchsorted(d, pivot_doc))
-    if stats is not None:
-        stats["n_scored"] = n_scored
-        stats["n_block_skips"] = n_block_skips
-        stats["n_candidates"] = int(sum(postings[t][0].size for t in terms))
-    out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-    return [(-nd, s) for s, nd in out]
 
 
 def _decode(index_rows: DataFrame, keep_blocks=None) -> DataFrame:
@@ -224,45 +91,6 @@ def decode_top_blocks(index_rows: DataFrame, n_blocks: int) -> DataFrame:
     return _decode(index_rows, keep)
 
 
-def _idf_col(n_docs: int):
-    """idf as a codegen expression over the decoded df column — no
-    distinct + Exchange + BroadcastExchange subtree (each was a scheduled
-    job per serve at ~0.1-0.2 s of fixed latency)."""
-    return F.log(
-        1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-
-
-def _contrib_col(n_docs: int, avgdl: float, k1: float, b: float):
-    """Per-(term, doc) BM25 contribution over (df, tf, doc_len) columns."""
-    return (
-        _idf_col(n_docs)
-        * (F.col("tf") * (k1 + 1.0))
-        / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(float(avgdl)))
-        )
-    )
-
-
-def _score_decoded(
-    cand: DataFrame,
-    doc_stats_df: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """(term, doc_id, tf, df) candidates -> (doc_id, score): idf inline from
-    the decoded df column, join doc_stats, sum codegen contributions."""
-    return (
-        cand.join(doc_stats_df, "doc_id")
-        .withColumn("contrib", _contrib_col(n_docs, avgdl, k1, b))
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-
-
 def blockmax_prune_info(
     index_rows: DataFrame,
     doc_stats_df: DataFrame,
@@ -319,7 +147,7 @@ def blockmax_prune_info(
     nb = max(1, -(-2 * k // BLOCK) + 1)  # ceil(2k/BLOCK)+1 blocks per row
     sample = decode_top_blocks(index_rows, nb)
     top = (
-        _score_decoded(sample, doc_stats_df, n_docs, avgdl, k1, b)
+        score_rows(sample, doc_stats_df, n_docs, avgdl, k1, b)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
         .collect()
@@ -417,7 +245,7 @@ def bm25_scores_compressed(
     cand = decode_candidates(prune_terms(index_df, query_tokens, term_buckets))
     if candidate_docs is not None:
         cand = cand.join(candidate_docs, "doc_id", "left_semi")
-    return _score_decoded(cand, doc_stats_df, n_docs, avgdl, k1, b)
+    return score_rows(cand, doc_stats_df, n_docs, avgdl, k1, b)
 
 
 def bm25_topk_compressed(
@@ -524,8 +352,8 @@ def bm25_topk_batch_compressed(
     """Whole-query-SET serving from the stored compressed index →
     (query_id, rank, doc_id, score): ONE bucket-pruned index scan and ONE
     decode for the UNION of all queries' terms, contributions joined to
-    the broadcast (query_id, term) relation (a JVM-local relation, see
-    bm25.local_relation: no job of its own), aggregated per
+    the broadcast (query_id, term) relation (JVM-local, see
+    bm25.query_pairs_df: no job of its own), aggregated per
     (query_id, doc_id), ranked per query_id. The index-served sibling of
     queryexec/bm25.bm25_topk_batch — |Q| separate queries would decode
     shared hot terms |Q| times; the batch decodes each term once. df/idf
@@ -533,37 +361,19 @@ def bm25_topk_batch_compressed(
     batch. round_scores: round BEFORE ranking (the decode path's float
     summation order differs from the corpus-side oracle's, so ranking must
     tie on the rounded value both sides)."""
-    from pyspark.sql import Window
-
     from ..index.bucketing import prune_terms
 
     union_terms = sorted({t for toks in queries.values() for t in toks})
     rows = prune_terms(index_df, union_terms, term_buckets)
-    qdf = local_relation(
-        spark,
-        sorted({(qid, t) for qid, toks in queries.items() for t in toks}),
-        "query_id long, term string",
-    )
-    scored = (
-        decode_candidates(rows)
-        .join(doc_stats_df, "doc_id")
-        .withColumn("contrib", _contrib_col(n_docs, avgdl, k1, b))
-        .join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
+    scored = score_rows(
+        decode_candidates(rows), doc_stats_df, n_docs, avgdl, k1, b,
+        queries=query_pairs_df(spark, queries),
     )
     if round_scores is not None:
         scored = scored.select(
             "query_id", "doc_id", F.round("score", round_scores).alias("score")
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return topk_per_query(scored, k)
 
 
 def bm25_proximity_topk_compressed(

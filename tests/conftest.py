@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 import uuid
 
@@ -38,3 +39,30 @@ def jobs_run(spark):
             sc.setLocalProperty("spark.job.description", None)
 
     return run
+
+
+@pytest.fixture
+def partial_limit_below_query_shuffle():
+    """partial_limit_below_query_shuffle(df) -> whether df's physical plan
+    has a `WindowGroupLimit ... Partial` below an Exchange hash-partitioned
+    on query_id alone: each partition keeps only its top rows per query
+    before the shuffle."""
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    def check(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        ).splitlines()
+        for i, line in enumerate(plan):
+            if not re.search(r"Exchange hashpartitioning\(query_id#\d+L?, \d+\)", line):
+                continue
+            for below in plan[i + 1 :]:
+                if depth(below) <= depth(line):
+                    break
+                if re.search(r"WindowGroupLimit .*\bPartial$", below.rstrip()):
+                    return True
+        return False
+
+    return check

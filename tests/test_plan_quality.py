@@ -109,13 +109,16 @@ def test_capped_band_join_stays_hash_equi(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_batch_bm25_window_partitioned_by_query(spark, sf_dir):
+def test_batch_bm25_window_partitioned_by_query(
+    spark, sf_dir, partial_limit_below_query_shuffle
+):
     """The query-set rank window must be PARTITIONED by query_id (parallel
     across queries) and the (query_id, term) relation broadcast — the whole
-    point of the one-plan batch form. Asserted on the library function's
-    plan directly: the gate wrapper localCheckpoints its k-row result (to
-    unpersist tf without a lingering cache), which replaces the visible
-    plan with a checkpoint scan."""
+    point of the one-plan batch form — with the rank limit applied per
+    partition (WindowGroupLimit Partial) before the query_id shuffle.
+    Asserted on the library function's plan directly: the gate wrapper
+    localCheckpoints its k-row result (to unpersist tf without a lingering
+    cache), which replaces the visible plan with a checkpoint scan."""
     from pyspark.sql import functions as F
 
     from information_retrieval_project_spark.queryexec.bm25 import (
@@ -136,6 +139,29 @@ def test_batch_bm25_window_partitioned_by_query(spark, sf_dir):
     # on query_id; an unpartitioned window would plan SinglePartition instead
     assert "hashpartitioning(query_id" in p
     assert "TakeOrderedAndProject" in p or "Window" in p
+    assert partial_limit_below_query_shuffle(out), p
+
+
+def test_query_constant_relations_are_jvm_local(spark, sf_dir):
+    """The query-term relations of the QL-Dirichlet and TF-IDF rankers are
+    LocalTableScans built once on the driver: a createDataFrame(list)
+    relation plans a Python-RDD scan (ExistingRDD), one more job of Python
+    tasks per query."""
+    from information_retrieval_project_spark.queryexec.qlm import (
+        ql_dirichlet_topk,
+    )
+    from information_retrieval_project_spark.queryexec.tfidf import (
+        tfidf_cosine_topk,
+    )
+
+    tf = EQ._tf(spark, sf_dir)
+    ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    ql = ql_dirichlet_topk(spark, tf, ds, EQ.BM25_QUERY, k=5)
+    # tfidf_cosine_topk collects the query norm while building its plan
+    cos = tfidf_cosine_topk(spark, tf, ds.count(), EQ.BM25_QUERY, k=5)
+    for out in (ql, cos):
+        p = plan(out)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, p
 
 
 def test_phrase_match_joins_stay_equi(spark, sf_dir):

@@ -1,7 +1,8 @@
-"""Doc-sharded WAND serving path == unsharded native BM25 (rank + score)."""
+"""Doc-sharded serving path == unsharded native BM25 (rank + score)."""
+
+import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from information_retrieval_project_spark.corpus import generate_corpus
 from information_retrieval_project_spark.index.build import (
@@ -15,7 +16,6 @@ from information_retrieval_project_spark.queryexec.sharded import (
     bm25_topk_sharded,
     build_sharded_index,
     global_term_df,
-    shard_doc_stats,
 )
 
 QUERIES = [
@@ -27,18 +27,22 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def built(spark, tmp_path_factory):
+    """tf (cached), and the sharded index and doc stats stored as parquet
+    and read back, so a serve plan shows only the serve's operators."""
     corpus = generate_corpus(spark, 500, partitions=4)
     tf = tokenize_tf(with_doc_id(corpus)).cache()
-    ds = doc_stats(tf).cache()
+    out = tmp_path_factory.mktemp("sharded")
+    build_sharded_index(tf, n_shards=8).write.parquet(str(out / "index"))
+    doc_stats(tf).write.parquet(str(out / "doc_stats"))
+    idx = spark.read.parquet(str(out / "index"))
+    ds = spark.read.parquet(str(out / "doc_stats"))
     cs = collection_stats(ds).collect()[0]
-    idx = build_sharded_index(tf, n_shards=8).cache()
-    sds = shard_doc_stats(ds, n_shards=8).cache()
-    return tf, ds, cs, idx, sds
+    return tf, ds, cs, idx
 
 
 def test_global_df_sums_across_shards(built):
-    tf, _, _, idx, _ = built
+    tf, _, _, idx = built
     want = {r["term"]: r["df"] for r in tf.groupBy("term").count().withColumnRenamed("count", "df").collect()}
     got = {r["term"]: r["df"] for r in global_term_df(idx).collect()}
     assert got == want
@@ -46,9 +50,20 @@ def test_global_df_sums_across_shards(built):
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_sharded_wand_equals_unsharded(spark, built, q):
-    tf, ds, cs, idx, sds = built
+    """The sharded serve ranks and scores like the unsharded corpus-side
+    BM25, and its plan has exactly one Python operator, the posting
+    decode (MapInPandas): no per-shard Python kernel (cogroup). The name
+    is kept from the per-shard WAND serve this path replaced."""
+    tf, ds, cs, idx = built
+    sharded = bm25_topk_sharded(spark, idx, ds, cs["n_docs"], cs["avgdl"], q, k=10)
+    plan = sharded._sc._jvm.PythonSQLUtils.explainString(
+        sharded._jdf.queryExecution(), "formatted"
+    )
+    python_ops = set(re.findall(r"\((\d+)\) (\w*(?:Python|Pandas|Arrow)\w*)", plan))
+    assert [op for _, op in python_ops] == ["MapInPandas"], plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
     a = bm25_topk(spark, tf, ds, cs["n_docs"], cs["avgdl"], q, k=10).collect()
-    b = bm25_topk_sharded(spark, idx, sds, cs["n_docs"], cs["avgdl"], q, k=10).collect()
+    b = sharded.collect()
     assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
     for x, y in zip(a, b):
         assert abs(x["score"] - y["score"]) < 1e-9

@@ -1,79 +1,27 @@
-"""WAND kernel == exhaustive scoring (property test, SURVEY.md §5.2.3)."""
+"""The served BM25 top-k over the compressed index == exhaustive scoring
+of the same tf rows (property tests, SURVEY.md §5.2.3), and its plan shape."""
 
 import numpy as np
 import pytest
 
-from information_retrieval_project_spark.queryexec.wand import (
-    bm25_idf,
-    bm25_tf_component,
-    wand_topk,
-)
 
-
-def exhaustive_topk(postings, doc_len, n_docs, avgdl, k):
+def exhaustive_topk(postings, doc_len, n_docs, avgdl, k, k1=1.2, b=0.75):
+    """Reference BM25 top-k: every posting of every term scored in Python.
+    postings: term -> (doc_ids, tfs); returns [(doc_id, score)] by
+    (score DESC, doc_id ASC)."""
     scores = {}
     for t in sorted(postings):
         d, tf = postings[t]
         if d.size == 0:
             continue
-        idf = bm25_idf(n_docs, d.size)
+        idf = float(np.log(1.0 + (n_docs - d.size + 0.5) / (d.size + 0.5)))
         for doc, f in zip(d.tolist(), tf.tolist()):
-            scores[doc] = scores.get(doc, 0.0) + idf * bm25_tf_component(
-                float(f), float(doc_len[doc]), avgdl
+            f, dl = float(f), float(doc_len[doc])
+            scores[doc] = scores.get(doc, 0.0) + idf * (
+                f * (k1 + 1.0) / (f + k1 * (1.0 - b + b * dl / avgdl))
             )
     ranked = sorted(scores.items(), key=lambda x: (-x[1], x[0]))
     return ranked[:k]
-
-
-@pytest.mark.parametrize("seed", range(20))
-def test_wand_equals_exhaustive(seed):
-    rng = np.random.default_rng(seed)
-    n_docs = int(rng.integers(50, 2000))
-    doc_ids = np.arange(n_docs, dtype=np.int64) * 7 - 3000  # incl. negatives
-    doc_len = {int(d): int(rng.integers(10, 500)) for d in doc_ids}
-    avgdl = float(np.mean(list(doc_len.values())))
-    n_terms = int(rng.integers(1, 6))
-    postings = {}
-    for t in range(n_terms):
-        df = int(rng.integers(1, n_docs + 1))
-        sel = np.sort(rng.choice(doc_ids, size=df, replace=False))
-        tfs = rng.integers(1, 20, size=df).astype(np.int64)
-        postings[f"t{t}"] = (sel.astype(np.int64), tfs)
-    for k in (1, 10, 100):
-        got = wand_topk(postings, doc_len, n_docs, avgdl, k)
-        want = exhaustive_topk(postings, doc_len, n_docs, avgdl, k)
-        assert [d for d, _ in got] == [d for d, _ in want], (seed, k)
-        for (_, a), (_, b) in zip(got, want):
-            assert abs(a - b) < 1e-9
-
-
-def test_wand_empty_and_missing_terms():
-    assert wand_topk({}, {}, 10, 5.0, 5) == []
-    postings = {"t": (np.array([], dtype=np.int64), np.array([], dtype=np.int64))}
-    assert wand_topk(postings, {}, 10, 5.0, 5) == []
-
-
-def test_wand_actually_prunes_on_skewed_postings():
-    """On a skewed corpus (one selective high-idf term + one huge common
-    term) WAND must skip scoring most candidates — the whole point of the
-    pruning. Exactness is asserted alongside."""
-    rng = np.random.default_rng(99)
-    n_docs = 50_000
-    doc_ids = np.arange(n_docs, dtype=np.int64)
-    doc_len = {int(d): int(rng.integers(50, 200)) for d in doc_ids}
-    avgdl = float(np.mean(list(doc_len.values())))
-    common = (doc_ids, rng.integers(1, 3, size=n_docs).astype(np.int64))
-    rare_ids = np.sort(rng.choice(doc_ids, size=200, replace=False))
-    rare = (rare_ids.astype(np.int64), rng.integers(5, 20, size=200).astype(np.int64))
-    postings = {"common": common, "rare": rare}
-    stats = {}
-    got = wand_topk(postings, doc_len, n_docs, avgdl, k=10, stats=stats)
-    want = exhaustive_topk(postings, doc_len, n_docs, avgdl, 10)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    # pivot-based pruning must skip the vast majority of candidates
-    # (block-max refinement only fires with 3+ near-threshold terms, so
-    # n_block_skips may legitimately be 0 here)
-    assert stats["n_scored"] < stats["n_candidates"] * 0.1, stats
 
 
 def _reference(rows):
@@ -358,12 +306,15 @@ def test_fused_blockmax_construction_runs_no_driver_actions(spark, monkeypatch, 
         _assert_topk(by_q[qid], _reference_topk(ref, toks, 5), qid)
 
 
-def test_served_plan_one_python_stage_pruned_scan(spark, tmp_path):
+def test_served_plan_one_python_stage_pruned_scan(
+    spark, tmp_path, partial_limit_below_query_shuffle
+):
     """Plan shape of the served single and batch top-k over a stored,
     term-bucketed index: exactly ONE Python-evaluated operator (the posting
     decode) under any Python-UDF node name, no semi-join, and the query
     terms' buckets in the scan's PartitionFilters; the batch's query
-    relation is a LocalTableScan, with no ExistingRDD scan."""
+    relation is a LocalTableScan, with no ExistingRDD scan, and its
+    per-query rank limit runs partially before the query_id shuffle."""
     import re
 
     from information_retrieval_project_spark.queryexec.wand import (
@@ -397,6 +348,7 @@ def test_served_plan_one_python_stage_pruned_scan(spark, tmp_path):
     # `plan` is the batch's: its (query_id, term) relation is JVM-local,
     # a Python-RDD scan would cost one more job of Python tasks per batch
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert partial_limit_below_query_shuffle(batch), plan
 
 
 @pytest.mark.parametrize("seed", [5, 23])
