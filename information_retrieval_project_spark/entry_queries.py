@@ -294,7 +294,7 @@ def q_tfidf_cosine(spark, sf_dir):
         )
     )
     norm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w_raw") ** 2)).alias("nrm"))
-    terms_df = spark.createDataFrame([(t,) for t in terms], "term string")
+    terms_df = local_relation(spark, [(t,) for t in terms], "term string")
     qw = (
         terms_df.join(dfs, "term", "left")
         .na.fill({"df": 0})
@@ -796,7 +796,7 @@ def q_laplace_lm(spark, sf_dir):
     tf = _tf(spark, sf_dir)
     ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     vocab = tf.select("term").distinct().agg(F.count("*").alias("v"))
-    terms_df = spark.createDataFrame([(t,) for t in sorted(set(LM_QUERY))], "qterm string")
+    terms_df = local_relation(spark, [(t,) for t in sorted(set(LM_QUERY))], "qterm string")
     grid = ds.crossJoin(F.broadcast(terms_df)).crossJoin(F.broadcast(vocab))
     joined = grid.join(
         tf.withColumnRenamed("term", "qterm"),
@@ -2691,9 +2691,7 @@ def q_facet_counts(spark, sf_dir):
     from .queryexec.facets import facet_counts, matched_docs
 
     tf = _tf(spark, sf_dir)
-    terms = spark.createDataFrame(
-        [(t,) for t in sorted(set(BM25_QUERY))], "term string"
-    )
+    terms = local_relation(spark, [(t,) for t in sorted(set(BM25_QUERY))], "term string")
     match = matched_docs(tf, terms)
     meta = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
     return facet_counts(match, meta, ["lang", "source"])

@@ -1,11 +1,12 @@
 """The ONE term-bucket partitioning scheme shared by every stored relation.
 
 Both the main compressed index (index/build.write_index → queryexec/wand
-pruning) and the positional index (index/positions) partition storage by
-`pmod(xxhash64(term), m)` and prune query-time scans by applying the same
-expression to the query terms. The hash, the modulus handling, and the
-prune condition live HERE so the write and read sides can never drift
-apart — a mismatched modulus silently drops valid postings (ADVICE r1)."""
+pruning) and the positional index (index/positions) are written by
+write_bucketed, partitioned by `pmod(xxhash64(term), m)`, and prune
+query-time scans by applying the same expression to the query terms. The
+hash, the modulus handling, the write and the prune condition live HERE
+so the write and read sides can never drift apart — a mismatched modulus
+silently drops valid postings (ADVICE r1)."""
 
 from __future__ import annotations
 
@@ -17,6 +18,17 @@ def term_bucket_expr(term_buckets: int, term: Column | str = "term") -> Column:
     """Stable bucket of `term` (a column or column name; the writer's `term`
     column by default) under modulus term_buckets."""
     return F.pmod(F.xxhash64(term), F.lit(int(term_buckets)))
+
+
+def write_bucketed(df: DataFrame, path: str, term_buckets: int) -> None:
+    """Write df as parquet at path, partitioned by its term bucket. Readers
+    get df's columns plus a `term_bucket int` partition column."""
+    (
+        df.withColumn("term_bucket", term_bucket_expr(term_buckets))
+        .repartition("term_bucket")
+        .write.partitionBy("term_bucket")
+        .parquet(path)
+    )
 
 
 def bucket_values_for_terms(spark, terms: list[str], term_buckets: int) -> list[int]:

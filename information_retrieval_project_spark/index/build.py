@@ -18,18 +18,18 @@ refit, data_manager.py:122-123, with a build-once index):
       skew handling required by BASELINE.json north_rule (AQE skew-join covers
       joins, not groupBy hot keys — SURVEY.md §4.2).
     → one arrow_udf encodes every posting list of an Arrow batch at once
-      (codec.encode_posting_lists: delta+varbyte, block-max metadata)
-    → index(term, df, postings:binary, bm_docs:binary, bm_tfs:binary)
+      (codec.encode_posting_lists: delta+varbyte, per-block max tf)
+    → index(term, df, max_tf, postings:binary, bm_tfs:binary)
     → collection_stats(n_docs, avgdl, total_terms)
+    → write_index: one snapshot of the store (index/manifest.py), the index
+      term-bucketed, doc_stats beside it, the collection stats in state.json
 
 All row-wise compute is vectorized pandas/Arrow (input_hint rule).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from collections.abc import Iterator
 from dataclasses import dataclass
 from functools import partial
@@ -40,6 +40,8 @@ import pyarrow as pa  # module scope: arrow_udf resolves its string annotations 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import manifest
+from .bucketing import write_bucketed
 from .codec import encode_posting_lists
 
 TF_SCHEMA = "doc_id long, term string, tf long"
@@ -52,7 +54,9 @@ _SPLIT_PATTERNS = {
     "nltk": "[^a-z0-9_]+",  # \w+ on lowered ascii text
     "keras": r"\s+",
 }
-INDEX_SCHEMA = "term string, df long, max_tf long, postings binary, bm_docs binary, bm_tfs binary"
+# committed in every index snapshot's state.json; a snapshot of another
+# format is refused, not misread. v2: index rows carry no bm_docs column.
+INDEX_FORMAT = "postings-v2"
 
 
 def with_doc_id(corpus: DataFrame) -> DataFrame:
@@ -188,12 +192,12 @@ def _encode_pairs_udf():
     per-term Python loop (that loop was most of the build's encode stage)."""
     from pyspark.sql.functions import arrow_udf
 
-    @arrow_udf("postings binary, bm_docs binary, bm_tfs binary")
+    @arrow_udf("postings binary, bm_tfs binary")
     def encode(pairs: pa.Array) -> pa.Array:
         doc_ids, tfs = pairs.flatten().flatten()
         return pa.StructArray.from_arrays(
             encode_posting_lists(pairs.offsets, doc_ids, tfs),
-            names=["postings", "bm_docs", "bm_tfs"],
+            names=["postings", "bm_tfs"],
         )
 
     return encode
@@ -284,7 +288,6 @@ def build_postings(
             "df",
             "max_tf",
             F.col("_enc.postings").alias("postings"),
-            F.col("_enc.bm_docs").alias("bm_docs"),
             F.col("_enc.bm_tfs").alias("bm_tfs"),
         )
     merged = (
@@ -302,7 +305,6 @@ def build_postings(
         "df",
         "max_tf",
         F.col("_enc.postings").alias("postings"),
-        F.col("_enc.bm_docs").alias("bm_docs"),
         F.col("_enc.bm_tfs").alias("bm_tfs"),
     )
 
@@ -379,72 +381,66 @@ def write_index(
     cs: DataFrame,
     out_dir: str,
     term_buckets: int = 32,
-    fmt: str = "parquet",
-) -> None:
-    """Persist the index partitioned by a stable term-hash bucket so query-time
-    term lookups prune partitions (SURVEY.md §4.2 partition pruning). The
-    bucket count is recorded in an `index_meta` sidecar — the query path must
-    hash query terms with the SAME modulus or pruning silently drops valid
-    postings (ADVICE r1). The sidecar is one JSON line the driver writes
-    itself (index_meta/part-00000.json), not a Spark job.
-
-    fmt: "parquet" (default; the sandbox has no Iceberg jars) or "iceberg"
-    (north_rule target layout — path-based HadoopTables; on a real cluster
-    the atomic-snapshot commit replaces the rename protocol of
-    pipelines/lineage.py, see its module docstring). Identical layout and
-    partitioning either way; read back with read_index(fmt=...)."""
-    from .bucketing import term_bucket_expr
-
-    (
-        idx.withColumn("term_bucket", term_bucket_expr(term_buckets))
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .format(fmt)
-        .save(f"{out_dir}/index")
+    state: dict | None = None,
+) -> str:
+    """Commit (index, doc_stats, collection_stats) as the next snapshot of
+    the store at out_dir (index/manifest.py); returns its name. The index is
+    term-bucketed (index/bucketing.py) so query-time term lookups prune
+    partitions (SURVEY.md §4.2). One state.json holds the format, the
+    modulus, the one-row cs collected on the driver, each relation's schema
+    and the caller's `state`. Queries must hash terms with the SAME modulus
+    or pruning silently drops valid postings (ADVICE r1): it commits with
+    the data, so nothing pairs an index with another modulus or stats."""
+    manifest.committed(out_dir, INDEX_FORMAT, required=False)
+    staging = manifest.begin(out_dir)
+    write_bucketed(idx, os.path.join(staging, "index"), term_buckets)
+    ds.write.parquet(os.path.join(staging, "doc_stats"))
+    stats = cs.collect()[0]
+    return manifest.commit(
+        out_dir,
+        staging,
+        {
+            **(state or {}),
+            "index_format": INDEX_FORMAT,
+            "term_buckets": int(term_buckets),
+            "n_docs": stats["n_docs"],
+            "avgdl": stats["avgdl"],
+            "total_terms": stats["total_terms"],
+            "schemas": {
+                "index": f"{_ddl(idx)}, term_bucket int",
+                "doc_stats": _ddl(ds),
+            },
+        },
     )
-    ds.write.mode("overwrite").format(fmt).save(f"{out_dir}/doc_stats")
-    cs.write.mode("overwrite").format(fmt).save(f"{out_dir}/collection_stats")
-    meta_dir = os.path.join(out_dir, "index_meta")
-    shutil.rmtree(meta_dir, ignore_errors=True)
-    os.makedirs(meta_dir)
-    with open(os.path.join(meta_dir, "part-00000.json"), "w") as f:
-        meta = {"term_buckets": int(term_buckets), "fmt": fmt}
-        f.write(json.dumps(meta, separators=(",", ":")) + "\n")
+
+
+def _ddl(df: DataFrame) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
 
 def read_index_meta(spark: SparkSession, out_dir: str) -> dict:
-    """Sidecar layout metadata, read on the driver with no Spark job (the
-    JSON-lines part file(s) of `index_meta/`, as Spark's JSON writer left
-    them in indexes written before the sidecar was driver-written);
-    {'term_buckets': 32, 'fmt': 'parquet'} fallback ONLY for indexes
-    written before the sidecar existed (dir absent). A sidecar that exists
-    but cannot be parsed raises: silently assuming 32 buckets against an
-    index written with a different modulus would reintroduce the pruning
-    bug (valid postings dropped) the sidecar prevents (ADVICE r2)."""
-    meta_dir = os.path.join(out_dir, "index_meta")
-    if not os.path.isdir(meta_dir):
-        return {"term_buckets": 32, "fmt": "parquet"}  # legacy layout
-    lines = []
-    for name in sorted(os.listdir(meta_dir)):
-        if name.startswith("part-"):
-            with open(os.path.join(meta_dir, name)) as f:
-                lines += [line for line in f if line.strip()]
-    try:
-        d = json.loads(lines[0])
-        return {"term_buckets": int(d["term_buckets"]), "fmt": d.get("fmt") or "parquet"}
-    except (ValueError, LookupError, TypeError) as e:
-        raise ValueError(
-            f"corrupt index_meta sidecar at {meta_dir}: {type(e).__name__}: {e}"
-        ) from e
+    """The committed snapshot's state.json (term_buckets, index_format,
+    collection stats, schemas, caller state), read on the driver: no Spark
+    job. Raises SnapshotStoreError naming the dir for any other layout."""
+    return manifest.committed(out_dir, INDEX_FORMAT)[1]
 
 
 def read_index(
-    spark: SparkSession, out_dir: str, fmt: str = "parquet"
+    spark: SparkSession, out_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    r = spark.read.format(fmt)
-    return (
-        r.load(f"{out_dir}/index"),
-        r.load(f"{out_dir}/doc_stats"),
-        r.load(f"{out_dir}/collection_stats"),
+    """(index, doc_stats, collection_stats) of the committed snapshot of
+    the store at out_dir, the one reader of what write_index commits. Both
+    relations are read with the schemas recorded in state.json and the
+    stats come from it as a JVM-local one-row relation: no Spark job.
+    Raises SnapshotStoreError naming the dir for the four-dir layout
+    written before snapshots and for a snapshot of another format."""
+    from ..queryexec.bm25 import local_relation
+
+    snap, state = manifest.committed(out_dir, INDEX_FORMAT)
+    idx, ds = (
+        spark.read.schema(state["schemas"][name]).parquet(os.path.join(snap, name))
+        for name in ("index", "doc_stats")
     )
+    stats = [(state["n_docs"], state["avgdl"], state["total_terms"])]
+    cs_schema = "n_docs long, avgdl double, total_terms long"
+    return idx, ds, local_relation(spark, stats, cs_schema)

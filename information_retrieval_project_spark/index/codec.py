@@ -14,8 +14,8 @@ never loop over terms in Python (a per-term loop of the per-list encoder
 was most of a build's encode stage).
 
 Block-max metadata for WAND: postings are chunked into BLOCK docs; per block
-we keep the max tf and max doc_id so the scorer can skip whole blocks that
-cannot reach the current top-k threshold (SURVEY.md §4.2).
+the index stores the max tf so the scorer can skip whole blocks that cannot
+reach the current top-k threshold (SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -122,17 +122,11 @@ def decode_postings(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     return doc_ids, tfs.astype(np.int64)
 
 
-def block_max_meta(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per-block (max doc_id, max tf) for block-max WAND skipping."""
-    n = len(doc_ids)
-    nblocks = (n + BLOCK - 1) // BLOCK
-    pad = nblocks * BLOCK - n
-    d = np.pad(np.asarray(doc_ids, dtype=np.int64), (0, pad), constant_values=np.iinfo(np.int64).min)
-    t = np.pad(np.asarray(tfs, dtype=np.int64), (0, pad), constant_values=0)
-    return (
-        d.reshape(nblocks, BLOCK).max(axis=1),
-        t.reshape(nblocks, BLOCK).max(axis=1),
-    )
+def block_max_meta(tfs: np.ndarray) -> np.ndarray:
+    """Per-block max tf of one posting list, for block-max WAND skipping."""
+    t = np.asarray(tfs, dtype=np.int64)
+    nblocks = (t.size + BLOCK - 1) // BLOCK
+    return np.pad(t, (0, nblocks * BLOCK - t.size)).reshape(nblocks, BLOCK).max(axis=1)
 
 
 def _binary_array(offsets: np.ndarray, data: np.ndarray) -> pa.BinaryArray:
@@ -146,16 +140,16 @@ def _binary_array(offsets: np.ndarray, data: np.ndarray) -> pa.BinaryArray:
 
 def encode_posting_lists(
     offsets: np.ndarray | pa.Array, doc_ids: np.ndarray | pa.Array, tfs: np.ndarray | pa.Array
-) -> tuple[pa.BinaryArray, pa.BinaryArray, pa.BinaryArray]:
-    """Encode many posting lists at once → (postings, bm_docs, bm_tfs).
+) -> tuple[pa.BinaryArray, pa.BinaryArray]:
+    """Encode many posting lists at once → (postings, bm_tfs).
 
     List i is doc_ids/tfs[offsets[i] - offsets[0] : offsets[i+1] - offsets[0]]
     (an Arrow ListArray's .offsets and .flatten(), which keep a slice's
     offsets but drop the values before it). Each list obeys encode_postings'
     precondition (doc ids sorted ascending and unique). Element i of the
-    outputs equals encode_postings(d, t) and the varbyte-encoded
-    block_max_meta(d, t) of list i byte for byte, empty lists included; the
-    work is one set of numpy passes over the whole batch.
+    outputs equals encode_postings(d, t) and the varbyte-encoded per-block
+    max tfs (block_max_meta(t)) of list i byte for byte, empty lists
+    included; the work is one set of numpy passes over the whole batch.
     """
     off = np.asarray(offsets, dtype=np.int64)
     off = off - off[0]
@@ -181,22 +175,16 @@ def encode_posting_lists(
     _varbyte_put(buf, deltas, ld, cd[1:] + np.repeat(poff[:-1] + 16 - cd[starts], n))
     _varbyte_put(buf, t, lt, ct[1:] + np.repeat(poff[:-1] + 16 + dlen - ct[starts], n))
 
-    # block-max metadata: a block's max doc id is its last (lists are sorted)
+    # block-max metadata: the max tf of every BLOCK postings
     nb = (n + BLOCK - 1) // BLOCK
     boff = _excl_cumsum(nb)
     bstart = np.repeat(starts - BLOCK * boff[:-1], nb) + BLOCK * np.arange(boff[-1])
-    bend = np.minimum(bstart + BLOCK, np.repeat(off[1:], nb))
-    bm_d = u[bend - 1]
     bm_t = np.maximum.reduceat(t, bstart) if bstart.size else np.empty(0, np.uint64)
-
-    def varbyte_lists(v: np.ndarray) -> pa.BinaryArray:
-        lens = _varbyte_lens(v)
-        c = _excl_cumsum(lens)
-        out = np.empty(int(c[-1]), dtype=np.uint8)
-        _varbyte_put(out, v, lens, c[1:])
-        return _binary_array(c[boff], out)
-
-    return _binary_array(poff, buf), varbyte_lists(bm_d), varbyte_lists(bm_t)
+    lens = _varbyte_lens(bm_t)
+    c = _excl_cumsum(lens)
+    out = np.empty(int(c[-1]), dtype=np.uint8)
+    _varbyte_put(out, bm_t, lens, c[1:])
+    return _binary_array(poff, buf), _binary_array(c[boff], out)
 
 
 def merge_sorted_runs(runs: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:

@@ -1,5 +1,5 @@
-"""Versioned snapshot store: the one commit protocol of the served index
-store (streaming/incremental.py) and the positions store (positions.py).
+"""Versioned snapshot store: the one commit protocol of every stored index
+— the index store (index/build.write_index) and the positions store.
 
 Layout of a store dir:
 
@@ -10,8 +10,8 @@ Layout of a store dir:
     _staging_vNNNNNN/    a snapshot being written
 
 A snapshot is a complete dir of data files plus a driver-written
-state.json (the index store records its incorporated inputs there, the
-positions store also its term-bucket modulus). A commit publishes the
+state.json (the store's `index_format`, term-bucket modulus and caller
+state; committed() is its validated read). A commit publishes the
 staged dir with ONE os.rename, then flips CURRENT atomically (write a tmp
 file, fsync it, os.replace), then garbage-collects. A crash at any point
 leaves CURRENT on a complete snapshot; the next writer removes what the
@@ -95,6 +95,33 @@ def read_state(snapshot: str) -> dict:
     if not isinstance(state, dict):
         raise SnapshotStoreError(f"corrupt {STATE} in {snapshot}")
     return state
+
+
+def committed(
+    store: str, fmt: str, required: bool = True
+) -> tuple[str, dict] | None:
+    """(path, state) of the committed snapshot, written in format `fmt`;
+    None if nothing is committed and not `required`. A snapshot of another
+    format or with an invalid term-bucket modulus raises, naming the dir:
+    misreading either would silently drop valid rows. Writers call it
+    before begin(), so no store stacks a snapshot on another format."""
+    snap = current(store)
+    if snap is None:
+        if required:
+            raise SnapshotStoreError(f"no snapshot committed in {store}")
+        return None
+    state = read_state(snap)
+    if state.get("index_format") != fmt:
+        raise SnapshotStoreError(
+            f"snapshot {snap} is not {fmt!r} (index_format="
+            f"{state.get('index_format')!r}); rebuild it"
+        )
+    tb = state.get("term_buckets")
+    if type(tb) is not int or tb < 1:
+        raise SnapshotStoreError(
+            f"corrupt {STATE} in {snap}: term_buckets={tb!r}"
+        )
+    return snap, state
 
 
 def begin(store: str) -> str:

@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 from .codec import decode_postings, encode_posting_lists, merge_sorted_runs
 
-_IDX_COLS = ["df", "max_tf", "postings", "bm_docs", "bm_tfs"]
-_IDX_TYPE = "df long, max_tf long, postings binary, bm_docs binary, bm_tfs binary"
+_IDX_COLS = ["df", "max_tf", "postings", "bm_tfs"]
+_IDX_TYPE = "df long, max_tf long, postings binary, bm_tfs binary"
 
 
 def _encode_runs(runs: list[tuple[np.ndarray, np.ndarray]]) -> pa.StructArray:
@@ -66,7 +66,7 @@ def _merge_pair_udf():
 
 
 def merge_index(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """Merged compressed index (term, df, max_tf, postings, bm_docs, bm_tfs).
+    """Merged compressed index (term, df, max_tf, postings, bm_tfs).
 
     Segmented indexes (BuildConfig.segment_hot_terms) are not merged here —
     their increment path is simpler: a new segment row per (term, build), no

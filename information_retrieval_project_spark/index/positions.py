@@ -34,10 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest
+from .bucketing import write_bucketed
 from .codec import varbyte_decode, varbyte_encode
 
 POS_SCHEMA = "term string, doc_id long, n_occ long, positions binary"
 TF_POS_SCHEMA = "doc_id long, term string, tf long, positions binary"
+# committed in every snapshot's state.json; a snapshot of another format
+# is refused, not misread
+POSITIONS_FORMAT = "positions-v1"
 
 
 def tokenize_tf_positions(
@@ -130,23 +134,15 @@ def write_positions(
     silent-pruning bug class ADVICE r1 flagged). state: caller state
     committed with the snapshot (e.g. the incorporated corpus files of
     streaming.incremental.incremental_corpus_update)."""
+    manifest.committed(out_dir, POSITIONS_FORMAT, required=False)
     staging = manifest.begin(out_dir)
-    _write_data(pos_idx, staging, term_buckets)
-    manifest.commit(
-        out_dir, staging, {**(state or {}), "term_buckets": int(term_buckets)}
-    )
+    write_bucketed(pos_idx, os.path.join(staging, "data"), term_buckets)
+    _commit(out_dir, staging, term_buckets, state)
 
 
-def _write_data(pos_idx: DataFrame, snapshot: str, term_buckets: int) -> None:
-    from .bucketing import term_bucket_expr
-
-    (
-        pos_idx.withColumn("term_bucket", term_bucket_expr(term_buckets))
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(snapshot, "data"))
-    )
+def _commit(out_dir: str, staging: str, term_buckets: int, state) -> str:
+    fmt = {"index_format": POSITIONS_FORMAT, "term_buckets": int(term_buckets)}
+    return manifest.commit(out_dir, staging, {**(state or {}), **fmt})
 
 
 def _read_data(spark: SparkSession, snapshot: str) -> DataFrame:
@@ -223,21 +219,20 @@ def append_positions(
         if delta_positions is not None
         else build_positions(new_docs_corpus)
     )
-    cur = manifest.current(out_dir)
-    if cur is None:
+    got = manifest.committed(out_dir, POSITIONS_FORMAT, required=False)
+    if got is None:
         write_positions(delta, out_dir, state=state)
         return {"mode": "initial", "linked_files": 0}
-    term_buckets = _state(cur)["term_buckets"]
+    cur, cur_state = got
+    term_buckets = cur_state["term_buckets"]
     staging = manifest.begin(out_dir)
-    _write_data(delta, staging, term_buckets)
+    write_bucketed(delta, os.path.join(staging, "data"), term_buckets)
     linked = _link_tree(
         os.path.join(cur, "data"),
         os.path.join(staging, "data"),
         prefix=f"{os.path.basename(cur)}_",
     )
-    name = manifest.commit(
-        out_dir, staging, {**(state or {}), "term_buckets": term_buckets}
-    )
+    name = _commit(out_dir, staging, term_buckets, state)
     return {"mode": "appended", "linked_files": linked, "snapshot": name}
 
 
@@ -258,8 +253,7 @@ def compact_positions(spark: SparkSession, out_dir: str) -> dict:
     scan planning; compaction is the positional counterpart of
     index/merge.compact_segments. Readers pinned to the old snapshot keep
     their files (one-commit retention)."""
-    snap = _snapshot(out_dir)
-    state = _state(snap)
+    snap, state = manifest.committed(out_dir, POSITIONS_FORMAT)
     n_files_before = _n_data_files(snap)
     write_positions(
         _read_data(spark, snap).select("term", "doc_id", "n_occ", "positions"),
@@ -270,7 +264,7 @@ def compact_positions(spark: SparkSession, out_dir: str) -> dict:
     return {
         "mode": "compacted",
         "files_before": n_files_before,
-        "files_after": _n_data_files(_snapshot(out_dir)),
+        "files_after": _n_data_files(manifest.current(out_dir)),
     }
 
 
@@ -285,9 +279,10 @@ def delete_positions_docs(
     rewrite; at 100 TB this is the rewrite-on-delete path, and bulk
     deletes should batch doc_ids rather than loop. Committed state is
     carried forward."""
-    snap = _snapshot(out_dir)
-    state = _state(snap)
-    tomb = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
+    from ..queryexec.bm25 import local_relation
+
+    snap, state = manifest.committed(out_dir, POSITIONS_FORMAT)
+    tomb = local_relation(spark, [(int(d),) for d in doc_ids], "doc_id long")
     kept = (
         _read_data(spark, snap)
         .select("term", "doc_id", "n_occ", "positions")
@@ -299,31 +294,12 @@ def delete_positions_docs(
     return {"mode": "deleted", "n_tombstones": len(doc_ids)}
 
 
-def _snapshot(out_dir: str) -> str:
-    snap = manifest.current(out_dir)
-    if snap is None:
-        raise ValueError(f"no positional index committed in {out_dir}")
-    return snap
-
-
-def _state(snapshot: str) -> dict:
-    """The snapshot's committed state; raises on a missing or invalid
-    modulus (assuming one would silently drop valid rows)."""
-    state = manifest.read_state(snapshot)
-    tb = state.get("term_buckets")
-    if type(tb) is not int or tb < 1:
-        raise manifest.SnapshotStoreError(
-            f"corrupt {manifest.STATE} in {snapshot}: term_buckets={tb!r}"
-        )
-    return state
-
-
 def read_positions(spark: SparkSession, out_dir: str) -> tuple[DataFrame, int]:
     """(positions DataFrame, term_buckets) of the committed snapshot. The
     modulus is read from the snapshot's state.json on the driver, and the
     data with the schema the writer wrote: no Spark job."""
-    snap = _snapshot(out_dir)
-    return _read_data(spark, snap), _state(snap)["term_buckets"]
+    snap, state = manifest.committed(out_dir, POSITIONS_FORMAT)
+    return _read_data(spark, snap), state["term_buckets"]
 
 
 def prune_terms(

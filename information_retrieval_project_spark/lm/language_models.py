@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..queryexec.bm25 import local_relation
+
 SENT_START = "#S"
 SENT_END = "#E"
 
@@ -79,7 +81,7 @@ def collection_lm(skipgrams: DataFrame) -> DataFrame:
 def _query_bigrams(spark: SparkSession, query_tokens: list[str]) -> DataFrame:
     toks = [SENT_START, *query_tokens, SENT_END]
     pairs = [(a, b) for a, b in zip(toks, toks[1:])]
-    return spark.createDataFrame(pairs, "a string, b string")
+    return local_relation(spark, pairs, "a string, b string")
 
 
 def laplace_scores(
@@ -140,7 +142,7 @@ def jelinek_mercer_scores(
         .withColumn("p_coll", F.when(F.col("cm_a").isNull() | (F.col("cm_a") == 0), 0.0)
                     .otherwise(F.col("ccnt") / F.col("cm_a")))
     )
-    lamb_df = spark.createDataFrame([(l,) for l in lambdas], "lamb double")
+    lamb_df = local_relation(spark, [(float(l),) for l in lambdas], "lamb double")
     return (
         cells.crossJoin(F.broadcast(lamb_df))
         .withColumn("p", F.col("lamb") * F.col("p_doc") + F.col("lamb") * F.col("p_coll"))

@@ -19,12 +19,11 @@ per-partition lineage and index-throughput metrics. Design (SURVEY.md §4.2,
   (one slim groupBy(build_unit) hash pass recomputes all unit fingerprints);
   units built from since-changed input are invalidated and rebuilt
   (ADVICE r1). The final posting build reads all unit outputs (a plain
-  parquet scan) and is itself idempotent (mode=overwrite on the index
-  output).
+  parquet scan) and commits `out_dir/index_store` with write_index.
 
 At cluster scale each unit is a chunk of input partitions, the manifest
 lives on the object store, and Iceberg snapshot commits would replace the
-rename — same protocol, same idempotence argument.
+unit rename — same protocol, same idempotence argument.
 """
 
 from __future__ import annotations
@@ -45,6 +44,7 @@ from ..index.build import (
     doc_stats,
     tokenize_tf,
     with_doc_id,
+    write_index,
 )
 
 
@@ -160,13 +160,15 @@ def resumable_build(
 def finalize_index(
     spark: SparkSession, out_dir: str, cfg: BuildConfig = BuildConfig()
 ) -> None:
-    """Build postings + stats from all committed units (idempotent)."""
+    """Build postings + stats from all committed units and commit them as
+    the next snapshot of the index store at out_dir/index_store (read it
+    with index/build.read_index). Idempotent."""
     tf_df = spark.read.parquet(os.path.join(out_dir, "tf_units"))
     tf_df = tf_df.select("doc_id", "term", "tf")
     ds = doc_stats(tf_df)
-    idx = build_postings(tf_df, cfg)
-    idx.write.mode("overwrite").parquet(os.path.join(out_dir, "index"))
-    ds.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_stats"))
-    collection_stats(ds).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "collection_stats")
+    write_index(
+        build_postings(tf_df, cfg),
+        ds,
+        collection_stats(ds),
+        os.path.join(out_dir, "index_store"),
     )

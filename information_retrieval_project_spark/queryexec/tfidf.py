@@ -44,7 +44,8 @@ def tfidf_cosine_topk(
     k: int = 10,
 ) -> DataFrame:
     """Cosine(query, doc) over L2-normed vectors = dot product, i.e. a
-    broadcast join on term + a per-doc sum (SURVEY.md F4)."""
+    broadcast join on term + a per-doc sum (SURVEY.md F4). Building the
+    plan runs no Spark job."""
     counts: dict[str, int] = {}
     for t in query_tokens:
         counts[t] = counts.get(t, 0) + 1
@@ -61,9 +62,11 @@ def tfidf_cosine_topk(
             * (F.log((1.0 + F.lit(float(n_docs))) / (1.0 + F.col("df"))) + 1.0),
         )
     )
-    qnorm = qw.agg(F.sqrt(F.sum(F.col("qw_raw") ** 2)).alias("qn")).collect()[0]["qn"]
-    qvec = qw.withColumn("qw", F.col("qw_raw") / F.lit(float(qnorm))).select(
-        "term", "qw"
+    # the query norm stays a one-row column of the plan: building the plan
+    # runs no job
+    qnorm = qw.agg(F.sqrt(F.sum(F.col("qw_raw") ** 2)).alias("qn"))
+    qvec = qw.crossJoin(F.broadcast(qnorm)).select(
+        "term", (F.col("qw_raw") / F.col("qn")).alias("qw")
     )
     dw = tfidf_weights(tf_df, n_docs)
     scores = (

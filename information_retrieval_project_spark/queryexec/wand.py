@@ -231,7 +231,7 @@ def bm25_scores_compressed(
     (bm25_topk_compressed).
 
     `term_buckets` MUST match the modulus the index was written with
-    (write_index param, recorded in its index_meta sidecar — see
+    (write_index param, committed in the snapshot's state.json — see
     read_index_meta); a mismatched modulus computes wrong bucket values and
     silently prunes away valid postings (ADVICE r1).
 

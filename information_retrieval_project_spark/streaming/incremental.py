@@ -20,7 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index import manifest
-from ..index.build import BuildConfig, build_postings, tokenize_tf, with_doc_id
+from ..index.build import (
+    INDEX_FORMAT,
+    BuildConfig,
+    build_postings,
+    read_index,
+    tokenize_tf,
+    with_doc_id,
+)
+from ..index.positions import POSITIONS_FORMAT
 
 CORPUS_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -54,31 +62,13 @@ def incremental_tf_ingest(
     q.awaitTermination()
 
 
-def current_snapshot_dir(out_dir: str) -> str:
-    """Path of the committed snapshot (contains index/, doc_stats/,
-    collection_stats/, state.json)."""
-    snap = manifest.current(out_dir)
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot in {out_dir}")
-    return snap
+# the serving handle of an index store is index/build.read_index
+read_served_index = read_index
 
 
-def read_served_index(spark: SparkSession, out_dir: str):
-    """(index, doc_stats, collection_stats) DataFrames of the committed
-    snapshot — the serving handle for queryexec."""
-    snap = current_snapshot_dir(out_dir)
-    return (
-        spark.read.parquet(os.path.join(snap, "index")),
-        spark.read.parquet(os.path.join(snap, "doc_stats")),
-        spark.read.parquet(os.path.join(snap, "collection_stats")),
-    )
-
-
-def _incorporated(snapshot: str | None) -> set[str]:
-    """Input files a committed snapshot already holds."""
-    if snapshot is None:
-        return set()
-    return set(manifest.read_state(snapshot).get("incorporated", ()))
+def _incorporated(committed: tuple[str, dict] | None) -> set[str]:
+    """Input files a committed snapshot (manifest.committed) already holds."""
+    return set(committed[1].get("incorporated", ())) if committed else set()
 
 
 def incremental_index_update(
@@ -91,20 +81,20 @@ def incremental_index_update(
     tf part-files that arrived since the last update into the stored index
     (index/merge.merge_index — untouched terms pass through byte-identical,
     no re-encode), instead of rebuilding from all of history. doc_stats and
-    collection_stats are maintained alongside; read_served_index(out_dir)
-    is directly servable by queryexec after every update.
+    collection_stats are maintained alongside; read_index(out_dir) is
+    directly servable by queryexec after every update.
 
     Crash idempotence (the merge is ADDITIVE — re-applying a delta would SUM
     tf into existing postings — so state and data must commit together):
-    every update commits a complete snapshot (index/ + doc_stats/ +
-    collection_stats/, with the incorporated files in its state.json)
-    through index/manifest.py. A crash at any point leaves CURRENT on the
+    every update commits a complete term-bucketed snapshot through
+    index/build.write_index, at the committed modulus and with the
+    incorporated files in its state.json. A crash at any point leaves CURRENT on the
     previous complete snapshot, and the next run re-merges the same new
     files against the unchanged base. The previous snapshot survives one
     update, so in-flight readers pinned to it keep their files.
     Append-only: re-ingesting a document would sum its tf into existing
     postings; dedupe upstream."""
-    cur = manifest.current(out_dir)
+    cur = manifest.committed(out_dir, INDEX_FORMAT, required=False)
     incorporated = _incorporated(cur)
     files = sorted(glob(os.path.join(tf_dir, "*.parquet")))
     new = [f for f in files if os.path.basename(f) not in incorporated]
@@ -112,7 +102,7 @@ def incremental_index_update(
         return {
             "mode": "noop",
             "new_files": 0,
-            "snapshot": os.path.basename(cur) if cur else None,
+            "snapshot": os.path.basename(cur[0]) if cur else None,
         }
     return _apply_index_delta(
         spark,
@@ -129,7 +119,7 @@ def _apply_index_delta(
     spark: SparkSession,
     delta_tf: DataFrame,
     out_dir: str,
-    cur: str | None,
+    cur: tuple[str, dict] | None,
     incorporated: set[str],
     n_new: int,
     cfg: BuildConfig,
@@ -138,32 +128,24 @@ def _apply_index_delta(
     the delta already materialized as a tf relation — shared by the
     file-driven entry point above and by incremental_corpus_update (whose
     delta comes from ONE fused tokenize pass feeding this index AND the
-    positional store)."""
-    from ..index.build import collection_stats, doc_stats
+    positional store). cur: manifest.committed() of out_dir. The update
+    is written at the committed modulus."""
+    from ..index.build import collection_stats, doc_stats, write_index
 
     delta_idx = build_postings(delta_tf, cfg)
     delta_ds = doc_stats(delta_tf)
     if cur:
         from ..index.merge import merge_doc_stats, merge_index
 
-        merged = merge_index(
-            spark.read.parquet(os.path.join(cur, "index")), delta_idx
-        )
-        ds = merge_doc_stats(
-            spark.read.parquet(os.path.join(cur, "doc_stats")), delta_ds
-        )
-        mode = "merged"
+        base_idx, base_ds, _ = read_index(spark, out_dir)
+        merged = merge_index(base_idx, delta_idx)
+        ds = merge_doc_stats(base_ds, delta_ds)
+        mode, layout = "merged", {"term_buckets": cur[1]["term_buckets"]}
     else:
-        merged, ds, mode = delta_idx, delta_ds, "initial"
-
-    staging = manifest.begin(out_dir)
-    merged.write.mode("overwrite").parquet(os.path.join(staging, "index"))
-    ds.write.mode("overwrite").parquet(os.path.join(staging, "doc_stats"))
-    collection_stats(
-        spark.read.parquet(os.path.join(staging, "doc_stats"))
-    ).write.mode("overwrite").parquet(os.path.join(staging, "collection_stats"))
-    name = manifest.commit(
-        out_dir, staging, {"incorporated": sorted(incorporated)}
+        merged, ds, mode, layout = delta_idx, delta_ds, "initial", {}
+    name = write_index(
+        merged, ds, collection_stats(ds), out_dir,
+        state={"incorporated": sorted(incorporated)}, **layout,
     )
     return {"mode": mode, "new_files": n_new, "snapshot": name}
 
@@ -200,9 +182,11 @@ def incremental_corpus_update(
     pos_dir = os.path.join(out_dir, "positions_store")
     files = sorted(glob(os.path.join(corpus_dir, "*.parquet")))
 
-    cur = manifest.current(idx_dir)
+    cur = manifest.committed(idx_dir, INDEX_FORMAT, required=False)
     inc_idx = _incorporated(cur)
-    inc_pos = _incorporated(manifest.current(pos_dir))
+    inc_pos = _incorporated(
+        manifest.committed(pos_dir, POSITIONS_FORMAT, required=False)
+    )
 
     new_idx = [f for f in files if os.path.basename(f) not in inc_idx]
     new_pos = [f for f in files if os.path.basename(f) not in inc_pos]
@@ -260,7 +244,7 @@ def incremental_corpus_update(
 
 def read_served_positions(spark: SparkSession, out_dir: str):
     """(positions DataFrame, term_buckets) of the corpus-update layout —
-    the positional serving handle next to read_served_index(out_dir +
+    the positional serving handle next to read_index(out_dir +
     '/index_store')."""
     from ..index.positions import read_positions
 

@@ -61,9 +61,7 @@ def test_merge_sums_duplicates():
 def test_block_max():
     d = np.arange(0, 300, dtype=np.int64)
     t = np.arange(1, 301, dtype=np.int64)
-    bm_d, bm_t = block_max_meta(d, t)
-    assert bm_d.tolist() == [127, 255, 299]
-    assert bm_t.tolist() == [128, 256, 300]
+    assert block_max_meta(t).tolist() == [128, 256, 300]
 
 
 def test_compression_ratio_on_dense_ids():
@@ -139,7 +137,7 @@ def _posting_lists(draw):
 @given(_posting_lists(), st.integers(0, 8))
 @settings(max_examples=200, deadline=None)
 def test_batch_encoder_equals_per_list_reference(lists, skip):
-    """encode_posting_lists == encode_postings + varbyte(block_max_meta) byte
+    """encode_posting_lists == encode_postings + varbyte(block max tfs) byte
     for byte on every list, also when the Arrow list array is sliced to a
     non-zero offset (Spark can hand a UDF sliced arrays)."""
     skip = min(skip, len(lists))
@@ -152,12 +150,10 @@ def test_batch_encoder_equals_per_list_reference(lists, skip):
             [pa.array(doc_ids, pa.int64()), pa.array(tfs, pa.int64())], names=["doc_id", "tf"]
         ),
     ).slice(skip)
-    post, bm_docs, bm_tfs = encode_posting_lists(pairs.offsets, *pairs.flatten().flatten())
-    assert len(post) == len(bm_docs) == len(bm_tfs) == len(lists) - skip
+    post, bm_tfs = encode_posting_lists(pairs.offsets, *pairs.flatten().flatten())
+    assert len(post) == len(bm_tfs) == len(lists) - skip
     for i, (d, t) in enumerate(lists[skip:]):
-        bm_d, bm_t = block_max_meta(d, t)
         assert post[i].as_py() == encode_postings(d, t)
-        assert bm_docs[i].as_py() == varbyte_encode(bm_d.astype(np.uint64) + np.uint64(1 << 63))
-        assert bm_tfs[i].as_py() == varbyte_encode(bm_t.astype(np.uint64))
+        assert bm_tfs[i].as_py() == varbyte_encode(block_max_meta(t).astype(np.uint64))
         dd, tt = decode_postings(post[i].as_py())
         assert np.array_equal(dd, d) and np.array_equal(tt, t)

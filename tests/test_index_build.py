@@ -188,10 +188,11 @@ def test_segmented_hot_terms_rank_identical(spark, built):
 # sha256 over the term-sorted stored rows of build_postings(generate_corpus(
 # spark, 1000, seed=42)) with salting on (hot_df_threshold=200), keyed by
 # segment_hot_terms. The rows are the on-disk index format: if this digest
-# changes, the format changed, and that change needs a version in index_meta.
+# changes, the format changed, and that change needs a new
+# build.INDEX_FORMAT, the version every snapshot commits in its state.json.
 GOLDEN_INDEX_SHA256 = {
-    False: "b8edf358fcda017c63ce705cbf407881b9e2cf3d12041fcb02971342c176f63d",
-    True: "2674b8b8e198862eb0cd76e54926425fbc35ddca477c537d4695aed7f2a1affc",
+    False: "ddc63a9ce1553a7066df3126de4e1684ff2f4b30ebbef51929ef8d94609e651a",
+    True: "4c452f819e25961e589576721ab62e1f8d28175466d7066fd99dca80c8aa1eff",
 }
 
 
@@ -205,7 +206,7 @@ def test_index_bytes_match_golden_digest(spark):
         keys = ["term", "segment"] if segmented else ["term"]
         rows = (
             build_postings(tf_df, cfg)
-            .select(*keys, "df", "max_tf", "postings", "bm_docs", "bm_tfs")
+            .select(*keys, "df", "max_tf", "postings", "bm_tfs")
             .orderBy(*keys)
             .collect()
         )
@@ -216,16 +217,18 @@ def test_index_bytes_match_golden_digest(spark):
     tf_df.unpersist()
 
 
-def test_index_meta_sidecar_runs_no_spark_job(spark, tmp_path, jobs_run):
-    """write_index writes its index_meta sidecar on the driver and
-    read_index_meta reads it there: write_index runs exactly the jobs of its
-    three data writes (the sidecar used to be one more), the read runs
-    none, and a sidecar written by Spark's JSON writer (indexes written
-    before) still reads."""
+def test_read_index_runs_no_spark_job(spark, tmp_path, jobs_run):
+    """write_index commits its state.json on the driver: it runs exactly
+    the jobs of its two data writes and of collecting the one-row stats.
+    read_index + read_index_meta + collecting the stats read that
+    state.json and the recorded schemas on the driver and run none, and
+    return what was written."""
     import os
 
-    from information_retrieval_project_spark.index.bucketing import term_bucket_expr
+    from information_retrieval_project_spark.index import manifest
+    from information_retrieval_project_spark.index.bucketing import write_bucketed
     from information_retrieval_project_spark.index.build import (
+        read_index,
         read_index_meta,
         write_index,
     )
@@ -241,28 +244,29 @@ def test_index_meta_sidecar_runs_no_spark_job(spark, tmp_path, jobs_run):
     cs.count()
 
     def data_writes(out):
-        (
-            idx.withColumn("term_bucket", term_bucket_expr(8))
-            .repartition("term_bucket")
-            .write.partitionBy("term_bucket")
-            .parquet(f"{out}/index")
-        )
+        write_bucketed(idx, f"{out}/index", 8)
         ds.write.parquet(f"{out}/doc_stats")
-        cs.write.parquet(f"{out}/collection_stats")
+        return cs.collect()[0]
 
-    _, n_data = jobs_run(lambda: data_writes(str(tmp_path / "data_only")))
+    want_cs, n_data = jobs_run(lambda: data_writes(str(tmp_path / "data_only")))
     out = str(tmp_path / "idx")
     _, n_write = jobs_run(lambda: write_index(idx, ds, cs, out, term_buckets=8))
     assert n_write == n_data
-    assert os.listdir(f"{out}/index_meta") == ["part-00000.json"]
-    with open(f"{out}/index_meta/part-00000.json") as f:
-        assert f.read() == '{"term_buckets":8,"fmt":"parquet"}\n'
-    meta, n_read = jobs_run(lambda: read_index_meta(spark, out))
-    assert meta == {"term_buckets": 8, "fmt": "parquet"} and n_read == 0
+    assert sorted(os.listdir(manifest.current(out))) == [
+        "doc_stats", "index", manifest.STATE,
+    ]
 
-    legacy = str(tmp_path / "legacy")
-    legacy_meta = spark.createDataFrame([(16, "parquet")], "term_buckets int, fmt string")
-    legacy_meta.coalesce(1).write.json(f"{legacy}/index_meta")
-    assert read_index_meta(spark, legacy) == {"term_buckets": 16, "fmt": "parquet"}
+    def read():
+        r_idx, r_ds, r_cs = read_index(spark, out)
+        return r_idx, r_ds, r_cs.collect()[0], read_index_meta(spark, out)
+
+    (r_idx, r_ds, r_cs, meta), n_read = jobs_run(read)
+    assert n_read == 0
+    assert meta["term_buckets"] == 8 and r_cs == want_cs
+    assert (meta["n_docs"], meta["avgdl"], meta["total_terms"]) == tuple(want_cs)
+    assert r_ds.dtypes == ds.dtypes
+    assert r_idx.dtypes == idx.dtypes + [("term_bucket", "int")]
+    key = ["term"]
+    assert r_idx.drop("term_bucket").orderBy(*key).collect() == idx.orderBy(*key).collect()
     for df in (idx, cs, ds):
         df.unpersist()

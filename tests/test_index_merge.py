@@ -29,7 +29,6 @@ def _rows(idx):
             r["df"],
             r["max_tf"],
             bytes(r["postings"]),
-            bytes(r["bm_docs"]),
             bytes(r["bm_tfs"]),
         )
         for r in idx.collect()

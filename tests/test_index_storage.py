@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_project_spark.corpus import generate_corpus
+from information_retrieval_project_spark.index import manifest
 from information_retrieval_project_spark.index.build import (
+    INDEX_FORMAT,
     BuildConfig,
     build_index,
     read_index,
@@ -38,7 +40,7 @@ def test_roundtrip_preserves_index(spark, stored):
 def test_query_stored_index_with_nondefault_bucket_count(spark, stored):
     """Regression (ADVICE r1): querying an index stored with term_buckets=16
     must not silently prune valid postings. The bucket count comes from the
-    index_meta sidecar and is threaded into bm25_topk_compressed; a wrong
+    snapshot's state.json and is threaded into bm25_topk_compressed; a wrong
     modulus (32) on this corpus would drop every query term whose 16-bucket
     and 32-bucket values differ."""
     from information_retrieval_project_spark.queryexec.wand import (
@@ -67,39 +69,14 @@ def test_query_stored_index_with_nondefault_bucket_count(spark, stored):
     assert [(r["doc_id"], round(r["score"], 9)) for r in got] == [
         (r["doc_id"], round(r["score"], 9)) for r in want
     ]
-    # default legacy fallback when no sidecar exists
-    assert read_index_meta(spark, out + "/nonexistent")["term_buckets"] == 32
-
-
-def test_iceberg_index_roundtrip_or_skip(spark, tmp_path):
-    """north_rule names Iceberg as the target table layout. The write/read
-    path is config-gated (write_index/read_index fmt param); this sandbox
-    ships no Iceberg runtime jars, so the test skips cleanly when the data
-    source can't load — on a cluster with the jars it runs end-to-end."""
-    corpus = generate_corpus(spark, 50, partitions=2)
-    idx, ds, cs = build_index(corpus, BuildConfig(hot_df_threshold=1000))
-    out = str(tmp_path / "iceberg_idx")
-    try:
-        write_index(idx, ds, cs, out, term_buckets=8, fmt="iceberg")
-    except Exception as e:  # noqa: BLE001 — classify, skip only for missing jars
-        msg = f"{type(e).__name__}: {e}"
-        if (
-            "iceberg" in msg.lower()
-            or "ClassNotFound" in msg
-            or "DATA_SOURCE_NOT_FOUND" in msg
-            or "Failed to find" in msg
-        ):
-            pytest.skip(f"Iceberg runtime jars not on the classpath ({type(e).__name__})")
-        raise
-    got_idx, got_ds, _ = read_index(spark, out, fmt="iceberg")
-    assert got_idx.count() == idx.count()
-    assert got_ds.count() == ds.count()
-    assert read_index_meta(spark, out)["fmt"] == "iceberg"
+    # no snapshot, no modulus: nothing is assumed
+    with pytest.raises(manifest.SnapshotStoreError, match="no snapshot"):
+        read_index_meta(spark, out + "/nonexistent")
 
 
 def test_term_bucket_partition_pruning(spark, stored):
     out, _ = stored
-    idx = spark.read.parquet(f"{out}/index")
+    idx = read_index(spark, out)[0]
     bucket = idx.filter(F.col("term") == "def").select("term_bucket").collect()[0][0]
     pruned = idx.filter(
         (F.col("term") == "def") & (F.col("term_bucket") == int(bucket))
@@ -116,31 +93,38 @@ def test_term_bucket_partition_pruning(spark, stored):
 
 
 def test_corrupt_index_meta_raises_not_falls_back(spark, tmp_path):
-    """ADVICE r2: a sidecar that EXISTS but can't be parsed must raise —
-    silently assuming 32 buckets against an index written with a different
-    modulus would drop valid postings. Only a genuinely absent sidecar
-    (legacy layout) falls back."""
+    """ADVICE r2: a committed state.json that can't be parsed, or that
+    lacks a valid modulus, must raise — silently assuming 32 buckets
+    against an index written with a different modulus would drop valid
+    postings. A store with nothing committed raises too: there is no
+    fallback."""
     import os
 
-    import pytest
+    def committed_state(name, text):
+        out = str(tmp_path / name)
+        os.makedirs(f"{out}/v000001")
+        with open(f"{out}/v000001/{manifest.STATE}", "w") as f:
+            f.write(text)
+        with open(f"{out}/{manifest.CURRENT}", "w") as f:
+            f.write("v000001")
+        return out
 
-    out = str(tmp_path / "idxmeta")
-    os.makedirs(f"{out}/index_meta")
-    with open(f"{out}/index_meta/part-00000.json", "w") as f:
-        f.write("{this is not json")
-    with pytest.raises(ValueError, match="corrupt index_meta"):
+    out = committed_state("idxmeta", "{this is not json")
+    with pytest.raises(manifest.SnapshotStoreError, match="corrupt state.json"):
         read_index_meta(spark, out)
 
-    # valid JSON but missing the required field is also corruption
-    out2 = str(tmp_path / "idxmeta2")
-    os.makedirs(f"{out2}/index_meta")
-    with open(f"{out2}/index_meta/part-00000.json", "w") as f:
-        f.write('{"something_else": 5}')
-    with pytest.raises(ValueError, match="corrupt index_meta"):
+    # valid JSON of this format but without the modulus is also corruption
+    out2 = committed_state(
+        "idxmeta2", '{"index_format": "%s", "something_else": 5}' % INDEX_FORMAT
+    )
+    with pytest.raises(manifest.SnapshotStoreError, match="term_buckets"):
         read_index_meta(spark, out2)
+    with pytest.raises(manifest.SnapshotStoreError, match="term_buckets"):
+        read_index(spark, out2)
 
-    # absent path = legacy layout -> documented fallback
-    assert read_index_meta(spark, str(tmp_path / "nope"))["term_buckets"] == 32
+    # absent path: nothing committed
+    with pytest.raises(manifest.SnapshotStoreError, match="no snapshot"):
+        read_index_meta(spark, str(tmp_path / "nope"))
 
 
 def _folded_buckets(df):

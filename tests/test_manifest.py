@@ -1,5 +1,5 @@
-"""index/manifest.py: the snapshot commit shared by the served index store
-and the positions store — crashes between its steps, and refusal of every
+"""index/manifest.py: the snapshot commit shared by the index store and
+the positions store — crashes between its steps, and refusal of every
 layout it did not write."""
 
 import os
@@ -12,8 +12,13 @@ from information_retrieval_project_spark.index import manifest
 from information_retrieval_project_spark.index.build import (
     BuildConfig,
     build_postings,
+    collection_stats,
+    doc_stats,
+    read_index,
+    read_index_meta,
     tokenize_tf,
     with_doc_id,
+    write_index,
 )
 from information_retrieval_project_spark.index.positions import (
     append_positions,
@@ -183,6 +188,27 @@ def _fill(root, files):
 
 
 LEGACY_LAYOUTS = {
+    # write_index's store before snapshots: four top-level dirs
+    "index_four_dir": {
+        "index/term_bucket=0/part-0.parquet": "x",
+        "doc_stats/part-0.parquet": "x",
+        "collection_stats/part-0.parquet": "x",
+        "index_meta/part-00000.json": '{"term_buckets":32,"fmt":"parquet"}\n',
+    },
+    # a committed snapshot without index_format: the update store's
+    # unbucketed snapshots (with bm_docs) and the positions store's
+    "index_snapshot_unversioned": {
+        "CURRENT": "v000001",
+        "v000001/index/part-0.parquet": "x",
+        "v000001/doc_stats/part-0.parquet": "x",
+        "v000001/collection_stats/part-0.parquet": "x",
+        "v000001/state.json": '{"incorporated": ["part-old.parquet"]}',
+    },
+    "positions_snapshot_unversioned": {
+        "CURRENT": "v000001",
+        "v000001/data/term_bucket=0/part-0.parquet": "x",
+        "v000001/state.json": '{"incorporated": [], "term_buckets": 4}',
+    },
     # the index store before snapshots: one top-level index
     "index_pre_snapshot": {
         "index/part-0.parquet": "x",
@@ -223,7 +249,12 @@ def test_legacy_layout_is_refused(spark, tmp_path, layout):
     _fill(d, LEGACY_LAYOUTS[layout])
     before = _tree(d)
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, content string")
+    tf = spark.createDataFrame([(1, "a", 1)], "doc_id long, term string, tf long")
+    ds = doc_stats(tf)
     calls = [
+        lambda: read_index(spark, d),
+        lambda: read_index_meta(spark, d),
+        lambda: write_index(build_postings(tf, CFG), ds, collection_stats(ds), d),
         lambda: read_served_index(spark, d),
         lambda: read_positions(spark, d),
         lambda: incremental_index_update(spark, str(tmp_path), d, CFG),
@@ -236,3 +267,43 @@ def test_legacy_layout_is_refused(spark, tmp_path, layout):
         with pytest.raises(manifest.SnapshotStoreError, match=re.escape(d)):
             call()
     assert _tree(d) == before
+
+
+def test_write_index_crash_between_data_writes(spark, tmp_path, monkeypatch):
+    """write_index over a committed store that dies after staging its index
+    but before its doc_stats leaves read_index on the previous complete
+    snapshot; the next write_index commits over the leftovers."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    store = str(tmp_path / "store")
+
+    def write(names):
+        tf = tokenize_tf(_docs(spark, names))
+        ds = doc_stats(tf)
+        write_index(build_postings(tf, CFG), ds, collection_stats(ds), store)
+
+    def stored():
+        idx, ds, cs = read_index(spark, store)
+        rows = {r["term"]: (r["df"], bytes(r["postings"])) for r in idx.collect()}
+        return rows, ds.count(), cs.collect()[0]["n_docs"]
+
+    write(["a"])
+    before = stored()
+    real_parquet = DataFrameWriter.parquet
+
+    def die_on_doc_stats(self, path, *a, **k):
+        if path.endswith("doc_stats"):
+            _die()
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", die_on_doc_stats)
+    with pytest.raises(OSError, match="injected crash"):
+        write(["a", "b"])
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(store, "_staging_v000002", "index"))
+    assert os.path.basename(manifest.current(store)) == "v000001"
+    assert stored() == before == (_IndexStore(spark, tmp_path).one_shot(["a"]), 40, 40)
+
+    write(["a", "b"])
+    assert stored()[1:] == (80, 80)
+    assert sorted(os.listdir(store)) == ["CURRENT", "v000001", "v000002"]

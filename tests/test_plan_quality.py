@@ -142,11 +142,18 @@ def test_batch_bm25_window_partitioned_by_query(
     assert partial_limit_below_query_shuffle(out), p
 
 
-def test_query_constant_relations_are_jvm_local(spark, sf_dir):
-    """The query-term relations of the QL-Dirichlet and TF-IDF rankers are
-    LocalTableScans built once on the driver: a createDataFrame(list)
-    relation plans a Python-RDD scan (ExistingRDD), one more job of Python
-    tasks per query."""
+def test_query_constant_relations_are_jvm_local(spark, sf_dir, tmp_path, monkeypatch, jobs_run):
+    """The query-constant relations of the QL-Dirichlet, TF-IDF and
+    smoothed-LM rankers, of the TF-IDF, Laplace-LM and facet gates and the
+    positions store's delete tombstones are LocalTableScans built once on
+    the driver: a createDataFrame(list) relation plans a Python-RDD scan
+    (ExistingRDD), one more job of Python tasks per query."""
+    from information_retrieval_project_spark.index import positions
+    from information_retrieval_project_spark.lm.language_models import (
+        jelinek_mercer_scores,
+        laplace_scores,
+        skipgram_pairs,
+    )
     from information_retrieval_project_spark.queryexec.qlm import (
         ql_dirichlet_topk,
     )
@@ -156,10 +163,39 @@ def test_query_constant_relations_are_jvm_local(spark, sf_dir):
 
     tf = EQ._tf(spark, sf_dir)
     ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    n_docs = ds.count()
     ql = ql_dirichlet_topk(spark, tf, ds, EQ.BM25_QUERY, k=5)
-    # tfidf_cosine_topk collects the query norm while building its plan
-    cos = tfidf_cosine_topk(spark, tf, ds.count(), EQ.BM25_QUERY, k=5)
-    for out in (ql, cos):
+    # the query norm is a column of the plan, not collected while building it
+    cos, n_jobs = jobs_run(
+        lambda: tfidf_cosine_topk(spark, tf, n_docs, EQ.BM25_QUERY, k=5)
+    )
+    assert n_jobs == 0
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.col("text").alias("content")
+    )
+    sg = skipgram_pairs(docs, s=1)
+    outs = [
+        ql,
+        cos,
+        laplace_scores(spark, sg, 100, EQ.LM_QUERY),
+        jelinek_mercer_scores(spark, sg, EQ.LM_QUERY),
+        EQ.q_laplace_lm(spark, sf_dir),
+        EQ.q_facet_counts(spark, sf_dir),
+    ]
+    # the gate checkpoints its result; plan what it checkpoints
+    monkeypatch.setattr(type(tf), "localCheckpoint", lambda self, eager=True: self)
+    outs.append(EQ.q_tfidf_cosine(spark, sf_dir))
+    monkeypatch.undo()
+    # the tombstone delete's rewrite, planned where it is written
+    store = str(tmp_path / "pos")
+    positions.write_positions(positions.build_positions(docs), store, term_buckets=4)
+    written = []
+    monkeypatch.setattr(
+        positions, "write_positions", lambda df, *a, **k: written.append(df)
+    )
+    positions.delete_positions_docs(spark, store, [1, 2])
+    outs += written
+    for out in outs:
         p = plan(out)
         assert "LocalTableScan" in p and "ExistingRDD" not in p, p
 

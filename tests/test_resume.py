@@ -6,7 +6,11 @@ import os
 import pytest
 
 from information_retrieval_project_spark.corpus import generate_corpus
-from information_retrieval_project_spark.index.build import BuildConfig, build_index
+from information_retrieval_project_spark.index.build import (
+    BuildConfig,
+    build_index,
+    read_index,
+)
 from information_retrieval_project_spark.index.codec import decode_postings
 from information_retrieval_project_spark.pipelines.lineage import (
     finalize_index,
@@ -17,8 +21,8 @@ from information_retrieval_project_spark.pipelines.lineage import (
 CFG = BuildConfig(hot_df_threshold=50, docs_per_salt=100, hot_detection_sample=1.0)
 
 
-def _index_as_dict(spark, path):
-    rows = spark.read.parquet(path).collect()
+def _index_as_dict(spark, out):
+    rows = read_index(spark, os.path.join(out, "index_store"))[0].collect()
     return {
         r["term"]: (r["df"], decode_postings(bytes(r["postings"]))[0].tolist(),
                     decode_postings(bytes(r["postings"]))[1].tolist())
@@ -47,7 +51,7 @@ def test_crash_resume_identical(spark, tmp_path):
                     decode_postings(bytes(r["postings"]))[1].tolist())
         for r in idx.collect()
     }
-    got = _index_as_dict(spark, os.path.join(out, "index"))
+    got = _index_as_dict(spark, out)
     assert got == want
 
     # manifest carries throughput metrics per unit
@@ -92,7 +96,7 @@ def test_changed_input_invalidates_stale_units(spark, tmp_path):
     }
     got = {
         k: (v[0], v[1])
-        for k, v in _index_as_dict(spark, os.path.join(out, "index")).items()
+        for k, v in _index_as_dict(spark, out).items()
     }
     assert got == want
     # and a further rerun is again a no-op

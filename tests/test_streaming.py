@@ -90,11 +90,9 @@ def test_incremental_index_update_merges_only_new_files(spark, tmp_path):
     r2 = incremental_index_update(spark, tf_dir, out, cfg)
     assert r2["mode"] == "merged" and r2["new_files"] >= 1
 
-    from information_retrieval_project_spark.streaming.incremental import (
-        read_served_index,
-    )
+    from information_retrieval_project_spark.index.build import read_index
 
-    m_idx, m_ds, m_cs_df = read_served_index(spark, out)
+    m_idx, m_ds, m_cs_df = read_index(spark, out)
     got = {
         r["term"]: (r["df"], bytes(r["postings"])) for r in m_idx.collect()
     }
@@ -143,14 +141,14 @@ def test_incremental_update_crash_recovery(spark, tmp_path):
 
     import pandas as pd
 
+    from information_retrieval_project_spark.index import manifest
     from information_retrieval_project_spark.index.build import (
         BuildConfig,
         build_postings,
+        read_index,
     )
     from information_retrieval_project_spark.streaming.incremental import (
-        current_snapshot_dir,
         incremental_index_update,
-        read_served_index,
     )
 
     tf_dir = str(tmp_path / "tf3")
@@ -164,7 +162,7 @@ def test_incremental_update_crash_recovery(spark, tmp_path):
     ).parquet(tf_dir)
     r1 = incremental_index_update(spark, tf_dir, out, cfg)
     assert r1["snapshot"] == "v000001"
-    snap1 = current_snapshot_dir(out)
+    snap1 = manifest.current(out)
 
     tokenize_tf(with_doc_id(spark.createDataFrame(p2))).coalesce(1).write.mode(
         "append"
@@ -183,7 +181,7 @@ def test_incremental_update_crash_recovery(spark, tmp_path):
     assert r2["mode"] == "merged" and r2["snapshot"] == "v000002"
     assert not os.path.exists(os.path.join(out, "_staging_v000002"))
 
-    m_idx, _, m_cs_df = read_served_index(spark, out)
+    m_idx, _, m_cs_df = read_index(spark, out)
     got = {
         r["term"]: (r["df"], bytes(r["postings"])) for r in m_idx.collect()
     }
@@ -262,9 +260,9 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
         query_terms_df,
         topk,
     )
+    from information_retrieval_project_spark.index.build import read_index
     from information_retrieval_project_spark.streaming.incremental import (
         incremental_corpus_update,
-        read_served_index,
         read_served_positions,
     )
 
@@ -283,7 +281,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
 
     def _assert_indexed_docs_have_stats():
         # serving assumes every indexed doc has a doc_stats row
-        idx, ds, _ = read_served_index(spark, os.path.join(out, "index_store"))
+        idx, ds, _ = read_index(spark, os.path.join(out, "index_store"))
         indexed = {
             int(d)
             for r in idx.select("postings").collect()
@@ -315,7 +313,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     avgdl = ds_full.agg(F.avg("doc_len")).collect()[0][0]
     query = ["def", "return", "import"]
 
-    idx, ds, cs = read_served_index(spark, os.path.join(out, "index_store"))
+    idx, ds, cs = read_index(spark, os.path.join(out, "index_store"))
     from information_retrieval_project_spark.queryexec.wand import (
         bm25_topk_compressed,
     )
@@ -376,3 +374,48 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     # and the incorporated list caught up — a further run is a noop
     assert incremental_corpus_update(spark, corpus_dir, out)["mode"] == "noop"
     tf_full.unpersist()
+
+
+def test_incremental_update_snapshots_are_term_bucketed(spark, tmp_path):
+    """Every update commits a term-bucketed snapshot at the committed
+    modulus: a query pruned with read_index_meta's term_buckets prunes
+    the scan by term_bucket and equals the unpruned query."""
+    from information_retrieval_project_spark.index.bucketing import prune_terms
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        read_index,
+        read_index_meta,
+    )
+    from information_retrieval_project_spark.queryexec.wand import (
+        bm25_topk_compressed,
+    )
+    from information_retrieval_project_spark.streaming.incremental import (
+        incremental_index_update,
+    )
+
+    tf_dir, out = str(tmp_path / "tf"), str(tmp_path / "idx")
+    cfg = BuildConfig(hot_df_threshold=10_000, hot_detection_sample=1.0)
+    for start in (0, 40):
+        tokenize_tf(
+            with_doc_id(spark.createDataFrame(generate_pdf(40, start=start)))
+        ).coalesce(1).write.mode("append").parquet(tf_dir)
+        incremental_index_update(spark, tf_dir, out, cfg)
+    tb = read_index_meta(spark, out)["term_buckets"]
+    idx, ds, cs = read_index(spark, out)
+    c = cs.collect()[0]
+    toks = ["def", "return", "import"]
+
+    def served(index, term_buckets):
+        rows = bm25_topk_compressed(
+            spark, index, ds, c["n_docs"], c["avgdl"], toks, k=10,
+            term_buckets=term_buckets,
+        ).collect()
+        return [(r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows]
+
+    assert c["n_docs"] == 80
+    assert served(idx, tb) == served(idx.drop("term_bucket"), None)
+    pruned = prune_terms(idx, toks, tb)
+    plan = pruned._sc._jvm.PythonSQLUtils.explainString(
+        pruned._jdf.queryExecution(), "formatted"
+    )
+    assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:300]

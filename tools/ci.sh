@@ -21,7 +21,10 @@ CONTRACT_VANILLA=1 python tools/check_contract.py "$SF"
 
 echo "== 5/5 spark-submit launch + checkpoint-resume + query probe =="
 OUT=$(mktemp -d /tmp/ir_ci_idx.XXXX)
+trap 'rm -rf "$OUT"' EXIT
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1
+test -f "$OUT/index_store/CURRENT"
+echo "index store committed"
 # no `&& echo` after a check: set -e ignores a failure on the left of &&
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1 \
     | grep -q '"units_built_this_run": 0'
@@ -29,6 +32,5 @@ echo "resume no-op ok"
 tools/spark_submit.sh --out "$OUT" --query "def return buffer" --k 5 | tail -1 \
     | python -c 'import json, sys; assert len(json.load(sys.stdin)["hits"]) == 5'
 echo "query mode ok"
-rm -rf "$OUT"
 
 echo "ALL GREEN"

@@ -8,10 +8,11 @@ Usage:
 Build mode: builds the synthetic input_hint corpus, runs the
 checkpoint-resumable build, finalizes the compressed index, and prints
 JSON metrics; re-running with the same --out resumes from the lineage
-manifest. Query mode (--query): loads the finalized index from --out and
-serves a BM25 top-k through bm25_topk_compressed (one bucket-pruned scan,
-one exhaustive posting decode), printing the ranked hits as JSON — the
-full build-then-serve lifecycle through one spark-submit surface.
+manifest. The finalized index is the snapshot store --out/index_store.
+Query mode (--query): reads that store with read_index and serves a BM25
+top-k through bm25_topk_compressed (one bucket-pruned scan at the stored
+modulus, one exhaustive posting decode), printing the ranked hits as JSON
+— the full build-then-serve lifecycle through one spark-submit surface.
 """
 
 from __future__ import annotations
@@ -48,19 +49,22 @@ def main() -> None:
         from information_retrieval_project_spark.functions.textnorm import (
             tokenize,
         )
+        from information_retrieval_project_spark.index.build import (
+            read_index,
+            read_index_meta,
+        )
         from information_retrieval_project_spark.queryexec.wand import (
             bm25_topk_compressed,
         )
 
         t0 = time.time()
-        idx = spark.read.parquet(os.path.join(args.out, "index"))
-        ds = spark.read.parquet(os.path.join(args.out, "doc_stats"))
-        cs = spark.read.parquet(
-            os.path.join(args.out, "collection_stats")
-        ).collect()[0]
+        store = os.path.join(args.out, "index_store")
+        idx, ds, _ = read_index(spark, store)
+        meta = read_index_meta(spark, store)
         tokens = tokenize(args.query)
         hits = bm25_topk_compressed(
-            spark, idx, ds, cs["n_docs"], cs["avgdl"], tokens, k=args.k
+            spark, idx, ds, meta["n_docs"], meta["avgdl"], tokens, k=args.k,
+            term_buckets=meta["term_buckets"],
         ).collect()
         print(
             json.dumps(
