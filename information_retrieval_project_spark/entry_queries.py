@@ -2283,10 +2283,11 @@ SQL_PHRASE_MATCH_DOCS = f"""
 
 def q_phrase_match_indexed(spark, sf_dir):
     """The SAME phrase query served from the POSITIONAL INDEX
-    (index/positions.py): positions are materialized per (term, doc) as
-    delta+varbyte binaries at build time, then the query decodes only the
-    phrase terms' lists — the index-served counterpart of
-    phrase_match_docs, oracled by the identical corpus-side SQL."""
+    (index/positions.py): positions are materialized per (term, doc) as an
+    array<int> at build time, then the query explodes only the phrase
+    terms' lists in native Spark expressions — the index-served
+    counterpart of phrase_match_docs, oracled by the identical corpus-side
+    SQL."""
     from .index.positions import build_positions, phrase_match_indexed
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -2371,7 +2372,7 @@ def q_proximity_match(spark, sf_dir):
     """Proximity search from the POSITIONAL INDEX: docs where PROX terms
     occur within PROX_WINDOW tokens, with the minimum token distance — the
     proximity-ranking primitive (index/positions.proximity_match_indexed).
-    Decode pruned to the two terms; oracled by the corpus-side positional
+    Pruned to the two terms; oracled by the corpus-side positional
     self-join."""
     from .index.positions import build_positions, proximity_match_indexed
 
@@ -2443,8 +2444,8 @@ def q_bm25_phrase_topk_served(spark, sf_dir):
         build_postings,
         collection_stats,
         doc_stats,
+        tokenize_tf_positions,
     )
-    from .index.positions import tokenize_tf_positions
     from .queryexec.wand import bm25_phrase_topk_compressed
 
     # ONE fused tokenize pass feeds both index structures — PERSISTED, or
@@ -2489,7 +2490,7 @@ def q_bm25_proximity_topk(spark, sf_dir):
     min_dist)) for docs whose terms co-occur within PROX_BOOST_WINDOW
     tokens, plain bm25 otherwise. The standard composed ranker (term match
     decides the candidate set, proximity sharpens the order); min_dist
-    comes from the positional index's bounded sorted-merge kernel."""
+    comes from the positional index's per-doc sorted occurrence array."""
     from .index.positions import build_positions, proximity_match_indexed
 
     scores = _bm25_scores(spark, sf_dir, list(PROX))
@@ -2550,8 +2551,8 @@ def q_bm25_proximity_topk_served(spark, sf_dir):
         build_postings,
         collection_stats,
         doc_stats,
+        tokenize_tf_positions,
     )
-    from .index.positions import tokenize_tf_positions
     from .queryexec.wand import bm25_proximity_topk_compressed
 
     fused = tokenize_tf_positions(_docs_as_corpus(spark, sf_dir)).persist()

@@ -7,6 +7,7 @@ from .build import (  # noqa: F401
     read_index,
     read_index_meta,
     tokenize_tf,
+    tokenize_tf_positions,
     with_doc_id,
     write_index,
 )
@@ -27,7 +28,6 @@ from .positions import (  # noqa: F401
     phrase_match_indexed,
     proximity_match_indexed,
     read_positions,
-    tokenize_tf_positions,
     write_positions,
 )
 from .bucketing import prune_terms, term_bucket_expr  # noqa: F401

@@ -1,5 +1,5 @@
-"""Positional index: per-(term, doc) token positions, delta+varbyte encoded,
-and indexed phrase queries over it.
+"""Positional index: per-(term, doc) token positions as a Parquet
+`array<int>`, and indexed phrase and proximity queries over it.
 
 The reference engine is bag-of-words (its TF-IDF scorer never looks at
 positions, data_manager.py:122-126); phrase search is the standard fulltext
@@ -9,112 +9,44 @@ module makes the same query INDEX-served: positions are materialized once at
 build time, so a phrase query touches only its terms' position lists instead
 of re-tokenizing the corpus.
 
-Layout: one row per (term, doc_id) with the sorted position list
-delta+varbyte encoded (positions are small monotone ints — deltas almost
-always fit one byte). Rows group by (term, doc_id), so no group exceeds one
-document's occurrences of one term — hot terms need no salting here; at
-cluster scale the relation is written partitioned by the same term_bucket as
-the main index for query-time pruning.
+Layout (`positions-v2`): one row (term, doc_id, n_occ, positions) per
+(term, doc_id), positions the term's ascending token indices in the doc and
+n_occ its length (the doc's tf of the term). They come from the same Arrow
+tokenize kernel as tf (index/build.tokenize_tf_positions). Rows group by
+(term, doc_id), so no group exceeds one document's occurrences of one term:
+hot terms need no salting here. The relation is written partitioned by the
+same term_bucket as the main index for query-time pruning. A store of
+another format (`positions-v1`, binary lists) is refused, naming its dir.
 
-Phrase execution (n terms): decode each phrase term's lists to
-(doc_id, pos - offset_in_phrase, slot) and count distinct slots per
-(doc_id, aligned_pos) — a full house of n slots is a phrase hit. One shuffle
-on (doc_id, aligned_pos); every stream is term-filtered before the decode.
+Phrase and proximity run as native Spark expressions, no Python stage:
+phrase explodes each phrase term's lists to (doc_id, pos - offset_in_phrase,
+slot) and counts distinct slots per (doc_id, aligned_pos) — a full house of
+n slots is a phrase hit; proximity sorts each doc's occurrences of both
+terms in one array and takes the min gap of adjacent pairs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest
 from .bucketing import write_bucketed
-from .codec import varbyte_decode, varbyte_encode
+from .build import tokenize_tf_positions
 
-POS_SCHEMA = "term string, doc_id long, n_occ long, positions binary"
-TF_POS_SCHEMA = "doc_id long, term string, tf long, positions binary"
+POS_SCHEMA = "term string, doc_id long, n_occ long, positions array<int>"
 # committed in every snapshot's state.json; a snapshot of another format
-# is refused, not misread
-POSITIONS_FORMAT = "positions-v1"
-
-
-def tokenize_tf_positions(
-    corpus_with_id: DataFrame, strategy: str = "code"
-) -> DataFrame:
-    """THE fused tokenize pass (VERDICT r3 #4): corpus (with doc_id) →
-    (doc_id, term, tf, positions:binary) in ONE mapInPandas scan, with ZERO
-    shuffle — every position of a term within a doc lives in that doc's
-    single content row, so the (term, doc_id) group is complete inside the
-    Arrow batch and n_occ IS tf by construction. A deployment building both
-    the inverted index and the positional index derives BOTH relations from
-    this one pass (build_index(positions=True)), so the dominant
-    scan+tokenize stage runs once over the 100 TB corpus, not once per
-    index. A groupBy formulation would shuffle one row per TOKEN; this
-    emits one already-final row per (term, doc) pair."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.textnorm import _TOKEN_PATTERNS
-
-        pat = _TOKEN_PATTERNS[strategy]
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            # null content = zero tokens (matches every other tokenize path);
-            # without fillna, str.len() yields NaN which casts to INT64_MIN
-            # and kills the task in np.repeat
-            tok_lists = pdf["content"].fillna("").str.lower().str.findall(pat)
-            lens = tok_lists.str.len().to_numpy(np.int64)
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            doc_rep = np.repeat(ids, lens)
-            terms = np.concatenate(
-                [np.asarray(t, dtype=object) for t in tok_lists]
-            )
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            pos = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-            # sort by (doc, term, pos) — pos least significant, so each
-            # (doc, term) group's positions come out ascending
-            order = np.lexsort((pos, terms, doc_rep))
-            d, t, p = doc_rep[order], terms[order], pos[order]
-            change = np.empty(d.size, dtype=bool)
-            change[0] = True
-            change[1:] = (d[1:] != d[:-1]) | (t[1:] != t[:-1])
-            gs = np.flatnonzero(change)
-            ge = np.append(gs[1:], d.size)
-            out_t, out_d, out_n, out_b = [], [], [], []
-            for s, e in zip(gs, ge):
-                pp = p[s:e].astype(np.uint64)
-                deltas = np.empty_like(pp)
-                deltas[0] = pp[0]
-                np.subtract(pp[1:], pp[:-1], out=deltas[1:])
-                out_t.append(t[s])
-                out_d.append(int(d[s]))
-                out_n.append(int(e - s))
-                out_b.append(varbyte_encode(deltas))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_d,
-                    "term": out_t,
-                    "tf": out_n,
-                    "positions": out_b,
-                }
-            )
-
-    return corpus_with_id.select("doc_id", "content").mapInPandas(
-        gen, TF_POS_SCHEMA
-    )
+# is refused, not misread. v2: positions are array<int>, not encoded bytes
+POSITIONS_FORMAT = "positions-v2"
 
 
 def build_positions(corpus_with_id: DataFrame) -> DataFrame:
     """corpus (with doc_id) → positional index (term, doc_id, n_occ,
-    positions:binary) — a projection of the fused tokenize_tf_positions
-    pass (n_occ IS tf), kept as the positions-only entry point."""
+    positions array<int>) — a projection of tokenize_tf_positions (n_occ IS
+    tf), kept as the positions-only entry point."""
     return tokenize_tf_positions(corpus_with_id).select(
         "term", "doc_id", F.col("tf").alias("n_occ"), "positions"
     )
@@ -313,48 +245,8 @@ def prune_terms(
 
 
 def decode_position_rows(rows: DataFrame) -> DataFrame:
-    """(term, doc_id, positions) → exploded (term, doc_id, pos), one Arrow
-    pass (inverse of build_positions' encode)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            terms, docs, poss = [], [], []
-            for term, doc, buf in zip(
-                pdf["term"].values, pdf["doc_id"].values, pdf["positions"].values
-            ):
-                p = np.cumsum(varbyte_decode(bytes(buf)), dtype=np.uint64)
-                terms.append(np.full(p.size, term, dtype=object))
-                docs.append(np.full(p.size, doc, dtype=np.int64))
-                poss.append(p.astype(np.int64))
-            if terms:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(terms),
-                        "doc_id": np.concatenate(docs),
-                        "pos": np.concatenate(poss),
-                    }
-                )
-
-    return rows.select("term", "doc_id", "positions").mapInPandas(
-        gen, "term string, doc_id long, pos long"
-    )
-
-
-def min_dist_sorted(a: np.ndarray, b: np.ndarray) -> int:
-    """min |x − y| over x∈a, y∈b for two SORTED int arrays in
-    O((|a|+|b|)·log|b|), fully vectorized: for every x only its two
-    searchsorted neighbors in b can be nearest. The kernel behind
-    proximity_match_indexed (property-tested against the brute-force
-    all-pairs minimum)."""
-    i = np.searchsorted(b, a)
-    best = np.iinfo(np.int64).max
-    left = i > 0
-    if left.any():
-        best = min(best, int((a[left] - b[i[left] - 1]).min()))
-    right = i < b.size
-    if right.any():
-        best = min(best, int((b[i[right]] - a[right]).min()))
-    return best
+    """(term, doc_id, positions) → exploded (term, doc_id, pos)."""
+    return rows.select("term", "doc_id", F.explode("positions").alias("pos"))
 
 
 def proximity_match_indexed(
@@ -368,85 +260,39 @@ def proximity_match_indexed(
     """Docs where term_a and term_b occur within `window` tokens →
     (doc_id, min_dist) — the proximity-ranking primitive.
 
-    Scale-safe kernel (VERDICT r3 #3: the previous per-doc position-list
-    JOIN built every (pa, pb) pair — O(occ_a × occ_b) per doc, 10⁶–10⁸ rows
-    for a stopword-frequency term in one large doc): both lists are already
-    SORTED (delta encoding is monotone), so the min |pa − pb| is a sorted
-    merge — for every a, only its two searchsorted neighbors in b can be
-    nearest. One vectorized O((occ_a + occ_b)·log) pass per doc inside a
-    single Arrow batch; no position pair is ever materialized.
+    Per doc, every position list of both terms is flattened into ONE array
+    of (pos, side) structs (side: the occurrence is term_b's), array_sort
+    orders it, and the answer is the min gap over ADJACENT pairs from
+    different sides. Exact: for the closest pair x ≤ y, any occurrence
+    sorted between them forms a pair at least as close with x or with y,
+    so some adjacent cross-side pair reaches the minimum. No position pair
+    is materialized (VERDICT r3 #3: the old per-doc JOIN built
+    O(occ_a × occ_b) pairs), so the cost is the sort, O(n log n) in the
+    doc's occurrences of the two terms.
 
-    Shuffle profile: prune to the two terms (bucket partition pruning) →
-    one groupBy(doc_id) over a handful of compact ENCODED rows per doc →
-    mapInPandas merge. term_a == term_b means two DISTINCT occurrences of
-    the term within the window (min gap of consecutive positions).
-
-    Multi-row inputs are first-class (ADVICE r4: the previous F.first()
-    silently dropped occurrences if a (term, doc) ever carried >1 row): ALL
-    encoded rows of each term are collected per doc, decoded, concatenated
-    and re-sorted before the merge — so a merged/appended positions store
-    (index/positions.append_positions emits one row per (term, doc) per
-    batch only for NEW docs, but cross-build merges may not) still gets the
-    exact min distance. For a 1-row-per-(term,doc) store the collect_list
-    holds exactly one element and the sort is a no-op."""
+    term_a == term_b means two DISTINCT occurrences of the term within the
+    window: every adjacent pair counts (min gap of the sorted positions).
+    All rows of a term per doc are merged (ADVICE r4: the earlier F.first()
+    dropped occurrences when a (term, doc) carried >1 row), so a merged or
+    appended store still gets the exact min distance."""
     rows = prune_terms(pos_idx, [term_a, term_b], term_buckets)
-
-    def _decode_many(bufs) -> np.ndarray:
-        parts = [
-            np.cumsum(varbyte_decode(bytes(b)), dtype=np.int64) for b in bufs
-        ]
-        p = parts[0] if len(parts) == 1 else np.sort(np.concatenate(parts))
-        return p
-
-    if term_a == term_b:
-        grouped_same = (
-            rows.filter(F.col("term") == term_a)
-            .groupBy("doc_id")
-            .agg(F.collect_list("positions").alias("pos_bufs"))
-        )
-
-        def gen_same(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                docs, dists = [], []
-                for doc, bufs in zip(pdf["doc_id"].values, pdf["pos_bufs"].values):
-                    p = _decode_many(bufs)
-                    if p.size > 1:
-                        docs.append(int(doc))
-                        dists.append(int(np.diff(p).min()))
-                if docs:
-                    yield pd.DataFrame({"doc_id": docs, "min_dist": dists})
-
-        out = grouped_same.mapInPandas(gen_same, "doc_id long, min_dist long")
-        return out.filter(F.col("min_dist") <= window)
-
-    grouped = (
-        rows.groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.when(F.col("term") == term_a, F.col("positions"))
-            ).alias("pos_a"),
-            F.collect_list(
-                F.when(F.col("term") == term_b, F.col("positions"))
-            ).alias("pos_b"),
-        )
-        .filter((F.size("pos_a") > 0) & (F.size("pos_b") > 0))
+    side = (F.col("term") == term_b).alias("b")
+    tagged = F.transform("positions", lambda p: F.struct(p.alias("pos"), side))
+    occ = F.array_sort(F.flatten(F.collect_list(tagged)))
+    n = F.size("occ") - 1
+    gaps = F.zip_with(
+        F.slice("occ", 1, n),
+        F.slice("occ", 2, n),
+        lambda x, y: F.when(
+            F.lit(term_a == term_b) | (x["b"] != y["b"]), y["pos"] - x["pos"]
+        ),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs, dists = [], []
-            for doc, ba, bb in zip(
-                pdf["doc_id"].values, pdf["pos_a"].values, pdf["pos_b"].values
-            ):
-                a = _decode_many(ba)
-                b = _decode_many(bb)
-                docs.append(int(doc))
-                dists.append(min_dist_sorted(a, b))
-            if docs:
-                yield pd.DataFrame({"doc_id": docs, "min_dist": dists})
-
-    out = grouped.mapInPandas(gen, "doc_id long, min_dist long")
-    return out.filter(F.col("min_dist") <= window)
+    return (
+        rows.groupBy("doc_id")
+        .agg(occ.alias("occ"))
+        .select("doc_id", F.array_min(gaps).cast("long").alias("min_dist"))
+        .filter(F.col("min_dist") <= window)
+    )
 
 
 def phrase_match_indexed(
@@ -460,12 +306,14 @@ def phrase_match_indexed(
     Matches the corpus-side semantics of entry_queries.q_phrase_match_docs
     for any phrase length (including repeated terms): term i must occur at
     aligned position p for every slot i. Plan: term-pruned index scan →
-    decode → broadcast the (term, slot) relation → count distinct slots per
-    (doc_id, aligned position)."""
+    explode → broadcast the JVM-local (term, slot) relation → count
+    distinct slots per (doc_id, aligned position)."""
+    from ..queryexec.bm25 import local_relation
+
     if not phrase:
         raise ValueError("empty phrase")
-    slots = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(phrase)], "term string, slot int"
+    slots = local_relation(
+        spark, [(t, i) for i, t in enumerate(phrase)], "term string, slot int"
     )
     occ = decode_position_rows(prune_terms(pos_idx, phrase, term_buckets))
     aligned = occ.join(F.broadcast(slots), "term").select(

@@ -32,12 +32,14 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index import manifest
 from ..index.build import (
+    INDEX_FORMAT,
     BuildConfig,
     build_postings,
     collection_stats,
@@ -159,16 +161,28 @@ def resumable_build(
 
 def finalize_index(
     spark: SparkSession, out_dir: str, cfg: BuildConfig = BuildConfig()
-) -> None:
+) -> str:
     """Build postings + stats from all committed units and commit them as
     the next snapshot of the index store at out_dir/index_store (read it
-    with index/build.read_index). Idempotent."""
+    with index/build.read_index); returns the committed snapshot's name.
+    The snapshot's state records each unit's (input_fp, n_docs) and the
+    build config: when the committed snapshot already records the same,
+    nothing is read or committed (a resumed run that built no unit is a
+    true no-op)."""
+    store = os.path.join(out_dir, "index_store")
+    built = {
+        "units": sorted(
+            [r["unit"], r["input_fp"], r["n_docs"]]
+            for r in load_manifest(out_dir).values()
+        ),
+        "build_config": asdict(cfg),
+    }
+    cur = manifest.committed(store, INDEX_FORMAT, required=False)
+    if cur is not None and all(cur[1].get(k) == v for k, v in built.items()):
+        return os.path.basename(cur[0])
     tf_df = spark.read.parquet(os.path.join(out_dir, "tf_units"))
     tf_df = tf_df.select("doc_id", "term", "tf")
     ds = doc_stats(tf_df)
-    write_index(
-        build_postings(tf_df, cfg),
-        ds,
-        collection_stats(ds),
-        os.path.join(out_dir, "index_store"),
+    return write_index(
+        build_postings(tf_df, cfg), ds, collection_stats(ds), store, state=built
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .bm25 import local_relation
+
 # cursor DataFrame column names (1-row relation)
 CURSOR_COLS = ("c_score", "c_doc")
 
@@ -101,10 +103,12 @@ def page_after(
     rank_offset: int = 0,
 ) -> DataFrame:
     """Client-driven form: cursor is the scalar (score, doc_id) pair the
-    client got with the previous page (search_after=[...] in ES terms)."""
+    client got with the previous page (search_after=[...] in ES terms),
+    planned as a JVM-local one-row relation (no job of its own)."""
     cursor_df = None
     if cursor is not None:
-        cursor_df = scores.sparkSession.createDataFrame(
+        cursor_df = local_relation(
+            scores.sparkSession,
             [(float(cursor[0]), int(cursor[1]))],
             f"{CURSOR_COLS[0]} double, {CURSOR_COLS[1]} long",
         )

@@ -175,8 +175,8 @@ def incremental_corpus_update(
     incremental_tf_ingest); re-writing an already-incorporated file is
     NOT detected (same rule as incremental_index_update: dedupe upstream).
     """
-    from ..index.build import with_doc_id
-    from ..index.positions import append_positions, tokenize_tf_positions
+    from ..index.build import tokenize_tf_positions, with_doc_id
+    from ..index.positions import append_positions
 
     idx_dir = os.path.join(out_dir, "index_store")
     pos_dir = os.path.join(out_dir, "positions_store")

@@ -99,7 +99,7 @@ class _PositionsStore:
     @staticmethod
     def _set(df):
         return {
-            (r["term"], r["doc_id"], r["n_occ"], bytes(r["positions"]))
+            (r["term"], r["doc_id"], r["n_occ"], tuple(r["positions"]))
             for r in df.select("term", "doc_id", "n_occ", "positions").collect()
         }
 
@@ -214,6 +214,12 @@ LEGACY_LAYOUTS = {
         "index/part-0.parquet": "x",
         "doc_stats/part-0.parquet": "x",
         "incorporated.json": '["part-old.parquet"]',
+    },
+    # a committed positions snapshot of the varbyte binary lists
+    "positions_v1": {
+        "CURRENT": "v000001",
+        "v000001/data/term_bucket=0/part-0.parquet": "x",
+        "v000001/state.json": '{"index_format": "positions-v1", "term_buckets": 4}',
     },
     # the positions store before its pointer: one bundle dir
     "positions_bundle": {

@@ -144,11 +144,13 @@ def test_batch_bm25_window_partitioned_by_query(
 
 def test_query_constant_relations_are_jvm_local(spark, sf_dir, tmp_path, monkeypatch, jobs_run):
     """The query-constant relations of the QL-Dirichlet, TF-IDF and
-    smoothed-LM rankers, of the TF-IDF, Laplace-LM and facet gates and the
-    positions store's delete tombstones are LocalTableScans built once on
-    the driver: a createDataFrame(list) relation plans a Python-RDD scan
-    (ExistingRDD), one more job of Python tasks per query."""
+    smoothed-LM rankers, of the TF-IDF, Laplace-LM and facet gates, the
+    positions store's delete tombstones, the phrase slots and the paging
+    cursor are LocalTableScans built once on the driver: a
+    createDataFrame(list) relation plans a Python-RDD scan (ExistingRDD),
+    one more job of Python tasks per query."""
     from information_retrieval_project_spark.index import positions
+    from information_retrieval_project_spark.queryexec.paging import page_after
     from information_retrieval_project_spark.lm.language_models import (
         jelinek_mercer_scores,
         laplace_scores,
@@ -195,6 +197,15 @@ def test_query_constant_relations_are_jvm_local(spark, sf_dir, tmp_path, monkeyp
     )
     positions.delete_positions_docs(spark, store, [1, 2])
     outs += written
+    scores = spark.range(20).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 7 * 0.5).alias("score")
+    )
+    outs.append(page_after(scores, 5, cursor=(1.0, 3)))
+    outs.append(
+        positions.phrase_match_indexed(
+            spark, positions.read_positions(spark, store)[0], list(EQ.PHRASE)
+        )
+    )
     for out in outs:
         p = plan(out)
         assert "LocalTableScan" in p and "ExistingRDD" not in p, p

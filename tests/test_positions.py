@@ -1,10 +1,17 @@
-"""Positional index: encode/decode roundtrip, indexed phrase search ==
-corpus-side phrase semantics, compression sanity."""
+"""Positional index: exact roundtrip, one tokenizer for tf and positions,
+indexed phrase and proximity search == corpus-side semantics, and plans
+with no Python stage."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_project_spark.corpus import generate_corpus
-from information_retrieval_project_spark.index.build import with_doc_id
+from information_retrieval_project_spark.index.build import (
+    _SPLIT_PATTERNS,
+    with_doc_id,
+)
 from information_retrieval_project_spark.index.positions import (
     build_positions,
     decode_position_rows,
@@ -40,21 +47,57 @@ def _corpus_phrase_counts(ids, phrase):
     )
 
 
-def test_positions_roundtrip_and_compression(spark):
+def test_positions_roundtrip_exact(spark):
+    """Exploding the stored lists reproduces the exact (term, doc_id, pos)
+    relation of the corpus; every list ascends and n_occ is its length."""
     ids = with_doc_id(generate_corpus(spark, 120, partitions=2)).cache()
     idx = build_positions(ids).cache()
-    # decode reproduces the exact (term, doc_id, pos) relation
-    got = decode_position_rows(idx).select("doc_id", "pos", "term")
-    want = _corpus_positions(ids).select("doc_id", "pos", "term")
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # n_occ bookkeeping and delta+varbyte compression: monotone small deltas
-    # must beat 8-byte fixed width
-    sizes = idx.select(
-        "n_occ", F.length("positions").alias("nbytes")
-    ).collect()
-    assert all(r["nbytes"] < 8 * r["n_occ"] for r in sizes if r["n_occ"] > 1)
-    assert idx.agg(F.sum("n_occ")).collect()[0][0] == want.count()
+    got = decode_position_rows(idx).select("term", "doc_id", "pos").collect()
+    want = _corpus_positions(ids).select("term", "doc_id", "pos").collect()
+    assert sorted(got) == sorted(want) and want
+    rows = idx.select("n_occ", "positions").collect()
+    assert all(r["n_occ"] == len(r["positions"]) for r in rows)
+    assert all(r["positions"] == sorted(r["positions"]) for r in rows)
+
+
+@pytest.mark.parametrize("strategy", sorted(_SPLIT_PATTERNS))
+def test_positions_build_tf_equals_tf_build(spark, strategy):
+    """build_index(positions=True) tokenizes with tokenize_tf's kernel, so
+    its tf equals build_index(positions=False)'s for every strategy — on
+    non-ASCII letters, NBSP and vertical-tab whitespace, leading/trailing
+    separators and a null row (a second tokenizer split these apart)."""
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        build_index,
+        tokenize_tf,
+    )
+
+    texts = [
+        "Café naïve",
+        "  lead\u00a0nbsp\x0bvtab trail  ",
+        ",,x_1 y-2 café,,",
+        None,
+        "",
+    ]
+    corpus = spark.createDataFrame(
+        [("r", f"p{i}", "c", t) for i, t in enumerate(texts)],
+        "repo string, path string, commit string, content string",
+    )
+    cfg = BuildConfig(strategy=strategy, hot_detection_sample=1.0)
+
+    def rows(df):
+        return sorted(
+            tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+            for r in df.collect()
+        )
+
+    idx, ds, cs, pos = build_index(corpus, cfg, positions=True)
+    idx2, ds2, cs2 = build_index(corpus, cfg)
+    assert rows(idx) == rows(idx2)
+    assert rows(ds) == rows(ds2) and rows(cs) == rows(cs2)
+    tf = rows(tokenize_tf(with_doc_id(corpus), strategy))
+    assert rows(pos.select("doc_id", "term", F.col("n_occ").alias("tf"))) == tf
+    assert tf
 
 
 def test_phrase_match_indexed_equals_corpus_semantics(spark):
@@ -218,30 +261,19 @@ def test_proximity_multi_row_store_merges_all_rows(spark):
     (ADVICE r4: F.first() silently used one arbitrary row). Constructed so
     the one-row answer is WRONG: term x's closest occurrence to y lives in
     the second row of (x, doc 1)."""
-    import numpy as np
-
-    from information_retrieval_project_spark.index.codec import varbyte_encode
     from information_retrieval_project_spark.index.positions import (
+        POS_SCHEMA,
         proximity_match_indexed,
     )
 
-    def enc(positions):
-        p = np.asarray(positions, dtype=np.uint64)
-        d = np.empty_like(p)
-        d[0] = p[0]
-        np.subtract(p[1:], p[:-1], out=d[1:])
-        return bytearray(varbyte_encode(d))
-
     rows = [
-        ("x", 1, 1, enc([100])),  # registered FIRST: the row F.first() took
-        ("x", 1, 1, enc([5])),
-        ("y", 1, 1, enc([6])),
-        ("z", 2, 1, enc([0])),    # same-term split across rows
-        ("z", 2, 1, enc([2])),
+        ("x", 1, 1, [100]),  # registered FIRST: the row F.first() took
+        ("x", 1, 1, [5]),
+        ("y", 1, 1, [6]),
+        ("z", 2, 1, [0]),    # same-term split across rows
+        ("z", 2, 1, [2]),
     ]
-    pos_idx = spark.createDataFrame(
-        rows, "term string, doc_id long, n_occ long, positions binary"
-    )
+    pos_idx = spark.createDataFrame(rows, POS_SCHEMA)
     got = {
         r["doc_id"]: r["min_dist"]
         for r in proximity_match_indexed(spark, pos_idx, "x", "y", 3).collect()
@@ -841,29 +873,59 @@ def test_compact_and_delete_positions_store(spark, tmp_path):
     assert incorporated() == ["b0", "b1", "b2"]
 
 
-def test_min_dist_sorted_property():
-    """Hypothesis: the sorted-merge min-distance kernel equals the
-    brute-force all-pairs minimum on arbitrary sorted int lists."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
+def test_proximity_min_dist_property(spark):
+    """Seeded property: over a store of 400 random docs, one
+    proximity_match_indexed call per term pair (window wide enough to keep
+    every doc) returns each doc's brute-force all-pairs minimum — for a
+    distinct pair and for a term with itself, with docs holding one term
+    only, one occurrence only, and position lists split over several rows
+    in any order."""
+    import random
+    from collections import Counter
 
     from information_retrieval_project_spark.index.positions import (
-        min_dist_sorted,
+        POS_SCHEMA,
+        proximity_match_indexed,
     )
 
-    lists = st.lists(st.integers(0, 10_000), min_size=1, max_size=60)
-
-    @settings(max_examples=300, deadline=None)
-    @given(lists, lists)
-    def check(xs, ys):
-        a = np.array(sorted(set(xs)), dtype=np.int64)
-        b = np.array(sorted(set(ys)), dtype=np.int64)
-        got = min_dist_sorted(a, b)
-        want = min(abs(int(x) - int(y)) for x in a for y in b)
-        assert got == want
-
-    check()
+    rng = random.Random(7)
+    rows, occ = [], {}
+    for doc in range(400):
+        n = rng.randint(1, 40)
+        cells = rng.sample(range(rng.randint(n, 3 * n + 50)), n)
+        # a doc holds x only, y only, or both; tokens are one term each
+        cut = rng.choice([0, n, rng.randint(0, n)])
+        for term, ps in (("x", cells[:cut]), ("y", cells[cut:])):
+            if not ps:
+                continue
+            occ[doc, term] = ps
+            ps = sorted(ps)
+            bounds = sorted(rng.sample(range(1, len(ps)), min(2, len(ps) - 1)))
+            parts = [ps[i:j] for i, j in zip([0, *bounds], [*bounds, len(ps)])]
+            rng.shuffle(parts)
+            rows += [(term, doc, len(p), p) for p in parts]
+    store = spark.createDataFrame(rows, POS_SCHEMA)
+    docs = {d for d, _ in occ}
+    want_xy = {
+        d: min(abs(a - b) for a in occ[d, "x"] for b in occ[d, "y"])
+        for d in docs
+        if (d, "x") in occ and (d, "y") in occ
+    }
+    want_xx = {
+        d: min(abs(a - b) for i, a in enumerate(ps) for b in ps[i + 1 :])
+        for d in docs
+        if len(ps := occ.get((d, "x"), [])) > 1
+    }
+    assert len(want_xy) > 50 and len(want_xx) > 50
+    assert len(docs) - len(want_xy) > 50  # one-term docs must not match
+    n_rows = Counter((t, d) for t, d, _, _ in rows)
+    assert sum(c > 1 for c in n_rows.values()) > 50  # lists split over rows
+    for a, b, want in (("x", "y", want_xy), ("x", "x", want_xx)):
+        got = {
+            r["doc_id"]: r["min_dist"]
+            for r in proximity_match_indexed(spark, store, a, b, 10**6).collect()
+        }
+        assert got == want, (a, b)
 
 
 def test_read_positions_runs_no_job_and_equals_inferred_read(spark, tmp_path, jobs_run):
@@ -888,3 +950,59 @@ def test_read_positions_runs_no_job_and_equals_inferred_read(spark, tmp_path, jo
     key = ["term", "doc_id", "n_occ"]
     want = inferred.orderBy(*key).collect()
     assert stored.orderBy(*key).collect() == want and want
+
+
+def _python_operators(df) -> list[str]:
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    ops = set(re.findall(r"\((\d+)\) (\w*(?:Python|Pandas|Arrow)\w*)", plan))
+    return sorted(op for _, op in ops)
+
+
+def test_phrase_and_proximity_plan_no_python_operator(spark, tmp_path):
+    """Over stored indexes, phrase and proximity plan no Python operator
+    (MapInPandas, MapInArrow, ArrowEvalPython, BatchEvalPython…): they are
+    native Spark expressions over array<int>. The composed BM25 serves plan
+    exactly one, the posting decode."""
+    from information_retrieval_project_spark.index.build import (
+        build_index,
+        read_index,
+        write_index,
+    )
+    from information_retrieval_project_spark.index.positions import (
+        proximity_match_indexed,
+        read_positions,
+        write_positions,
+    )
+    from information_retrieval_project_spark.queryexec.wand import (
+        bm25_phrase_topk_compressed,
+        bm25_proximity_topk_compressed,
+    )
+
+    out = str(tmp_path / "served")
+    idx, ds, cs, pos = build_index(
+        generate_corpus(spark, 60, partitions=2), positions=True
+    )
+    write_index(idx, ds, cs, out, term_buckets=4)
+    write_positions(pos, f"{out}/positions", term_buckets=4)
+    r_idx, r_ds, r_cs = read_index(spark, out)
+    r_pos, ptb = read_positions(spark, f"{out}/positions")
+    n_docs, avgdl = r_cs.collect()[0][:2]
+    phrase = ["def", "return"]
+    assert _python_operators(phrase_match_indexed(spark, r_pos, phrase, ptb)) == []
+    for b in ("return", "def"):
+        prox = proximity_match_indexed(spark, r_pos, "def", b, 5, ptb)
+        assert _python_operators(prox) == []
+    served = [
+        bm25_phrase_topk_compressed(
+            spark, r_idx, r_ds, n_docs, avgdl, r_pos, phrase, phrase,
+            term_buckets=4, pos_term_buckets=ptb,
+        ),
+        bm25_proximity_topk_compressed(
+            spark, r_idx, r_ds, n_docs, avgdl, r_pos, "def", "return", 5,
+            phrase, term_buckets=4, pos_term_buckets=ptb,
+        ),
+    ]
+    for df in served:
+        assert _python_operators(df) == ["MapInPandas"]

@@ -101,3 +101,36 @@ def test_changed_input_invalidates_stale_units(spark, tmp_path):
     assert got == want
     # and a further rerun is again a no-op
     assert resumable_build(spark, changed, out, n_units=4, cfg=CFG) == []
+
+
+def test_finalize_commits_only_when_units_change(spark, tmp_path, jobs_run):
+    """A resumed run that built no unit finalizes nothing: finalize_index
+    finds the same units' (input_fp, n_docs) in the committed snapshot and
+    returns it without a Spark job or a new snapshot. Changing one unit's
+    input commits one more snapshot."""
+    from pyspark.sql import functions as F
+
+    from information_retrieval_project_spark.index import manifest
+
+    corpus = generate_corpus(spark, 120, partitions=2).cache()
+    out = str(tmp_path / "build4")
+    store = os.path.join(out, "index_store")
+    resumable_build(spark, corpus, out, n_units=4, cfg=CFG)
+    first = finalize_index(spark, out, CFG)
+    assert manifest.current(store).endswith(first)
+
+    assert resumable_build(spark, corpus, out, n_units=4, cfg=CFG) == []
+    again, n_jobs = jobs_run(lambda: finalize_index(spark, out, CFG))
+    assert again == first and n_jobs == 0
+    assert sorted(os.listdir(store)) == ["CURRENT", first]
+
+    path = corpus.select("path").first()["path"]
+    changed = corpus.withColumn(
+        "content",
+        F.when(F.col("path") == path, F.concat(F.col("content"), F.lit(" z")))
+        .otherwise(F.col("content")),
+    )
+    assert 1 <= len(resumable_build(spark, changed, out, n_units=4, cfg=CFG)) < 4
+    second = finalize_index(spark, out, CFG)
+    assert second != first and manifest.current(store).endswith(second)
+    assert sorted(os.listdir(store)) == ["CURRENT", first, second]

@@ -26,8 +26,11 @@ tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1
 test -f "$OUT/index_store/CURRENT"
 echo "index store committed"
 # no `&& echo` after a check: set -e ignores a failure on the left of &&
+before=$(cat "$OUT/index_store/CURRENT")
 tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1 \
     | grep -q '"units_built_this_run": 0'
+# a resumed run that built no unit commits no snapshot either
+test "$(cat "$OUT/index_store/CURRENT")" = "$before"
 echo "resume no-op ok"
 tools/spark_submit.sh --out "$OUT" --query "def return buffer" --k 5 | tail -1 \
     | python -c 'import json, sys; assert len(json.load(sys.stdin)["hits"]) == 5'
