@@ -168,8 +168,8 @@ SQL_COLLECTION_STATS = f"""
 def _bm25_contribs(tf, terms, w=None):
     """(term, doc_id, ..., contrib) candidate rows of the broadcast `terms`
     relation, BM25 contributions over collection statistics cross-joined in
-    as columns (n_docs, avgdl), so no statistic is collected. w: a weight
-    column of `terms` that scales each contribution."""
+    as columns (n_docs, avgdl), so no statistic is collected. w: the name
+    of a weight column of `terms` that scales each contribution."""
     ds = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     stats = ds.agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
@@ -178,7 +178,7 @@ def _bm25_contribs(tf, terms, w=None):
         with_df(tf, terms)
         .join(ds, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", bm25_contrib(F.col("n_docs"), F.col("avgdl"), w=w))
+        .withColumn("contrib", bm25_contrib("n_docs", "avgdl", w=w))
     )
 
 
@@ -213,7 +213,7 @@ def _bm25_scores_weighted(tf, wterms, exclude_doc=None):
     PRF and MoreLikeThis gates (weights 1.0 reproduce plain BM25). df is
     the term's full-collection df; exclude_doc drops one doc_id BEFORE the
     aggregate (MoreLikeThis never returns its seed)."""
-    scored = _bm25_contribs(tf, wterms, w=F.col("w"))
+    scored = _bm25_contribs(tf, wterms, w="w")
     if exclude_doc is not None:
         scored = scored.filter(F.col("doc_id") != exclude_doc)
     return scored.groupBy("doc_id").agg(

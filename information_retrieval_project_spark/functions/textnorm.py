@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import re
 import string
-from collections.abc import Iterable
 
 # The 13 symbols the reference replaces with spaces (data_manager.py:75-77).
 REPLACED_SYMBOLS = [",", ".", ";", "(", ")", "?", "!", "&", "%", ":", "*", '"', "-"]
@@ -246,7 +245,3 @@ def porter_stem(word: str) -> str:
         w = w[:-1]
 
     return w
-
-
-def stem_tokens(tokens: Iterable[str]) -> list[str]:
-    return [porter_stem(t) for t in tokens]

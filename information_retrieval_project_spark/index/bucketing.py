@@ -2,22 +2,26 @@
 
 Both the main compressed index (index/build.write_index → queryexec/wand
 pruning) and the positional index (index/positions) are written by
-write_bucketed, partitioned by `pmod(xxhash64(term), m)`, and prune
-query-time scans by applying the same expression to the query terms. The
-hash, the modulus handling, the write and the prune condition live HERE
-so the write and read sides can never drift apart — a mismatched modulus
-silently drops valid postings (ADVICE r1)."""
+write_bucketed, partitioned by the term's bucket, and prune query-time
+scans by the same hash of the query terms. The hash is defined once, as
+the SQL text TERM_BUCKET_SQL, so the write and read sides can never drift
+apart — a mismatched modulus silently drops valid postings (ADVICE r1).
+The prune is one SQL predicate, so building it is one py4j call however
+many terms it has. Its terms are hex literals: a quoted '…' literal
+depends on spark.sql.parser.escapedStringLiterals, under which `it's` or
+`a\\b` silently match nothing."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+TERM_BUCKET_SQL = "pmod(xxhash64({}), {})"
 
-def term_bucket_expr(term_buckets: int, term: Column | str = "term") -> Column:
-    """Stable bucket of `term` (a column or column name; the writer's `term`
-    column by default) under modulus term_buckets."""
-    return F.pmod(F.xxhash64(term), F.lit(int(term_buckets)))
+
+def term_bucket_expr(term_buckets: int) -> Column:
+    """Stable bucket of the `term` column under modulus term_buckets."""
+    return F.expr(TERM_BUCKET_SQL.format("term", int(term_buckets)))
 
 
 def write_bucketed(df: DataFrame, path: str, term_buckets: int) -> None:
@@ -48,15 +52,17 @@ def bucket_values_for_terms(spark, terms: list[str], term_buckets: int) -> list[
 def prune_terms(
     df: DataFrame, terms: list[str], term_buckets: int | None = None
 ) -> DataFrame:
-    """Rows for `terms` only; when df carries a term_bucket partition column
-    and the stored modulus is supplied, the filter includes the bucket of
-    each term as the writer's expression over a literal. The optimizer
-    folds those to constants, so the scan prunes whole partitions
-    (`PartitionFilters: [term_bucket IN (...)]`) without running a job."""
-    uniq = sorted(set(terms))
-    cond = F.col("term").isin(uniq)
+    """Rows for `terms` only, as one SQL predicate; when df carries a
+    term_bucket partition column and the stored modulus is supplied, the
+    predicate includes the bucket of each term as the writer's hash over a
+    literal. The optimizer folds those to constants, so the scan prunes
+    whole partitions (`PartitionFilters: [term_bucket IN (...)]`) without
+    running a job. No terms select no rows."""
+    lits = [f"CAST(X'{t.encode().hex()}' AS STRING)" for t in sorted(set(terms))]
+    if not lits:
+        return df.filter(F.lit(False))
+    cond = f"term IN ({', '.join(lits)})"
     if "term_bucket" in df.columns and term_buckets:
-        cond = cond & F.col("term_bucket").isin(
-            [term_bucket_expr(term_buckets, F.lit(t)) for t in uniq]
-        )
-    return df.filter(cond)
+        buckets = [TERM_BUCKET_SQL.format(x, int(term_buckets)) for x in lits]
+        cond += f" AND term_bucket IN ({', '.join(buckets)})"
+    return df.filter(F.expr(cond))

@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import manifest
-from .bucketing import write_bucketed
+# the shared term+bucket prune; its modulus MUST be the stored one, which
+# read_positions returns
+from .bucketing import prune_terms, write_bucketed
 from .build import tokenize_tf_positions
 
 POS_SCHEMA = "term string, doc_id long, n_occ long, positions array<int>"
@@ -232,16 +234,6 @@ def read_positions(spark: SparkSession, out_dir: str) -> tuple[DataFrame, int]:
     data with the schema the writer wrote: no Spark job."""
     snap, state = manifest.committed(out_dir, POSITIONS_FORMAT)
     return _read_data(spark, snap), state["term_buckets"]
-
-
-def prune_terms(
-    pos_idx: DataFrame, terms: list[str], term_buckets: int | None = None
-) -> DataFrame:
-    """Shared-scheme term+bucket pruning (index/bucketing.prune_terms);
-    the modulus MUST be the stored one — read_positions returns it."""
-    from .bucketing import prune_terms as _prune
-
-    return _prune(pos_idx, terms, term_buckets)
 
 
 def decode_position_rows(rows: DataFrame) -> DataFrame:

@@ -16,6 +16,10 @@ decoded stored index (queryexec/wand, queryexec/sharded). The plan is fully
 native after the rows: a doc_stats join, the score as column arithmetic
 inside whole-stage codegen, a per-doc aggregate, and TakeOrderedAndProject
 (ORDER BY ... LIMIT k) or the per-query window (`topk_per_query`).
+
+The formula is one SQL text, one py4j call to build. Its numbers are DOUBLE
+literals (`1.2D`): a bare `1.2` is DECIMAL, which changes the last digits
+of scores, enough to reorder a top-10.
 """
 
 from __future__ import annotations
@@ -47,28 +51,32 @@ def query_terms_df(spark: SparkSession, tokens: list[str]) -> DataFrame:
     return local_relation(spark, [(t,) for t in sorted(set(tokens))], "term string")
 
 
+def _sql_double(x: float | str) -> str:
+    """A column name as is; a number as a DOUBLE literal."""
+    return x if isinstance(x, str) else f"{float(x)!r}D"
+
+
 def bm25_contrib(
-    n_docs: int | Column,
-    avgdl: float | Column,
+    n_docs: int | str,
+    avgdl: float | str,
     k1: float = K1,
     b: float = B,
-    w: Column | None = None,
+    w: str | None = None,
 ) -> Column:
     """The package's one BM25 expression: the per-(term, doc) contribution
     over the `tf`, `df` and `doc_len` columns. idf is computed inline from
     the df column: no per-term idf subtree to distinct and broadcast (each
-    was one more scheduled job per served query). `n_docs` and `avgdl` are literals or columns (the gates cross-join them
-    in). `w` scales the idf first, `(w · idf) · tf-part`, the evaluation
-    order of the weighted gates' DuckDB SQL."""
-    n_docs = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
-    avgdl = avgdl if isinstance(avgdl, Column) else F.lit(float(avgdl))
-    idf = F.log(1.0 + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    if w is not None:
-        idf = w * idf
-    return (
-        idf
-        * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    was one more scheduled job per served query). `n_docs` and `avgdl` are
+    numbers or column names (the gates cross-join them in). `w`, a column
+    name, scales the idf first, `(w · idf) · tf-part`, the evaluation order
+    of the weighted gates' DuckDB SQL."""
+    n, dl, kp1, bb, one_b, k = map(
+        _sql_double, (n_docs, avgdl, k1 + 1.0, b, 1.0 - b, k1)
+    )
+    weight = f"{w} * " if w is not None else ""
+    return F.expr(
+        f"{weight}ln(({n} - df + 0.5D) / (df + 0.5D) + 1.0D) * (tf * {kp1})"
+        f" / (tf + (doc_len * {bb} / {dl} + {one_b}) * {k})"
     )
 
 

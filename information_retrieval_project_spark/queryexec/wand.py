@@ -266,11 +266,12 @@ def bm25_topk_compressed(
     decimals BEFORE ranking (rank ties on the rounded value — pass whatever
     the comparison oracle rounds to).
 
-    One plan, and constructing it runs no driver action: bucket-pruned
-    scan, one decode, the doc_stats join, the codegen BM25 sum, top-k. A
-    sub-second query is bound by its Spark stage chain, not its data, so
-    this exhaustive decode beats any distributed block-max pruning that
-    needs a theta subtree (OPTIMIZATION_r06.md §5)."""
+    One plan, built with no driver action and in as many py4j calls for 1
+    term as for 4 (or none, which gives no rows): bucket-pruned scan, one
+    decode, the doc_stats join, the codegen BM25 sum, top-k. A sub-second
+    query is bound by its Spark stage chain, not its data, so this
+    exhaustive decode beats any distributed block-max pruning that needs a
+    theta subtree (OPTIMIZATION_r06.md §5)."""
     scored = bm25_scores_compressed(
         spark,
         index_df,
@@ -358,7 +359,8 @@ def bm25_topk_batch_compressed(
     queryexec/bm25.bm25_topk_batch — |Q| separate queries would decode
     shared hot terms |Q| times; the batch decodes each term once. df/idf
     are the stored TERM-TOTAL values, identical for every query in the
-    batch. round_scores: round BEFORE ranking (the decode path's float
+    batch, and the plan costs as many py4j calls for 8 distinct terms as
+    for 200. round_scores: round BEFORE ranking (the decode path's float
     summation order differs from the corpus-side oracle's, so ranking must
     tie on the rounded value both sides)."""
     from ..index.bucketing import prune_terms

@@ -240,12 +240,3 @@ def incremental_corpus_update(
         )
     out["mode"] = "catchup"
     return out
-
-
-def read_served_positions(spark: SparkSession, out_dir: str):
-    """(positions DataFrame, term_buckets) of the corpus-update layout —
-    the positional serving handle next to read_index(out_dir +
-    '/index_store')."""
-    from ..index.positions import read_positions
-
-    return read_positions(spark, os.path.join(out_dir, "positions_store"))

@@ -149,9 +149,10 @@ def _folded_buckets(df):
 @pytest.mark.parametrize("term_buckets", [1, 16, 32])
 def test_folded_bucket_filter_matches_writer_hash(spark, tmp_path, term_buckets):
     """prune_terms folds the writer's bucket expression into the scan
-    filter: for random terms, the folded literals must equal
-    bucket_values_for_terms and the term_bucket values write_index stored,
-    term by term and for the whole set."""
+    filter: for random terms, hard-to-quote characters included, the folded
+    literals must equal bucket_values_for_terms and the term_bucket values
+    write_index stored, term by term and for the whole set, and the pruned
+    rows hold every term, whatever the parser's escaping setting."""
     import random
     import string
 
@@ -166,9 +167,10 @@ def test_folded_bucket_filter_matches_writer_hash(spark, tmp_path, term_buckets)
     )
 
     rng = random.Random(term_buckets)
-    alphabet = string.ascii_letters + string.digits + "_.-éß中"
+    alphabet = string.ascii_letters + string.digits + "_.-éß中'\\\n\u00a0"
     terms = sorted(
         {"".join(rng.choices(alphabet, k=rng.randint(1, 12))) for _ in range(12)}
+        | {"it's", "a\\b", "x\\'y", "a\nb", "a\u00a0b"}
     )
     tf = spark.createDataFrame(
         [(d, t, 1 + d % 3) for d in range(5) for t in terms],
@@ -189,8 +191,20 @@ def test_folded_bucket_filter_matches_writer_hash(spark, tmp_path, term_buckets)
         for r in idx.select("term", "term_bucket").distinct().collect()
     }
     assert sorted(stored) == terms
-    for t in terms:
-        assert _folded_buckets(prune_terms(idx, [t], term_buckets)) == {stored[t]}
     want = set(stored.values())
-    assert _folded_buckets(prune_terms(idx, terms, term_buckets)) == want
-    assert set(bucket_values_for_terms(spark, terms, term_buckets)) == want
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(key, escaped)
+            for t in terms:
+                assert _folded_buckets(prune_terms(idx, [t], term_buckets)) == {
+                    stored[t]
+                }
+            pruned = prune_terms(idx, terms, term_buckets)
+            assert _folded_buckets(pruned) == want
+            got = {r["term"] for r in pruned.select("term").distinct().collect()}
+            assert got == set(terms), escaped
+            assert set(bucket_values_for_terms(spark, terms, term_buckets)) == want
+    finally:
+        spark.conf.set(key, before)

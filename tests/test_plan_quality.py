@@ -262,3 +262,63 @@ def test_minhash_gates_release_their_signatures(spark, sf_dir):
         assert leaf.getClass().getSimpleName() == "LogicalRDD", q.__name__
         assert leaf.children().isEmpty()
         assert added == {leaf.rdd().id()}, q.__name__
+
+
+def _contrib_text(df) -> str:
+    """The `... AS contrib` expression of df's optimized plan, `#id`
+    suffixes stripped."""
+    import re
+
+    p = df._jdf.queryExecution().optimizedPlan().toString()
+    m = re.search(r"Project \[doc_id#\d+L?, (.*) AS contrib#\d+\]", p)
+    assert m, p
+    return re.sub(r"#\d+L?", "", m.group(1))
+
+
+def test_bm25_contrib_plan_text_is_pinned(spark, sf_dir, tmp_path):
+    """The BM25 contribution Catalyst builds, operand order included, for
+    literal statistics (the served single query) and for column statistics
+    with a weight (the weighted gates). A DECIMAL literal or a commuted
+    operand changes this text, and can change scores in the last digits."""
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        build_postings,
+        collection_stats,
+        doc_stats,
+        read_index,
+        write_index,
+    )
+    from information_retrieval_project_spark.queryexec.wand import (
+        bm25_topk_compressed,
+    )
+
+    tf = spark.createDataFrame(
+        [(d, t, d % 7 + 1) for d in range(50) for t in ("aa", "bb", "cc")],
+        "doc_id long, term string, tf long",
+    )
+    ds = doc_stats(tf)
+    out = str(tmp_path / "idx")
+    write_index(
+        build_postings(tf, BuildConfig(hot_df_threshold=1000)),
+        ds, collection_stats(ds), out, term_buckets=4,
+    )
+    idx, ds, cs = read_index(spark, out)
+    st = cs.collect()[0]
+    served = bm25_topk_compressed(
+        spark, idx, ds, st["n_docs"], st["avgdl"], ["aa", "bb"], k=5,
+        term_buckets=4,
+    )
+    assert _contrib_text(served) == (
+        "((ln(((((50.0 - cast(df as double)) + 0.5) / (cast(df as double) + 0.5))"
+        " + 1.0)) * (cast(tf as double) * 2.2)) / (cast(tf as double) + ((((cast("
+        "doc_len as double) * 0.75) / 11.82) + 0.25) * 1.2)))"
+    )
+    w1 = spark.createDataFrame(
+        [(t, 1.0) for t in sorted(set(EQ.BM25_QUERY))], "term string, w double"
+    )
+    weighted = EQ._bm25_scores_weighted(EQ._tf(spark, sf_dir), w1)
+    assert _contrib_text(weighted) == (
+        "(((w * ln((((cast((n_docs - df) as double) + 0.5) / (cast(df as double)"
+        " + 0.5)) + 1.0))) * (cast(tf as double) * 2.2)) / (cast(tf as double) + "
+        "((((cast(doc_len as double) * 0.75) / avgdl) + 0.25) * 1.2)))"
+    )

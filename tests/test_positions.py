@@ -429,6 +429,37 @@ def test_positions_storage_roundtrip_and_pruning(spark, tmp_path):
         read_positions(spark, out)
 
 
+def test_stored_phrase_with_quote_and_backslash_terms(spark, tmp_path):
+    """Under the `keras` strategy (whitespace split) terms keep quotes and
+    backslashes; the stored store's term and bucket prune still finds them,
+    whatever the parser's escaping setting."""
+    from information_retrieval_project_spark.index.build import tokenize_tf_positions
+    from information_retrieval_project_spark.index.positions import (
+        read_positions,
+        write_positions,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "say it's a\\b here"), (2, "it's fine"), (3, "a\\b it's")],
+        "doc_id long, content string",
+    )
+    pos = tokenize_tf_positions(docs, "keras").select(
+        "term", "doc_id", F.col("tf").alias("n_occ"), "positions"
+    )
+    out = str(tmp_path / "posidx")
+    write_positions(pos, out, term_buckets=8)
+    stored, tb = read_positions(spark, out)
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for escaped in ("false", "true"):
+            spark.conf.set(key, escaped)
+            got = phrase_match_indexed(spark, stored, ["it's", "a\\b"], tb)
+            assert [tuple(r) for r in got.collect()] == [(1, 1)], escaped
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_write_positions_crash_never_mismatches_modulus(spark, tmp_path):
     """CURRENT-pointer snapshot protocol (index/manifest.py, shared with
     streaming/incremental.py): simulate every crash window and assert the

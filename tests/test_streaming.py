@@ -254,6 +254,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     from information_retrieval_project_spark.index.positions import (
         build_positions,
         phrase_match_indexed,
+        read_positions,
     )
     from information_retrieval_project_spark.queryexec.bm25 import (
         bm25_scores,
@@ -263,7 +264,6 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     from information_retrieval_project_spark.index.build import read_index
     from information_retrieval_project_spark.streaming.incremental import (
         incremental_corpus_update,
-        read_served_positions,
     )
 
     corpus_dir = str(tmp_path / "corpus")
@@ -334,7 +334,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
         r["doc_id"] for r in want_topk
     ]
 
-    pos, ptb = read_served_positions(spark, out)
+    pos, ptb = read_positions(spark, os.path.join(out, "positions_store"))
     full_pos = build_positions(all_docs)
     got_p = {
         (r["doc_id"], r["n_matches"])
@@ -368,7 +368,7 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     assert r4["mode"] == "catchup"
     assert "index" not in r4  # index store was already current
     _assert_indexed_docs_have_stats()
-    pos2, ptb2 = read_served_positions(spark, out)
+    pos2, ptb2 = read_positions(spark, os.path.join(out, "positions_store"))
     all_docs2 = with_doc_id(spark.read.parquet(corpus_dir))
     assert pos2.count() == build_positions(all_docs2).count()
     # and the incorporated list caught up — a further run is a noop

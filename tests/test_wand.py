@@ -306,6 +306,81 @@ def test_fused_blockmax_construction_runs_no_driver_actions(spark, monkeypatch, 
         _assert_topk(by_q[qid], _reference_topk(ref, toks, 5), qid)
 
 
+def test_construction_py4j_calls_do_not_grow_with_query_terms(spark, monkeypatch, tmp_path):
+    """Building the served single and batch top-k DataFrames costs the same
+    number of py4j calls however many distinct terms the query has: the
+    term and bucket prune is one SQL predicate and BM25 one SQL expression,
+    not a few Column calls per term. Only call commands ("c\\n") count;
+    object releases depend on GC."""
+    import py4j.clientserver
+
+    from information_retrieval_project_spark.queryexec.wand import (
+        bm25_topk_batch_compressed,
+        bm25_topk_compressed,
+    )
+
+    vocab = [f"t{i:03d}" for i in range(256)]
+    rows = [(d, t, d % 4 + 1) for d in range(8) for t in vocab[d::8]]
+    idx, ds, cs, tb = _stored_index(spark, str(tmp_path / "idx"), rows, 16)
+    idx.columns  # resolve the cached schema before counting
+    conn = py4j.clientserver.ClientServerConnection
+    calls = []
+    send = conn.send_command
+
+    def counting(self, command):
+        calls.append(command.startswith("c\n"))
+        return send(self, command)
+
+    monkeypatch.setattr(conn, "send_command", counting)
+
+    def n_calls(build):
+        calls.clear()
+        build()
+        return sum(calls)
+
+    def batch(n_terms):
+        terms = vocab[:n_terms]
+        queries = {q: terms[q::64] or terms[:1] for q in range(64)}
+        return n_calls(lambda: bm25_topk_batch_compressed(
+            spark, idx, ds, cs["n_docs"], cs["avgdl"], queries, k=10,
+            term_buckets=tb,
+        ))
+
+    def single(n_terms):
+        return n_calls(lambda: bm25_topk_compressed(
+            spark, idx, ds, cs["n_docs"], cs["avgdl"], vocab[:n_terms], k=10,
+            term_buckets=tb,
+        ))
+
+    b8, b200, s1, s4 = batch(8), batch(200), single(1), single(4)
+    monkeypatch.undo()
+    assert abs(b200 - b8) <= 2, (b8, b200)
+    assert abs(s4 - s1) <= 2, (s1, s4)
+
+
+def test_served_empty_and_missing_terms_return_no_rows(spark, tmp_path):
+    """An empty term list prunes to no rows (`IN ()` does not parse, so the
+    prune is a false literal), and serving it, or a batch whose terms are
+    all missing from the index, returns no rows instead of raising."""
+    from information_retrieval_project_spark.index.bucketing import prune_terms
+    from information_retrieval_project_spark.queryexec.wand import (
+        bm25_topk_batch_compressed,
+        bm25_topk_compressed,
+    )
+
+    rows = [(d, t, d % 3 + 1) for d in range(20) for t in ("aa", "bb")]
+    idx, ds, cs, tb = _stored_index(spark, str(tmp_path / "idx"), rows, 8)
+    assert prune_terms(idx, [], tb).count() == 0
+    assert prune_terms(idx, ["aa"], tb).count() > 0
+    assert bm25_topk_compressed(
+        spark, idx, ds, cs["n_docs"], cs["avgdl"], [], k=5, term_buckets=tb
+    ).collect() == []
+    assert bm25_topk_batch_compressed(
+        spark, idx, ds, cs["n_docs"], cs["avgdl"], {0: ["zz"], 1: ["yy", "xx"]},
+        k=5, term_buckets=tb,
+    ).collect() == []
+
+
 def test_served_plan_one_python_stage_pruned_scan(
     spark, tmp_path, partial_limit_below_query_shuffle
 ):
