@@ -12,8 +12,9 @@ Layout
 - ``functions/``  frozen text normalization + tokenization (engine & oracle
   share the same pure-Python code → rank-identity by construction) and
   native-column helpers.
-- ``index/``      inverted-index build: tf/df aggregation, salted hot-term
-  handling, delta+varbyte posting codec, stats tables, lineage manifest.
+- ``index/``      inverted-index build: tf/df aggregation, one postings
+  shuffle (hot terms salted only in the segmented layout), delta+varbyte
+  posting codec, stats tables, lineage manifest.
 - ``queryexec/``  BM25 (one scorer, ``bm25.py``) / TF-IDF-cosine /
   query-likelihood scoring, compressed and sharded index serving,
   deterministic top-k.

@@ -3,8 +3,9 @@
 Schema: (repo:string, path:string, commit:string, lang:string, content:string)
 — one row per source file. Content tokens are drawn from a Zipf(s=1.2)
 distribution over a code-like vocabulary so hot/skewed terms exist (FIXTURES.md
-§1); the Zipf head exercises the salted hot-term path exactly like `the`/
-`def`/`import` would in a real 10^12-file code corpus.
+§1); the Zipf head exercises long posting lists (salted in the segmented
+layout) exactly like `the`/`def`/`import` would in a real 10^12-file code
+corpus.
 
 Generation is pure numpy (seed fixed), generated driver-side and
 parallelized for larger scales, no external data.

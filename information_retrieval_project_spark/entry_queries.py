@@ -999,7 +999,7 @@ SQL_LANG_DISTRIBUTION = """
 
 
 # ---------------------------------------------------------------------------
-# Compressed-index path in the gate: the salted build + varbyte codec must
+# Compressed-index path in the gate: the posting build + varbyte codec must
 # reproduce the SQL-visible relations exactly (df per term; BM25 scores).
 # ---------------------------------------------------------------------------
 
@@ -1011,9 +1011,9 @@ def _docs_as_corpus(spark, sf_dir):
 
 
 def q_compressed_term_df(spark, sf_dir):
-    """df per term READ BACK from the compressed posting lists (salted build
-    → varbyte decode length) — oracle is plain SQL term_df, so a codec or
-    salting bug fails the driver gate."""
+    """df per term READ BACK from the compressed posting lists (one-shuffle
+    merged build → varbyte decode length) — oracle is plain SQL term_df, so
+    a codec or posting-build bug fails the driver gate."""
     from .index.build import BuildConfig, build_postings, tokenize_tf
 
     tf = tokenize_tf(_docs_as_corpus(spark, sf_dir))

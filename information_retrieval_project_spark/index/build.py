@@ -10,13 +10,16 @@ refit, data_manager.py:122-123, with a build-once index):
     → doc_stats  = groupBy(doc_id).sum(tf)           [hash agg, AQE coalesce]
     → df per term= groupBy(term).count()             [partial+final agg —
       skew-safe: map-side partial bounds hot-term rows at one per task]
-    → SALTED posting build: hot terms (df > hot_df_threshold) are split into
-      pmod(xxhash64(doc_id), n_salts) sub-groups so no single group exceeds
-      memory; each sub-group is a JVM-sorted (doc_id, tf) run, and a second
-      per-term JVM pass (flatten + array_sort) combines the sub-runs. Cold
-      terms take the 1-salt path and skip nothing. This is the explicit
-      skew handling required by BASELINE.json north_rule (AQE skew-join covers
-      joins, not groupBy hot keys — SURVEY.md §4.2).
+    → posting build, merged layout (default): ONE shuffle,
+      groupBy(term) → array_sort(collect_list(struct(doc_id, tf))); a
+      term's whole list is one row either way, so it is grouped once
+    → posting build, segmented layout only (segment_hot_terms=True): SALTED —
+      hot terms (df > hot_df_threshold, from a sampled pass) are split into
+      pmod(xxhash64(doc_id), n_salts) runs, each a JVM-sorted (doc_id, tf)
+      row of its own, so no group or row exceeds ~docs_per_salt postings.
+      This is the explicit skew handling required by BASELINE.json
+      north_rule (AQE skew-join covers joins, not groupBy hot keys —
+      SURVEY.md §4.2).
     → one arrow_udf encodes every posting list of an Arrow batch at once
       (codec.encode_posting_lists: delta+varbyte, per-block max tf)
     → index(term, df, max_tf, postings:binary, bm_tfs:binary)
@@ -203,6 +206,8 @@ def collection_stats(doc_stats_df: DataFrame) -> DataFrame:
 
 @dataclass(frozen=True)
 class BuildConfig:
+    # hot_df_threshold, docs_per_salt and hot_detection_sample affect only
+    # segment_hot_terms=True: the merged layout neither salts nor samples.
     hot_df_threshold: int = 100_000   # postings longer than this get salted
     docs_per_salt: int = 50_000       # target run length per salted sub-group
     # heavy-hitter detection runs on a sample (classic sketch-style
@@ -210,9 +215,9 @@ class BuildConfig:
     # path — salting is a memory-bound mechanism, never a correctness one,
     # and the sampled pass is ~1/sample_rate cheaper than a full df agg.
     hot_detection_sample: float = 0.02
-    # segment_hot_terms=True keeps each salted run as its OWN index row
-    # (term, segment, postings) instead of merging to one row per term —
-    # bounding every Arrow row/array by docs_per_salt. Required at true
+    # segment_hot_terms=True salts hot terms and keeps each salted run as
+    # its OWN index row (term, segment, postings) instead of one row per
+    # term — bounding every Arrow row/array by docs_per_salt. Required at true
     # 10^12-file scale where one hot term's full posting list cannot live in
     # a single row; df on every segment row is the TERM-TOTAL df so idf is
     # computable from any segment. Query paths sum per-doc contributions
@@ -279,68 +284,53 @@ def build_postings(
     cfg: BuildConfig = BuildConfig(),
     hot: DataFrame | None = None,
 ) -> DataFrame:
-    """tf triples → compressed index with explicit hot-term salting.
+    """tf triples → compressed index: one JVM-sorted (doc_id, tf) array per
+    index row, encoded by one Arrow pass.
 
-    Shuffle/skew profile: stage 1 groups by (term, salt) so no single
-    reduce-side group exceeds ~docs_per_salt rows even for `def`/`import`
-    grade hot terms; stage 2 re-groups the (few, pre-aggregated) salted runs
-    per term — rows shuffled there = number of sub-runs, not postings. All
-    grouping/sorting is JVM hash-agg + array_sort; Python only encodes the
-    final arrays through one Arrow pass.
+    Merged layout (the default): one row per term, built by ONE shuffle —
+    groupBy(term) with a map-side partial collect_list, then array_sort.
+    The whole list of a term is one row in one task however it is grouped,
+    so salting would only add a hot-term join and a second shuffle of every
+    posting array; `hot` is accepted and unused here.
 
-    hot: optional precomputed (term, n_salts) — build_index passes a
-    corpus-sample estimate so the broadcast pre-job doesn't force a full
-    tokenize pass before the main build starts (VERDICT r1: the detection
-    job was the build's fixed serial share).
+    Segmented layout (cfg.segment_hot_terms): the explicit skew handling.
+    Hot terms (df > hot_df_threshold) are salted into
+    pmod(xxhash64(doc_id), n_salts) runs of ~docs_per_salt postings, and
+    each run stays its own (term, segment) row, so no group or Arrow row
+    holds a hot term's whole list. df on every segment row is the term
+    total, a window sum over its segments. hot: optional precomputed
+    (term, n_salts) — build_index passes a corpus-sample estimate so the
+    broadcast pre-job doesn't force a full tokenize pass before the main
+    build starts (VERDICT r1: the detection job was the build's fixed
+    serial share); None detects on tf_df.
     """
-    if hot is None:
-        hot = detect_hot_terms(tf_df, cfg)
-    salted = (
-        tf_df.join(F.broadcast(hot), "term", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("n_salts").isNotNull(),
-                F.pmod(F.xxhash64("doc_id"), F.col("n_salts")).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("n_salts")
-    )
-    runs = salted.groupBy("term", "salt").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "tf"))).alias("pairs")
-    )
-    enc = _encode_pairs_udf()
+    pairs = F.array_sort(F.collect_list(F.struct("doc_id", "tf"))).alias("pairs")
     if cfg.segment_hot_terms:
-        # one index row per (term, segment): every array bounded by
-        # ~docs_per_salt; df = term total via a window sum over segments
-        w = Window.partitionBy("term")
-        seg = runs.select(
-            "term",
-            F.col("salt").alias("segment"),
-            F.size("pairs").alias("seg_df"),
-            F.array_max(F.col("pairs").getField("tf")).alias("max_tf"),
-            "pairs",
-        ).withColumn("df", F.sum("seg_df").over(w))
-        return seg.withColumn("_enc", enc(F.col("pairs"))).select(
-            "term",
-            "segment",
-            "df",
-            "max_tf",
-            F.col("_enc.postings").alias("postings"),
-            F.col("_enc.bm_tfs").alias("bm_tfs"),
+        if hot is None:
+            hot = detect_hot_terms(tf_df, cfg)
+        salt = F.when(
+            F.col("n_salts").isNotNull(),
+            F.pmod(F.xxhash64("doc_id"), F.col("n_salts")).cast("int"),
+        ).otherwise(F.lit(0))
+        runs = (
+            tf_df.join(F.broadcast(hot), "term", "left")
+            .groupBy("term", salt.alias("segment"))
+            .agg(pairs)
         )
-    merged = (
-        runs.groupBy("term")
-        .agg(F.array_sort(F.flatten(F.collect_list("pairs"))).alias("pairs"))
-        .select(
-            "term",
-            F.size("pairs").alias("df"),
-            F.array_max(F.col("pairs").getField("tf")).alias("max_tf"),
-            "pairs",
-        )
-    )
-    return merged.withColumn("_enc", enc(F.col("pairs"))).select(
-        "term",
+        keys = ["term", "segment"]
+        term_df = F.sum(F.size("pairs")).over(Window.partitionBy("term"))
+    else:
+        runs = tf_df.groupBy("term").agg(pairs)
+        keys = ["term"]
+        term_df = F.size("pairs")
+    enc = _encode_pairs_udf()
+    return runs.select(
+        *keys,
+        term_df.alias("df"),
+        F.array_max(F.col("pairs").getField("tf")).alias("max_tf"),
+        enc(F.col("pairs")).alias("_enc"),
+    ).select(
+        *keys,
         "df",
         "max_tf",
         F.col("_enc.postings").alias("postings"),
@@ -362,6 +352,10 @@ def build_index(
     collection_stats, postings) would otherwise each re-tokenize the corpus.
     On a cluster build this materialization is the tf-unit parquet write of
     pipelines/lineage.py; in-memory persist is the single-job equivalent.
+
+    The sampled hot-term pass (detect_hot_terms over a tokenized doc
+    sample) runs only for cfg.segment_hot_terms, the layout that salts; the
+    merged layout is one tokenize and one postings shuffle.
 
     positions=True (VERDICT r3 #4): ONE tokenize pass
     (tokenize_tf_positions, tokenize_tf's kernel) emits (doc_id, term, tf,
@@ -391,22 +385,21 @@ def build_index(
             tf_df = tf_df.persist()
     ds = doc_stats(tf_df)
     cs = collection_stats(ds)
-    # Hot-term detection from a DOC sample of the corpus, not from tf_df:
-    # sampling tf_df would force the broadcast pre-job to tokenize the whole
-    # corpus before the main build starts (it was the build's fixed serial
-    # share); tokenizing hot_detection_sample of the docs costs ~1/sample of
-    # that. Per-doc (term, doc) pair counts / sample is the same unbiased df
-    # estimator either way.
+    # Segmented layout only: hot-term detection from a DOC sample of the
+    # corpus, not from tf_df. Sampling tf_df would force the broadcast
+    # pre-job to tokenize the whole corpus before the main build starts (it
+    # was the build's fixed serial share); tokenizing hot_detection_sample
+    # of the docs costs ~1/sample of that. Per-doc (term, doc) pair counts /
+    # sample is the same unbiased df estimator either way.
+    hot = None
     sample = cfg.hot_detection_sample
-    if 0 < sample < 1:
+    if cfg.segment_hot_terms and 0 < sample < 1:
         sampled_tf = tokenize_tf(
             ids.sample(fraction=sample, seed=42),
             cfg.strategy, cfg.stem, cfg.stopwords,
         )
         hot = detect_hot_terms(sampled_tf, cfg, scale=sample)
-        idx = build_postings(tf_df, cfg, hot=hot)
-    else:
-        idx = build_postings(tf_df, cfg)
+    idx = build_postings(tf_df, cfg, hot=hot)
     if positions:
         return idx, ds, cs, pos_idx
     return idx, ds, cs

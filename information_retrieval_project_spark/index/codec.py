@@ -189,8 +189,7 @@ def encode_posting_lists(
 
 def merge_sorted_runs(runs: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
     """Merge sorted (doc_id, tf) runs for one term, summing tf on duplicate
-    doc_ids (duplicates appear when a salted hot term is re-merged, or on
-    resumed incremental builds). Vectorized concat+sort merge — the runs are
+    doc_ids (duplicates appear on resumed incremental builds). Vectorized concat+sort merge — the runs are
     per-partition outputs so a k-way heap merge is unnecessary at this level.
     """
     if not runs:

@@ -1,8 +1,8 @@
 """Incremental index merge: base index ⊕ delta index → merged index.
 
 north_rule names posting-list *merge* as a first-class capability. The batch
-build merges salted runs within one build (build_postings); this module
-merges ACROSS builds — the daily-increment shape at 10^12-file scale, where
+build groups each term's postings within one build (build_postings); this
+module merges ACROSS builds — the daily-increment shape at 10^12-file scale, where
 re-encoding the whole index for a 0.1% corpus delta is unaffordable.
 
 Cost profile: a FULL OUTER join on term (the only shuffle, keyed the same

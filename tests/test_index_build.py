@@ -93,15 +93,17 @@ def test_collection_stats(built):
 
 
 def test_postings_match_tf_and_salting_is_lossless(built):
-    """Salted multi-run path must produce byte-identical logical postings to
-    the tf relation: exact df, sorted unique doc ids, exact tf."""
+    """Both layouts hold exactly the tf relation. The merged layout groups
+    each term once: one row per term with exact df, sorted unique doc ids
+    and exact tf. The segmented layout is the salted one: a hot term's
+    segments are disjoint sorted runs whose union is the term's tf
+    postings."""
     _, tf_df, _, _, idx, _ = built
     expect = {}
     for r in tf_df.collect():
         expect.setdefault(r["term"], {})[r["doc_id"]] = r["tf"]
     got = idx.collect()
     assert len(got) == len(expect)
-    salted_terms = 0
     for row in got:
         d, t = decode_postings(bytes(row["postings"]))
         exp = expect[row["term"]]
@@ -110,9 +112,27 @@ def test_postings_match_tf_and_salting_is_lossless(built):
         assert t.tolist() == [exp[x] for x in sorted(exp)]
         dl = d.tolist()  # python ints: int64 np.diff overflows on hash range
         assert all(x < y for x, y in zip(dl, dl[1:]))  # strictly sorted, no dups
-        if len(exp) > 50:
-            salted_terms += 1
-    assert salted_terms > 0  # the hot path was actually exercised
+    seg_idx = build_postings(
+        tf_df,
+        BuildConfig(
+            hot_df_threshold=50, docs_per_salt=100, hot_detection_sample=1.0,
+            segment_hot_terms=True,
+        ),
+    )
+    segments = {}
+    for row in seg_idx.collect():
+        d, t = decode_postings(bytes(row["postings"]))
+        dl = d.tolist()
+        assert all(x < y for x, y in zip(dl, dl[1:]))  # sorted, no dups
+        segments.setdefault(row["term"], []).append(dict(zip(dl, t.tolist())))
+    assert segments.keys() == expect.keys()
+    for term, runs in segments.items():
+        union = {}
+        for run in runs:
+            assert not union.keys() & run.keys(), term  # disjoint segments
+            union.update(run)
+        assert union == expect[term], term
+    assert max(len(runs) for runs in segments.values()) > 1  # salting ran
 
 
 @pytest.mark.parametrize("query", QUERIES)
@@ -186,10 +206,11 @@ def test_segmented_hot_terms_rank_identical(spark, built):
 
 
 # sha256 over the term-sorted stored rows of build_postings(generate_corpus(
-# spark, 1000, seed=42)) with salting on (hot_df_threshold=200), keyed by
-# segment_hot_terms. The rows are the on-disk index format: if this digest
-# changes, the format changed, and that change needs a new
-# build.INDEX_FORMAT, the version every snapshot commits in its state.json.
+# spark, 1000, seed=42)), keyed by segment_hot_terms; hot_df_threshold=200
+# salts the segmented layout (the merged layout never salts). The rows are
+# the on-disk index format: if this digest changes, the format changed, and
+# that change needs a new build.INDEX_FORMAT, the version every snapshot
+# commits in its state.json.
 GOLDEN_INDEX_SHA256 = {
     False: "ddc63a9ce1553a7066df3126de4e1684ff2f4b30ebbef51929ef8d94609e651a",
     True: "4c452f819e25961e589576721ab62e1f8d28175466d7066fd99dca80c8aa1eff",

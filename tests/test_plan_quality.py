@@ -237,6 +237,38 @@ def test_build_positions_is_shuffle_free(spark, sf_dir):
     assert "Exchange" not in plan(build_positions(docs))
 
 
+def test_merged_build_is_one_postings_shuffle(spark):
+    """The merged layout (the default) sorts each term's posting list in
+    one shuffle: groupBy(term) under the encode, with no hot-term broadcast
+    join and no xxhash64(doc_id) salt. build_index tokenizes once and
+    samples nothing. The segmented layout keeps its salt, the skew handling
+    that bounds each of its rows."""
+    import re
+
+    from information_retrieval_project_spark.corpus import generate_corpus
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        build_index,
+        build_postings,
+    )
+
+    tf = spark.createDataFrame(
+        [(d, t, d % 7 + 1) for d in range(50) for t in ("aa", "bb")],
+        "doc_id long, term string, tf long",
+    )
+    merged = plan(build_postings(tf, BuildConfig()))
+    # the Arguments line of every (Broadcast)Exchange of the formatted plan
+    ex = re.findall(r"^\(\d+\) \w*Exchange\n(?:.*\n)*?Arguments: (.*)", merged, re.M)
+    assert len(ex) == 1 and ex[0].startswith("hashpartitioning(term#"), merged
+    assert "BroadcastHashJoin" not in merged
+    assert not re.search(r"xxhash64\(doc_id#", merged), merged
+    built = plan(build_index(generate_corpus(spark, 40, partitions=2), cache=False)[0])
+    assert len(re.findall(r"^\(\d+\) MapInArrow$", built, re.M)) == 1, built
+    assert "Sample" not in built, built
+    seg = plan(build_postings(tf, BuildConfig(segment_hot_terms=True)))
+    assert re.search(r"xxhash64\(doc_id#", seg), seg
+
+
 def test_facet_counts_plan_shape(spark, sf_dir):
     """Facet counts must broadcast both small sides (query terms, match
     set) and explode facet dimensions through ONE generator — never a

@@ -3,7 +3,10 @@
 Usage: python tools/explain_dump.py <out_dir> <suffix> [names...]
 Writes <out_dir>/<name>_<suffix>.txt per query. Suffix is e.g. "before" /
 "after". The serving path entry ("bm25_served") builds a small index
-in-process and explains bm25_topk_compressed (the served top-k path).
+in-process and explains bm25_topk_compressed (the served top-k path). The
+"index_build" entry explains build_postings over a tokenized corpus for both
+layouts, writing index_build_merged_<suffix>.txt and
+index_build_segmented_<suffix>.txt.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ def fmt_plan(df) -> str:
 
 def main() -> None:
     out_dir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or DEFAULT + ["bm25_served", "bm25_batch_served"]
+    names = sys.argv[3:] or DEFAULT + ["bm25_served", "bm25_batch_served", "index_build"]
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -41,27 +44,36 @@ def main() -> None:
     try:
         served = [n for n in names if n.startswith("bm25_served") or n.startswith("bm25_batch_served")]
         for name in names:
-            if name in served:
+            if name in served or name == "index_build":
                 continue
             df = EQ.QUERIES[name](spark, sf_dir)
             with open(f"{out_dir}/{name}_{suffix}.txt", "w") as f:
                 f.write(fmt_plan(df))
             print(f"wrote {name}_{suffix}")
+        from information_retrieval_project_spark.corpus import generate_corpus
+        from information_retrieval_project_spark.index.build import (
+            BuildConfig,
+            build_index,
+            build_postings,
+            tokenize_tf,
+            with_doc_id,
+        )
+
+        if "index_build" in names:
+            tf = tokenize_tf(with_doc_id(generate_corpus(spark, 2000, partitions=8)))
+            for layout, segmented in (("merged", False), ("segmented", True)):
+                idx = build_postings(tf, BuildConfig(segment_hot_terms=segmented))
+                with open(f"{out_dir}/index_build_{layout}_{suffix}.txt", "w") as f:
+                    f.write(fmt_plan(idx))
+                print(f"wrote index_build_{layout}_{suffix}")
         if served:
-            from information_retrieval_project_spark.corpus import generate_corpus
-            from information_retrieval_project_spark.index.build import (
-                BuildConfig,
-                build_index,
-            )
             from information_retrieval_project_spark.queryexec.wand import (
                 bm25_topk_compressed,
                 bm25_topk_batch_compressed,
             )
 
             corpus = generate_corpus(spark, 20000, partitions=8)
-            idx, ds, cs_df = build_index(
-                corpus, BuildConfig(hot_df_threshold=20000, docs_per_salt=20000)
-            )
+            idx, ds, cs_df = build_index(corpus)
             idx = idx.cache()
             ds = ds.cache()
             cs = cs_df.collect()[0]
