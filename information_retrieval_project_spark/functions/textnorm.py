@@ -1,28 +1,32 @@
-"""Frozen text normalization + tokenization.
+"""Frozen text analysis: the one definition of how text becomes terms.
 
-This module is the single source of truth for text semantics: the Spark
-engine applies these functions inside vectorized Arrow/pandas UDFs and the
-numpy oracle (oracle/oracle.py) calls the very same functions, so engine and
-oracle are rank-identical by construction (SURVEY.md §7.0).
+`analyze` is the package's only tokenizer: the index build runs it on
+documents in its mapInArrow kernel (index/build._tokenize_arrow, tf and
+positions alike), and queries and the numpy oracle run it on the driver
+(`tokenize`, `normalize_tokenize`). The analyzer (strategy, stem,
+stopwords) is committed in every snapshot's state.json and checked by every
+store writer and reader (index/manifest.py).
 
-Reference semantics mirrored (see /root/reference/python):
+Reference semantics mirrored (the reference repo's python sources):
 - 13-symbol replacement + lowercase + stopword removal + punctuation strip +
-  lemmatization: ``clean_normalize``, data_manager.py:74-88. The reference's
-  lemma step (spaCy, applied via substring replace) is model-dependent and
-  non-deterministic across environments, so we freeze a deterministic Porter
-  stemmer in its place (documented decision, SURVEY.md §7.0).
-- 4-way tokenizer strategy switch: tokenizers.py:8-45. Our strategies are
-  deterministic regex variants; the default "code" strategy suits the
-  source-code corpus of BASELINE.json input_hint.
-
-Everything here is pure Python/regex with no external model downloads —
-fully deterministic and checked into the repo.
+  lemmatization: ``clean_normalize``, data_manager.py:74-88, which
+  `analyze`'s parity mode runs as Arrow steps. The reference's lemma step
+  (spaCy) is model-dependent, so we freeze a deterministic Porter stemmer
+  in its place (documented decision, SURVEY.md §7.0).
+- 4-way tokenizer strategy switch: tokenizers.py:8-45, as RE2 split
+  patterns; the default "code" strategy suits the source-code corpus of
+  BASELINE.json input_hint.
 """
 
 from __future__ import annotations
 
 import re
 import string
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # The 13 symbols the reference replaces with spaces (data_manager.py:75-77).
 REPLACED_SYMBOLS = [",", ".", ";", "(", ")", "?", "!", "&", "%", ":", "*", '"', "-"]
@@ -44,16 +48,71 @@ STOPWORDS: frozenset[str] = frozenset(
 
 _PUNCT = set(string.punctuation)
 
-_TOKEN_PATTERNS = {
-    # default for source code: identifiers/numbers on lowered text
-    "code": re.compile(r"[a-z0-9_]+"),
-    # mirrors keras text_to_word_sequence: split on whitespace after filtering
-    "keras": re.compile(r"\S+"),
-    # mirrors gensim.utils.tokenize: alphabetic runs only
-    "gensim": re.compile(r"[a-z]+"),
-    # approximates nltk word_tokenize on normalized text: word chars
-    "nltk": re.compile(r"\w+"),
+# RE2 split pattern per strategy, applied to lower-cased text: the tokens
+# are the non-empty pieces between matches
+_SPLIT_PATTERNS = {
+    # identifiers/numbers == native split(lower(x), '[^a-z0-9_]+') == DuckDB
+    "code": "[^a-z0-9_]+",
+    # after gensim.utils.tokenize: alphabetic runs only
+    "gensim": "[^a-z]+",
+    # approximates nltk word_tokenize: ASCII word characters
+    "nltk": "[^a-z0-9_]+",
+    # after keras text_to_word_sequence: whitespace-separated chunks
+    "keras": r"\s+",
 }
+# parity mode: the reference's symbols become spaces, words split on the
+# whitespace of Python's str.split() (str.isspace: Arrow's
+# utf8_split_whitespace misses a trailing multi-byte space such as NBSP),
+# and the other ASCII punctuation but "_" is deleted from each word
+_SYMBOLS_RE = "[" + "".join(re.escape(s) for s in REPLACED_SYMBOLS) + "]"
+_SPACE_RE = r"[\t\n\v\f\r\x1c-\x1f\x85\p{Z}]+"
+_PUNCT_RE = "[" + re.escape(string.punctuation.replace("_", "")) + "]"
+_STOPWORD_SET = pa.array(sorted(STOPWORDS), pa.string())
+
+
+class Analyzer(NamedTuple):
+    """A strategy (a key of _SPLIT_PATTERNS) and the reference's optional
+    stemming and stopword removal (parity mode)."""
+
+    strategy: str = "code"
+    stem: bool = False
+    stopwords: bool = False
+
+
+def analyze(texts: pa.Array, analyzer: Analyzer = Analyzer()) -> pa.ListArray:
+    """texts → one list of terms per text, in text order; a null text has
+    none. A list may hold empty strings where a separator starts or ends
+    the text: callers drop them in the flatten they run anyway, so the
+    default analyzer is two kernels (utf8_lower, split_pattern_regex).
+
+    Parity mode (stem and/or stopwords) runs clean_normalize's steps in its
+    order, as Arrow kernels: the 13 symbols become spaces, lower-case,
+    split on whitespace and drop stopwords, delete punctuation but "_",
+    Porter-stem once per distinct word of the batch, then split each word
+    with the strategy's pattern."""
+    pat = _SPLIT_PATTERNS.get(analyzer.strategy)
+    if pat is None:
+        raise ValueError(f"unknown tokenizer strategy: {analyzer.strategy!r}")
+    if not analyzer.stem and not analyzer.stopwords:
+        return pc.split_pattern_regex(pc.utf8_lower(texts), pat)
+    words = pc.split_pattern_regex(
+        pc.utf8_lower(pc.replace_substring_regex(texts, _SYMBOLS_RE, " ")),
+        _SPACE_RE,
+    )
+    flat, parents = pc.list_flatten(words), pc.list_parent_indices(words)
+    if analyzer.stopwords:
+        keep = pc.invert(pc.is_in(flat, _STOPWORD_SET))
+        flat, parents = flat.filter(keep), parents.filter(keep)
+    flat = pc.replace_substring_regex(flat, _PUNCT_RE, "")
+    if analyzer.stem:
+        uniq = pc.unique(flat)
+        stems = pa.array([porter_stem(w) for w in uniq.to_pylist()], flat.type)
+        flat = stems.take(pc.index_in(flat, uniq))
+    pieces = pc.split_pattern_regex(flat, pat)
+    parents = parents.take(pc.list_parent_indices(pieces)).to_numpy()
+    offsets = np.zeros(len(texts) + 1, np.int32)
+    np.cumsum(np.bincount(parents, minlength=len(texts)), out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, pc.list_flatten(pieces))
 
 
 def clean_normalize(text: str, *, stem: bool = False, stopwords: bool = True) -> str:
@@ -75,11 +134,8 @@ def clean_normalize(text: str, *, stem: bool = False, stopwords: bool = True) ->
 
 
 def tokenize(text: str, strategy: str = "code") -> list[str]:
-    """Tokenize lowered text with the chosen frozen strategy."""
-    pat = _TOKEN_PATTERNS.get(strategy)
-    if pat is None:
-        raise ValueError(f"unknown tokenizer strategy: {strategy!r}")
-    return pat.findall(text.lower())
+    """The terms of one text under a strategy, without stem or stopwords."""
+    return normalize_tokenize(text, strategy)
 
 
 def normalize_tokenize(
@@ -89,16 +145,11 @@ def normalize_tokenize(
     stem: bool = False,
     stopwords: bool = False,
 ) -> list[str]:
-    """The engine's full text→tokens path.
-
-    Default mode (no stem, no stopword removal) is pure regex tokenization of
-    the lowered text — semantically identical to the native
-    `split(lower(text), '[^a-z0-9_]+')` plan used in the SQL-checkable
-    queries, and vectorizable batch-side. Parity mode (stem/stopwords) runs
-    the reference-shaped clean_normalize first (data_manager.py:74-88)."""
-    if not stem and not stopwords:
-        return tokenize(text, strategy)
-    return tokenize(clean_normalize(text, stem=stem, stopwords=stopwords), strategy)
+    """The terms of one text under the analyzer (strategy, stem, stopwords):
+    `analyze` of a one-text array, the driver-side path of queries. The
+    default is `split(lower(text), '[^a-z0-9_]+')` minus empty strings."""
+    terms = analyze(pa.array([text], pa.string()), Analyzer(strategy, stem, stopwords))
+    return [t for t in terms[0].as_py() if t]
 
 
 # ---------------------------------------------------------------------------

@@ -33,16 +33,16 @@ All row-wise compute is vectorized pandas/Arrow (input_hint rule).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from dataclasses import dataclass
 from functools import partial
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa  # module scope: arrow_udf resolves its string annotations here
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.textnorm import Analyzer, analyze
 from . import manifest
 from .bucketing import write_bucketed
 from .codec import encode_posting_lists
@@ -50,17 +50,10 @@ from .codec import encode_posting_lists
 TF_SCHEMA = "doc_id long, term string, tf long"
 TF_POS_SCHEMA = f"{TF_SCHEMA}, positions array<int>"
 
-# native split patterns per tokenizer strategy: split on the complement of
-# the token class == findall of the class (empties filtered)
-_SPLIT_PATTERNS = {
-    "code": "[^a-z0-9_]+",
-    "gensim": "[^a-z]+",
-    "nltk": "[^a-z0-9_]+",  # \w+ on lowered ascii text
-    "keras": r"\s+",
-}
 # committed in every index snapshot's state.json; a snapshot of another
 # format is refused, not misread. v2: index rows carry no bm_docs column.
-INDEX_FORMAT = "postings-v2"
+# v3: state.json records the analyzer the index was tokenized with.
+INDEX_FORMAT = "postings-v3"
 
 
 def with_doc_id(corpus: DataFrame) -> DataFrame:
@@ -74,15 +67,14 @@ def with_doc_id(corpus: DataFrame) -> DataFrame:
     ).withColumn("content_sha", F.sha2("content", 256))
 
 
-def _tokenize_arrow(split_pat: str, positions: bool, batches):
+def _tokenize_arrow(analyzer: Analyzer, positions: bool, batches):
     """The one tokenize kernel, the mapInArrow body of tokenize_tf
     (positions=False → TF_SCHEMA) and tokenize_tf_positions (positions=True
-    → TF_POS_SCHEMA). Module level, so the UDF is pickled by reference:
+    → TF_POS_SCHEMA): textnorm.analyze, then the per-doc term counts or
+    positions. Module level, so the UDF is pickled by reference:
     unpickling it imports the package on the worker, which installs
     zipguard for the worker's later tasks (a nested closure would be
     pickled by value and import nothing of the package)."""
-    import pyarrow.compute as pc
-
     # Spark owns parallelism: one Arrow CPU thread per task worker.
     # Arrow's default pool is os.cpu_count() wide, so every task
     # would otherwise fan out machine-wide — oversubscribing the
@@ -91,8 +83,7 @@ def _tokenize_arrow(split_pat: str, positions: bool, batches):
 
     for batch in batches:
         tbl = pa.Table.from_batches([batch])
-        low = pc.utf8_lower(tbl["content"].combine_chunks())
-        toks = pc.split_pattern_regex(low, split_pat)
+        toks = analyze(tbl["content"].combine_chunks(), analyzer)
         flat = pc.list_flatten(toks)
         parents = pc.list_parent_indices(toks)
         doc_ids = pc.take(tbl["doc_id"].combine_chunks(), parents)
@@ -127,68 +118,34 @@ def tokenize_tf(
 ) -> DataFrame:
     """(doc_id, content) → (doc_id, term, tf), tf finished inside the batch.
 
-    Default path is mapInArrow over pure Arrow C++ kernels
-    (utf8_lower → split_pattern_regex → list_flatten/list_parent_indices →
-    Acero hash group_by): no Python objects in the loop at all. It is the
-    one tokenizer of the package's index builds: tokenize_tf_positions runs
-    the same kernel, so tf and positions can never tokenize apart. Measured
+    One mapInArrow: textnorm.analyze under the analyzer (strategy, stem,
+    stopwords), the tokenizer of queries and the oracle too, then an Acero
+    hash group_by; tokenize_tf_positions runs the same kernel. Measured
     ladder at 600k docs, local[8] (BENCH notes): native explode+groupBy
-    ≈ slowest (Java regex + 100M-row explosion), pandas str.findall 16.0 s,
-    Arrow kernels 5.96 s — and the Arrow path strong-scales at ~0.76/stage
-    where the pandas path was memory-bandwidth bound at ~0.45. The
-    (doc_id, term) reduction finishes inside the batch, so the only
-    downstream shuffles are the slim tf triples.
-
-    Parity mode (stem/stopwords — the reference-shaped pipeline,
-    data_manager.py:74-88) runs the frozen Python normalizer in a pandas
-    pass instead; it shares code with the oracle by construction.
-    """
-    if not stem and not stopwords:
-        return corpus_with_id.select("doc_id", "content").mapInArrow(
-            partial(_tokenize_arrow, _SPLIT_PATTERNS[strategy], False), TF_SCHEMA
-        )
-
-    from ..functions.textnorm import _TOKEN_PATTERNS, clean_normalize
-
-    pat = _TOKEN_PATTERNS[strategy]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf["content"].map(
-                lambda t: clean_normalize(t, stem=stem, stopwords=stopwords)
-            )
-            tok_lists = texts.str.lower().str.findall(pat)
-            lens = tok_lists.str.len().to_numpy(dtype=np.int64)
-            if lens.sum() == 0:
-                continue
-            doc_ids = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
-            terms = np.concatenate([np.asarray(t, dtype=object) for t in tok_lists])
-            out = (
-                pd.DataFrame({"doc_id": doc_ids, "term": terms})
-                .groupby(["doc_id", "term"], sort=False)
-                .size()
-                .rename("tf")
-                .reset_index()
-            )
-            yield out
-
-    return corpus_with_id.select("doc_id", "content").mapInPandas(gen, TF_SCHEMA)
+    slowest, a pandas regex pass 16.0 s, Arrow kernels 5.96 s (strong-scaling
+    ~0.76/stage against pandas' ~0.45). The (doc_id, term) reduction
+    finishes inside the batch, so the only downstream shuffles are the slim
+    tf triples."""
+    return corpus_with_id.select("doc_id", "content").mapInArrow(
+        partial(_tokenize_arrow, Analyzer(strategy, stem, stopwords), False),
+        TF_SCHEMA,
+    )
 
 
 def tokenize_tf_positions(
-    corpus_with_id: DataFrame, strategy: str = "code"
+    corpus_with_id: DataFrame,
+    strategy: str = "code",
+    stem: bool = False,
+    stopwords: bool = False,
 ) -> DataFrame:
-    """(doc_id, content) → (doc_id, term, tf, positions array<int>) in one
-    mapInArrow scan over tokenize_tf's kernel, with no shuffle: every
-    position of a term within a doc lives in that doc's single content row,
-    so the (doc_id, term) group is complete inside the Arrow batch. Each
-    list holds the term's ascending token indices among the doc's tokens
-    and tf is its length. A deployment building both the inverted index and
-    the positional index derives both relations from this one pass
-    (build_index(positions=True)), so scan+tokenize runs once, not once per
-    index."""
+    """(doc_id, content) → (doc_id, term, tf, positions array<int>): one
+    shuffle-free mapInArrow over tokenize_tf's kernel (a doc's positions all
+    live in its one content row). Each list holds the term's ascending
+    indices among the doc's kept terms and tf is its length;
+    build_index(positions=True) derives tf and positions from this pass."""
     return corpus_with_id.select("doc_id", "content").mapInArrow(
-        partial(_tokenize_arrow, _SPLIT_PATTERNS[strategy], True), TF_POS_SCHEMA
+        partial(_tokenize_arrow, Analyzer(strategy, stem, stopwords), True),
+        TF_POS_SCHEMA,
     )
 
 
@@ -226,6 +183,10 @@ class BuildConfig:
     strategy: str = "code"
     stem: bool = False
     stopwords: bool = False
+
+    @property
+    def analyzer(self) -> Analyzer:
+        return Analyzer(self.strategy, self.stem, self.stopwords)
 
 
 def _encode_pairs_udf():
@@ -362,17 +323,11 @@ def build_index(
     positions) — tf and the positional index are projections of the same
     materialized relation, so an index+positions deployment scans and
     tokenizes the corpus ONCE, and its tf equals positions=False's for
-    every strategy. Not supported with stem/stopwords parity mode
-    (positions are defined on the raw token stream)."""
+    every analyzer, parity mode included."""
     ids = with_doc_id(corpus)
     pos_idx = None
     if positions:
-        if cfg.stem or cfg.stopwords:
-            raise ValueError(
-                "positions=True requires the raw token stream "
-                "(stem/stopwords parity mode unsupported)"
-            )
-        fused = tokenize_tf_positions(ids, cfg.strategy)
+        fused = tokenize_tf_positions(ids, *cfg.analyzer)
         if cache:
             fused = fused.persist()
         tf_df = fused.select("doc_id", "term", "tf")
@@ -380,7 +335,7 @@ def build_index(
             "term", "doc_id", F.col("tf").alias("n_occ"), "positions"
         )
     else:
-        tf_df = tokenize_tf(ids, cfg.strategy, cfg.stem, cfg.stopwords)
+        tf_df = tokenize_tf(ids, *cfg.analyzer)
         if cache:
             tf_df = tf_df.persist()
     ds = doc_stats(tf_df)
@@ -395,8 +350,7 @@ def build_index(
     sample = cfg.hot_detection_sample
     if cfg.segment_hot_terms and 0 < sample < 1:
         sampled_tf = tokenize_tf(
-            ids.sample(fraction=sample, seed=42),
-            cfg.strategy, cfg.stem, cfg.stopwords,
+            ids.sample(fraction=sample, seed=42), *cfg.analyzer
         )
         hot = detect_hot_terms(sampled_tf, cfg, scale=sample)
     idx = build_postings(tf_df, cfg, hot=hot)
@@ -412,15 +366,17 @@ def write_index(
     out_dir: str,
     term_buckets: int = 32,
     state: dict | None = None,
+    analyzer: Analyzer = Analyzer(),
 ) -> str:
     """Commit (index, doc_stats, collection_stats) as the next snapshot of
     the store at out_dir (index/manifest.py); returns its name. The index is
     term-bucketed (index/bucketing.py) so query-time term lookups prune
     partitions (SURVEY.md §4.2). One state.json holds the format, the
-    modulus, the one-row cs collected on the driver, each relation's schema
-    and the caller's `state`. Queries must hash terms with the SAME modulus
-    or pruning silently drops valid postings (ADVICE r1): it commits with
-    the data, so nothing pairs an index with another modulus or stats."""
+    modulus, the analyzer idx was tokenized with, the one-row cs collected
+    on the driver, each relation's schema and the caller's `state`. Queries
+    must hash terms with the SAME modulus or pruning silently drops valid
+    postings (ADVICE r1): it commits with the data, so nothing pairs an
+    index with another modulus or stats."""
     manifest.committed(out_dir, INDEX_FORMAT, required=False)
     staging = manifest.begin(out_dir)
     write_bucketed(idx, os.path.join(staging, "index"), term_buckets)
@@ -433,6 +389,7 @@ def write_index(
             **(state or {}),
             "index_format": INDEX_FORMAT,
             "term_buckets": int(term_buckets),
+            "analyzer": analyzer._asdict(),
             "n_docs": stats["n_docs"],
             "avgdl": stats["avgdl"],
             "total_terms": stats["total_terms"],
@@ -450,8 +407,9 @@ def _ddl(df: DataFrame) -> str:
 
 def read_index_meta(spark: SparkSession, out_dir: str) -> dict:
     """The committed snapshot's state.json (term_buckets, index_format,
-    collection stats, schemas, caller state), read on the driver: no Spark
-    job. Raises SnapshotStoreError naming the dir for any other layout."""
+    the analyzer as a textnorm.Analyzer, collection stats, schemas, caller
+    state), read on the driver: no Spark job. Raises SnapshotStoreError
+    naming the dir for any other layout."""
     return manifest.committed(out_dir, INDEX_FORMAT)[1]
 
 

@@ -10,8 +10,8 @@ Layout of a store dir:
     _staging_vNNNNNN/    a snapshot being written
 
 A snapshot is a complete dir of data files plus a driver-written
-state.json (the store's `index_format`, term-bucket modulus and caller
-state; committed() is its validated read). A commit publishes the
+state.json (the store's `index_format`, term-bucket modulus, analyzer and
+caller state; committed() is its validated read). A commit publishes the
 staged dir with ONE os.rename, then flips CURRENT atomically (write a tmp
 file, fsync it, os.replace), then garbage-collects. A crash at any point
 leaves CURRENT on a complete snapshot; the next writer removes what the
@@ -30,6 +30,8 @@ import json
 import os
 import shutil
 import time
+
+from ..functions.textnorm import _SPLIT_PATTERNS, Analyzer
 
 CURRENT = "CURRENT"
 STATE = "state.json"
@@ -98,13 +100,15 @@ def read_state(snapshot: str) -> dict:
 
 
 def committed(
-    store: str, fmt: str, required: bool = True
+    store: str, fmt: str, required: bool = True, analyzer: Analyzer | None = None
 ) -> tuple[str, dict] | None:
-    """(path, state) of the committed snapshot, written in format `fmt`;
-    None if nothing is committed and not `required`. A snapshot of another
-    format or with an invalid term-bucket modulus raises, naming the dir:
-    misreading either would silently drop valid rows. Writers call it
-    before begin(), so no store stacks a snapshot on another format."""
+    """(path, state) of the committed snapshot, written in format `fmt`,
+    with state["analyzer"] as an Analyzer; None if nothing is committed and
+    not `required`. A snapshot of another format, with an invalid
+    term-bucket modulus or analyzer, or (when `analyzer` is given) with
+    another analyzer raises, naming the dir: misreading any of them would
+    silently drop valid rows. Writers call it before begin(), those merging
+    a delta with their analyzer, so no store mixes formats or analyzers."""
     snap = current(store)
     if snap is None:
         if required:
@@ -121,7 +125,16 @@ def committed(
         raise SnapshotStoreError(
             f"corrupt {STATE} in {snap}: term_buckets={tb!r}"
         )
-    return snap, state
+    try:
+        got = Analyzer(**state["analyzer"])
+        valid = got.strategy in _SPLIT_PATTERNS and {*map(type, got[1:])} == {bool}
+    except (KeyError, TypeError):
+        valid = False
+    if not valid:
+        raise SnapshotStoreError(f"corrupt {STATE} in {snap}: {state.get('analyzer')=}")
+    if analyzer not in (None, got):
+        raise SnapshotStoreError(f"snapshot {snap} is {got}, not {analyzer}")
+    return snap, {**state, "analyzer": got}
 
 
 def begin(store: str) -> str:

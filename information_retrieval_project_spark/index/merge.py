@@ -5,8 +5,7 @@ build groups each term's postings within one build (build_postings); this
 module merges ACROSS builds — the daily-increment shape at 10^12-file scale, where
 re-encoding the whole index for a 0.1% corpus delta is unaffordable.
 
-Cost profile: a FULL OUTER join on term (the only shuffle, keyed the same
-way the index is bucketed, so with a bucketed layout it's co-located), then
+Cost profile: a FULL OUTER join on term (the only shuffle), then
 - terms touched only by ONE side pass through BYTE-IDENTICAL — no posting
   decode at all (the overwhelming majority for a small delta);
 - terms present in both sides decode both postings, merge the sorted runs
@@ -119,32 +118,6 @@ def compact_segments(seg_idx: DataFrame, cfg) -> DataFrame:
 
     tf = decode_candidates(seg_idx).select("doc_id", "term", "tf")
     return build_postings(tf, cfg)
-
-
-def write_index_table(idx: DataFrame, table: str, n_buckets: int = 32) -> None:
-    """Persist an index as a Hive-BUCKETED catalog table
-    (bucketBy(term) + sortBy(term)): two indexes stored this way full-outer
-    join on term with NO shuffle on either side — the SortMergeJoin reads
-    co-located, pre-sorted buckets (tests/test_index_merge asserts the plan
-    has no hash-partitioning Exchange; Catalyst additionally broadcasts the
-    small delta for the overlap branch, which moves nothing of the base).
-    This is the at-scale layout for merge_index: a daily delta joins a
-    10^12-file base index without moving the base."""
-    (
-        idx.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .saveAsTable(table)
-    )
-
-
-def merge_index_colocated(
-    spark, base_table: str, delta_table: str
-) -> DataFrame:
-    """merge_index over two bucketed catalog tables (write_index_table) —
-    identical semantics, shuffle-free join."""
-    return merge_index(spark.table(base_table), spark.table(delta_table))
 
 
 def _delete_udf():

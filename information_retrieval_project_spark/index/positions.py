@@ -9,14 +9,16 @@ module makes the same query INDEX-served: positions are materialized once at
 build time, so a phrase query touches only its terms' position lists instead
 of re-tokenizing the corpus.
 
-Layout (`positions-v2`): one row (term, doc_id, n_occ, positions) per
+Layout (`positions-v3`): one row (term, doc_id, n_occ, positions) per
 (term, doc_id), positions the term's ascending token indices in the doc and
 n_occ its length (the doc's tf of the term). They come from the same Arrow
-tokenize kernel as tf (index/build.tokenize_tf_positions). Rows group by
+tokenize kernel as tf (index/build.tokenize_tf_positions), under the
+analyzer its state.json records. Rows group by
 (term, doc_id), so no group exceeds one document's occurrences of one term:
 hot terms need no salting here. The relation is written partitioned by the
 same term_bucket as the main index for query-time pruning. A store of
-another format (`positions-v1`, binary lists) is refused, naming its dir.
+another format (`positions-v1` binary lists, `positions-v2` without an
+analyzer) or another analyzer is refused, naming its dir.
 
 Phrase and proximity run as native Spark expressions, no Python stage:
 phrase explodes each phrase term's lists to (doc_id, pos - offset_in_phrase,
@@ -33,6 +35,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textnorm import Analyzer
 from . import manifest
 # the shared term+bucket prune; its modulus MUST be the stored one, which
 # read_positions returns
@@ -41,15 +44,18 @@ from .build import tokenize_tf_positions
 
 POS_SCHEMA = "term string, doc_id long, n_occ long, positions array<int>"
 # committed in every snapshot's state.json; a snapshot of another format
-# is refused, not misread. v2: positions are array<int>, not encoded bytes
-POSITIONS_FORMAT = "positions-v2"
+# is refused, not misread. v2: positions are array<int>, not encoded bytes.
+# v3: state.json records the analyzer.
+POSITIONS_FORMAT = "positions-v3"
 
 
-def build_positions(corpus_with_id: DataFrame) -> DataFrame:
+def build_positions(
+    corpus_with_id: DataFrame, analyzer: Analyzer = Analyzer()
+) -> DataFrame:
     """corpus (with doc_id) → positional index (term, doc_id, n_occ,
     positions array<int>) — a projection of tokenize_tf_positions (n_occ IS
     tf), kept as the positions-only entry point."""
-    return tokenize_tf_positions(corpus_with_id).select(
+    return tokenize_tf_positions(corpus_with_id, *analyzer).select(
         "term", "doc_id", F.col("tf").alias("n_occ"), "positions"
     )
 
@@ -59,6 +65,7 @@ def write_positions(
     out_dir: str,
     term_buckets: int = 32,
     state: dict | None = None,
+    analyzer: Analyzer = Analyzer(),
 ) -> None:
     """Persist the positional index partitioned by the shared term-bucket
     scheme (index/bucketing.py — same hash as the main index) as the next
@@ -67,16 +74,18 @@ def write_positions(
     crash can pair data with a modulus it was not written at (the
     silent-pruning bug class ADVICE r1 flagged). state: caller state
     committed with the snapshot (e.g. the incorporated corpus files of
-    streaming.incremental.incremental_corpus_update)."""
+    streaming.incremental.incremental_corpus_update). analyzer: pos_idx's,
+    committed too."""
     manifest.committed(out_dir, POSITIONS_FORMAT, required=False)
     staging = manifest.begin(out_dir)
     write_bucketed(pos_idx, os.path.join(staging, "data"), term_buckets)
-    _commit(out_dir, staging, term_buckets, state)
+    _commit(out_dir, staging, term_buckets, state, analyzer)
 
 
-def _commit(out_dir: str, staging: str, term_buckets: int, state) -> str:
+def _commit(out_dir: str, staging: str, term_buckets: int, state, analyzer) -> str:
     fmt = {"index_format": POSITIONS_FORMAT, "term_buckets": int(term_buckets)}
-    return manifest.commit(out_dir, staging, {**(state or {}), **fmt})
+    state = {**(state or {}), **fmt, "analyzer": analyzer._asdict()}
+    return manifest.commit(out_dir, staging, state)
 
 
 def _read_data(spark: SparkSession, snapshot: str) -> DataFrame:
@@ -121,6 +130,7 @@ def append_positions(
     new_docs_corpus: DataFrame | None = None,
     delta_positions: DataFrame | None = None,
     state: dict | None = None,
+    analyzer: Analyzer = Analyzer(),
 ) -> dict:
     """Incremental positional-index maintenance (VERDICT r4 #7): tokenize
     ONLY the new documents, stage a snapshot whose data = hardlinks to the
@@ -137,8 +147,9 @@ def append_positions(
     callers that derive postings AND positions from one fused tokenize
     pass (streaming.incremental.incremental_corpus_update) and must not
     pay a second corpus scan here. state: caller state committed with the
-    snapshot. The committed term-bucket modulus is REUSED so partition
-    pruning stays valid.
+    snapshot. analyzer: the delta's, which must be the committed one. The
+    committed term-bucket modulus is REUSED so partition pruning stays
+    valid.
 
     A crash at any point leaves the pointer on the previous complete
     snapshot (hardlinks live inside the staging dir until the publish
@@ -151,11 +162,11 @@ def append_positions(
     delta = (
         delta_positions
         if delta_positions is not None
-        else build_positions(new_docs_corpus)
+        else build_positions(new_docs_corpus, analyzer)
     )
-    got = manifest.committed(out_dir, POSITIONS_FORMAT, required=False)
+    got = manifest.committed(out_dir, POSITIONS_FORMAT, required=False, analyzer=analyzer)
     if got is None:
-        write_positions(delta, out_dir, state=state)
+        write_positions(delta, out_dir, state=state, analyzer=analyzer)
         return {"mode": "initial", "linked_files": 0}
     cur, cur_state = got
     term_buckets = cur_state["term_buckets"]
@@ -166,7 +177,7 @@ def append_positions(
         os.path.join(staging, "data"),
         prefix=f"{os.path.basename(cur)}_",
     )
-    name = _commit(out_dir, staging, term_buckets, state)
+    name = _commit(out_dir, staging, term_buckets, state, analyzer)
     return {"mode": "appended", "linked_files": linked, "snapshot": name}
 
 
@@ -194,6 +205,7 @@ def compact_positions(spark: SparkSession, out_dir: str) -> dict:
         out_dir,
         term_buckets=state["term_buckets"],
         state=state,
+        analyzer=state["analyzer"],
     )
     return {
         "mode": "compacted",
@@ -223,7 +235,8 @@ def delete_positions_docs(
         .join(F.broadcast(tomb), "doc_id", "left_anti")
     )
     write_positions(
-        kept, out_dir, term_buckets=state["term_buckets"], state=state
+        kept, out_dir, term_buckets=state["term_buckets"], state=state,
+        analyzer=state["analyzer"],
     )
     return {"mode": "deleted", "n_tombstones": len(doc_ids)}
 

@@ -3,27 +3,28 @@
 Implements the frozen scoring semantics exactly once more, independently of
 the Spark plans, for rank-identity testing (SURVEY.md §5.2 item 1 — the
 mechanized version of the reference's manual target-rank inspection at
-main.py:41-43). Shares textnorm with the engine so tokenization is identical
-by construction; the scoring math here is straight-line numpy, while the
-engine's is distributed column math — matching results validates both.
+main.py:41-43). Tokenizes docs and queries with textnorm.analyze, the
+engine's own kernel, so tokenization is identical by construction; the
+scoring math here is straight-line numpy, while the engine's is distributed
+column math — matching results validates both.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from collections import Counter
 
-from ..functions.textnorm import normalize_tokenize
+import numpy as np
+import pyarrow as pa
+
+from ..functions.textnorm import Analyzer, analyze, normalize_tokenize
 from ..queryexec.bm25 import B, K1
 
 
 def oracle_tf(docs: dict[int, str], strategy: str = "code") -> dict[int, dict[str, int]]:
-    out: dict[int, dict[str, int]] = {}
-    for doc_id, content in docs.items():
-        counts: dict[str, int] = {}
-        for t in normalize_tokenize(content, strategy):
-            counts[t] = counts.get(t, 0) + 1
-        out[doc_id] = counts
-    return out
+    toks = analyze(pa.array(list(docs.values()), pa.string()), Analyzer(strategy))
+    return {
+        d: Counter(t for t in ts if t) for d, ts in zip(docs, toks.to_pandas())
+    }
 
 
 def oracle_bm25_topk(
@@ -72,9 +73,7 @@ def oracle_tfidf_cosine_topk(
     def idf(t: str) -> float:
         return float(np.log((1.0 + n) / (1.0 + df.get(t, 0))) + 1.0)
 
-    q_counts: dict[str, int] = {}
-    for t in normalize_tokenize(query, strategy):
-        q_counts[t] = q_counts.get(t, 0) + 1
+    q_counts = Counter(normalize_tokenize(query, strategy))
     qw = {t: c * idf(t) for t, c in q_counts.items()}
     qn = float(np.sqrt(sum(v * v for v in qw.values())))
     scores: dict[int, float] = {}

@@ -100,7 +100,8 @@ def resumable_build(
     # One slim pass computes every unit's input fingerprint: row count +
     # order-independent bit_xor of the full-row hash. A manifest entry only
     # skips its unit if the fingerprint still matches — a resumed run against
-    # changed input rebuilds the stale units instead of silently keeping them.
+    # changed input (or another analyzer) rebuilds the stale units instead.
+    analyzer = cfg.analyzer._asdict()
     fps = {
         r["build_unit"]: (r["n"], r["fp"])
         for r in ids.groupBy("build_unit")
@@ -121,11 +122,12 @@ def resumable_build(
             prev is not None
             and prev.get("input_fp") == input_fp
             and prev.get("n_docs") == n_docs
+            and prev.get("analyzer") == analyzer
         ):
             continue
         t0 = time.time()
         part = ids.filter(F.col("build_unit") == unit)
-        tf_df = tokenize_tf(part, cfg.strategy, cfg.stem, cfg.stopwords)
+        tf_df = tokenize_tf(part, *cfg.analyzer)
         tmp = os.path.join(tf_root, f"_tmp_unit={unit}")
         final = os.path.join(tf_root, f"unit={unit}")
         if os.path.exists(tmp):
@@ -144,6 +146,7 @@ def resumable_build(
                         "unit": unit,
                         "input_fp": input_fp,
                         "n_docs": m.n_docs,
+                        "analyzer": analyzer,
                         "n_tf_rows": m.n_tf_rows,
                         "seconds": round(m.seconds, 3),
                         "docs_per_sec": round(m.docs_per_sec, 2),
@@ -168,13 +171,14 @@ def finalize_index(
     The snapshot's state records each unit's (input_fp, n_docs) and the
     build config: when the committed snapshot already records the same,
     nothing is read or committed (a resumed run that built no unit is a
-    true no-op)."""
+    true no-op). It commits cfg's analyzer: a unit recorded under another
+    is refused, naming out_dir."""
     store = os.path.join(out_dir, "index_store")
+    units = load_manifest(out_dir).values()
+    if any(r.get("analyzer") != cfg.analyzer._asdict() for r in units):
+        raise ValueError(f"units of {out_dir} are not all {cfg.analyzer}")
     built = {
-        "units": sorted(
-            [r["unit"], r["input_fp"], r["n_docs"]]
-            for r in load_manifest(out_dir).values()
-        ),
+        "units": sorted([r["unit"], r["input_fp"], r["n_docs"]] for r in units),
         "build_config": asdict(cfg),
     }
     cur = manifest.committed(store, INDEX_FORMAT, required=False)
@@ -184,5 +188,6 @@ def finalize_index(
     tf_df = tf_df.select("doc_id", "term", "tf")
     ds = doc_stats(tf_df)
     return write_index(
-        build_postings(tf_df, cfg), ds, collection_stats(ds), store, state=built
+        build_postings(tf_df, cfg), ds, collection_stats(ds), store,
+        state=built, analyzer=cfg.analyzer,
     )

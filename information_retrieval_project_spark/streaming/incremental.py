@@ -19,6 +19,7 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textnorm import Analyzer
 from ..index import manifest
 from ..index.build import (
     INDEX_FORMAT,
@@ -40,9 +41,9 @@ def incremental_tf_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Consume all currently-available corpus parquet files and append their
-    (doc_id, term, tf) rows to out_dir. Re-running after new files arrive
-    processes ONLY the new files (file-source checkpoint). Blocks until the
-    AvailableNow trigger drains."""
+    (doc_id, term, tf) rows, tokenized with Analyzer(), to out_dir.
+    Re-running after new files arrive processes ONLY the new files
+    (file-source checkpoint). Blocks until the AvailableNow trigger drains."""
     stream = (
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", 8)
@@ -93,8 +94,11 @@ def incremental_index_update(
     files against the unchanged base. The previous snapshot survives one
     update, so in-flight readers pinned to it keep their files.
     Append-only: re-ingesting a document would sum its tf into existing
-    postings; dedupe upstream."""
-    cur = manifest.committed(out_dir, INDEX_FORMAT, required=False)
+    postings; dedupe upstream. The tf files are Analyzer()'s (the ingest's
+    one): a cfg or committed store of another is refused, naming the dir."""
+    if cfg.analyzer != Analyzer():
+        raise ValueError(f"the tf files in {tf_dir} are {Analyzer()}, not {cfg.analyzer}")
+    cur = manifest.committed(out_dir, INDEX_FORMAT, required=False, analyzer=Analyzer())
     incorporated = _incorporated(cur)
     files = sorted(glob(os.path.join(tf_dir, "*.parquet")))
     new = [f for f in files if os.path.basename(f) not in incorporated]
@@ -145,7 +149,7 @@ def _apply_index_delta(
         merged, ds, mode, layout = delta_idx, delta_ds, "initial", {}
     name = write_index(
         merged, ds, collection_stats(ds), out_dir,
-        state={"incorporated": sorted(incorporated)}, **layout,
+        state={"incorporated": sorted(incorporated)}, analyzer=cfg.analyzer, **layout,
     )
     return {"mode": mode, "new_files": n_new, "snapshot": name}
 
@@ -174,6 +178,8 @@ def incremental_corpus_update(
     files are append-only immutable batches (the file-source contract of
     incremental_tf_ingest); re-writing an already-incorporated file is
     NOT detected (same rule as incremental_index_update: dedupe upstream).
+    Deltas are tokenized with cfg.analyzer; a store committed with another
+    is refused, naming its dir, before anything is tokenized or committed.
     """
     from ..index.build import tokenize_tf_positions, with_doc_id
     from ..index.positions import append_positions
@@ -182,10 +188,11 @@ def incremental_corpus_update(
     pos_dir = os.path.join(out_dir, "positions_store")
     files = sorted(glob(os.path.join(corpus_dir, "*.parquet")))
 
-    cur = manifest.committed(idx_dir, INDEX_FORMAT, required=False)
+    analyzer = cfg.analyzer
+    cur = manifest.committed(idx_dir, INDEX_FORMAT, required=False, analyzer=analyzer)
     inc_idx = _incorporated(cur)
     inc_pos = _incorporated(
-        manifest.committed(pos_dir, POSITIONS_FORMAT, required=False)
+        manifest.committed(pos_dir, POSITIONS_FORMAT, required=False, analyzer=analyzer)
     )
 
     new_idx = [f for f in files if os.path.basename(f) not in inc_idx]
@@ -199,7 +206,7 @@ def incremental_corpus_update(
         # the index branch (postings + stats) and the positions branch
         # don't each re-tokenize
         corpus = with_doc_id(spark.read.parquet(*new_idx))
-        fused = tokenize_tf_positions(corpus).persist()
+        fused = tokenize_tf_positions(corpus, *analyzer).persist()
         try:
             tf_delta = fused.select("doc_id", "term", "tf")
             pos_delta = fused.select(
@@ -215,6 +222,7 @@ def incremental_corpus_update(
                 pos_dir,
                 delta_positions=pos_delta,
                 state={"incorporated": sorted(inc_pos | names)},
+                analyzer=analyzer,
             )
         finally:
             # a failure between the two commits must not leave the full
@@ -226,7 +234,7 @@ def incremental_corpus_update(
     # store scans exactly its own missed files
     if new_idx:
         names = {os.path.basename(f) for f in new_idx}
-        tf_delta = tokenize_tf(with_doc_id(spark.read.parquet(*new_idx)))
+        tf_delta = tokenize_tf(with_doc_id(spark.read.parquet(*new_idx)), *analyzer)
         out["index"] = _apply_index_delta(
             spark, tf_delta, idx_dir, cur, inc_idx | names, len(new_idx), cfg
         )
@@ -237,6 +245,7 @@ def incremental_corpus_update(
             pos_dir,
             new_docs_corpus=with_doc_id(spark.read.parquet(*new_pos)),
             state={"incorporated": sorted(inc_pos | names)},
+            analyzer=analyzer,
         )
     out["mode"] = "catchup"
     return out

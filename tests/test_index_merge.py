@@ -162,40 +162,6 @@ def test_delete_docs_equals_rebuild_without_them(spark):
     assert got == want
 
 
-def test_colocated_merge_has_no_shuffle(spark):
-    """Bucketed-table merge: both sides bucketBy(term) → the full-outer
-    SortMergeJoin runs without ANY Exchange, and the merged rows equal the
-    in-memory merge_index result."""
-    from information_retrieval_project_spark.index.merge import (
-        merge_index_colocated,
-        write_index_table,
-    )
-
-    full = generate_corpus(spark, 200, partitions=2).cache()
-    base_c = full.filter(F.xxhash64("repo", "path", "commit") % 4 != 0)
-    delta_c = full.filter(F.xxhash64("repo", "path", "commit") % 4 == 0)
-    base = build_postings(tokenize_tf(with_doc_id(base_c)), CFG)
-    delta = build_postings(tokenize_tf(with_doc_id(delta_c)), CFG)
-    write_index_table(base, "idx_base_t", n_buckets=8)
-    write_index_table(delta, "idx_delta_t", n_buckets=8)
-    try:
-        merged = merge_index_colocated(spark, "idx_base_t", "idx_delta_t")
-        plan = merged._sc._jvm.PythonSQLUtils.explainString(
-            merged._jdf.queryExecution(), "formatted"
-        )
-        # co-located: no SHUFFLE exchange anywhere — the full-outer SMJ reads
-        # pre-bucketed, pre-sorted buckets in place. (Catalyst additionally
-        # rewrites the both-sides-present branch into an inner join and
-        # BROADCASTS the small delta — the right plan at scale, and still
-        # nothing about the big base moves.)
-        assert "Exchange hashpartitioning" not in plan
-        assert "SortMergeJoin" in plan
-        assert _rows(merged) == _rows(merge_index(base, delta))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS idx_base_t")
-        spark.sql("DROP TABLE IF EXISTS idx_delta_t")
-
-
 def test_compact_segments_equals_oneshot_segmented_build(spark):
     """After appends grow the segment count, compaction (decode → rebuild
     from the index itself, no corpus scan) reproduces the one-shot segmented

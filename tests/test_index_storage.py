@@ -2,6 +2,8 @@
 full write/read roundtrip (SURVEY.md §4.2 partition pruning; index/build
 write_index/read_index)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,6 +123,25 @@ def test_corrupt_index_meta_raises_not_falls_back(spark, tmp_path):
         read_index_meta(spark, out2)
     with pytest.raises(manifest.SnapshotStoreError, match="term_buckets"):
         read_index(spark, out2)
+
+    # and so is one without the analyzer its terms were tokenized with
+    out3 = committed_state(
+        "idxmeta3", '{"index_format": "%s", "term_buckets": 4}' % INDEX_FORMAT
+    )
+    with pytest.raises(manifest.SnapshotStoreError, match="analyzer"):
+        read_index(spark, out3)
+    # or with an analyzer no build can have: an unknown strategy, a non-bool flag
+    for i, bad in enumerate(
+        ['{"strategy": "bogus", "stem": false, "stopwords": false}',
+         '{"strategy": "code", "stem": 1, "stopwords": false}']
+    ):
+        out4 = committed_state(
+            f"idxmeta4{i}",
+            '{"index_format": "%s", "term_buckets": 4, "analyzer": %s}'
+            % (INDEX_FORMAT, bad),
+        )
+        with pytest.raises(manifest.SnapshotStoreError, match=re.escape(out4)):
+            read_index_meta(spark, out4)
 
     # absent path: nothing committed
     with pytest.raises(manifest.SnapshotStoreError, match="no snapshot"):

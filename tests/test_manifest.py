@@ -221,6 +221,18 @@ LEGACY_LAYOUTS = {
         "v000001/data/term_bucket=0/part-0.parquet": "x",
         "v000001/state.json": '{"index_format": "positions-v1", "term_buckets": 4}',
     },
+    # committed snapshots of the formats that did not record the analyzer
+    "index_v2": {
+        "CURRENT": "v000001",
+        "v000001/index/term_bucket=0/part-0.parquet": "x",
+        "v000001/doc_stats/part-0.parquet": "x",
+        "v000001/state.json": '{"index_format": "postings-v2", "term_buckets": 4}',
+    },
+    "positions_v2": {
+        "CURRENT": "v000001",
+        "v000001/data/term_bucket=0/part-0.parquet": "x",
+        "v000001/state.json": '{"index_format": "positions-v2", "term_buckets": 4}',
+    },
     # the positions store before its pointer: one bundle dir
     "positions_bundle": {
         "positions_bundle/data/term_bucket=0/part-0.parquet": "x",

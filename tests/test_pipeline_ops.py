@@ -1,4 +1,4 @@
-"""Tests for dedup / similarity / textstats / multimodal modules."""
+"""Tests for dedup / similarity / textstats modules."""
 
 import numpy as np
 import pytest
@@ -12,11 +12,6 @@ from information_retrieval_project_spark.dedup.dedup import (
     shingles,
     simhash64,
     simhash_near_dup_pairs,
-)
-from information_retrieval_project_spark.multimodal.binaryops import (
-    decode_image_stub,
-    extract_features,
-    with_media_metadata,
 )
 from information_retrieval_project_spark.similarity.ann import (
     brute_force_cosine_topk,
@@ -207,22 +202,6 @@ def test_doc_fingerprints_stability(spark):
     assert rows[1]["token_set_fp"] == rows[2]["token_set_fp"]  # norm-stable
 
 
-def test_multimodal_stub_plumbing(spark):
-    rows = [(i, bytes([i]) * (100 + i)) for i in range(10)]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    meta = with_media_metadata(media).collect()
-    assert all(m["n_bytes"] == 100 + m["media_id"] for m in meta)
-    feats = extract_features(media, dim=16, fake=True).collect()
-    assert len(feats) == 10
-    for r in feats:
-        v = np.array(r["feature"])
-        assert v.shape == (16,)
-        assert abs(np.linalg.norm(v) - 1.0) < 1e-5
-    # the non-fake path must refuse loudly, not silently fake
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"xx", fake=False)
-
-
 def test_ivf_ann_recall_and_exactness_in_probed_buckets(spark):
     import numpy as np
     from information_retrieval_project_spark.similarity.ann import (
@@ -273,44 +252,6 @@ def test_kmv_estimate_accuracy(spark):
     # fewer than k distinct → exact
     small = spark.range(40).select(F.concat(F.lit("x"), F.col("id")).alias("v"))
     assert kmv_estimate(kmv_state(small, "v", k=64), k=64) == 40.0
-
-
-def test_sample_frames_fanout(spark):
-    from information_retrieval_project_spark.multimodal.binaryops import sample_frames
-
-    rows = [(1, b"v" * 40960), (2, b"w" * 1024)]  # ~4 frames and 1 frame
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = sample_frames(media, every_n=10, fake=True).collect()
-    per = {}
-    for r in out:
-        per.setdefault(r["media_id"], []).append(r)
-        assert r["height"] == 8 and r["width"] == 8
-        assert len(r["frame_sha"]) == 64
-    assert len(per[1]) == 4 and len(per[2]) == 1
-    # frame digests are deterministic and distinct per frame index
-    shas = [r["frame_sha"] for r in sorted(per[1], key=lambda x: x["frame_no"])]
-    assert len(set(shas)) == len(shas)
-
-
-def test_resize_images_plumbing(spark):
-    """Resize verb: deterministic fake path with typed output schema; the
-    real path refuses loudly (no codec libs in the sandbox)."""
-    from information_retrieval_project_spark.multimodal.binaryops import (
-        resize_images,
-        resize_stub,
-    )
-
-    rows = [(i, bytes([i]) * (400 + i)) for i in range(6)]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in resize_images(media, 8, 8, fake=True).collect()}
-    assert len(out) == 6
-    assert all(r["height"] == 8 and r["width"] == 8 for r in out.values())
-    again = {r["media_id"]: r for r in resize_images(media, 8, 8, fake=True).collect()}
-    assert {k: v["resized_sha"] for k, v in out.items()} == {
-        k: v["resized_sha"] for k, v in again.items()
-    }
-    with pytest.raises(NotImplementedError):
-        resize_stub(np.zeros((4, 4)), 2, 2, fake=False)
 
 
 def test_caps_opt_in_and_truncation_observable(spark):

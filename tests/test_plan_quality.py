@@ -269,6 +269,23 @@ def test_merged_build_is_one_postings_shuffle(spark):
     assert re.search(r"xxhash64\(doc_id#", seg), seg
 
 
+def test_parity_mode_tokenize_is_one_arrow_stage(spark):
+    """Parity mode (stem/stopwords) runs inside tokenize_tf's one
+    mapInArrow kernel, not in a pandas pass."""
+    import re
+
+    from information_retrieval_project_spark.corpus import generate_corpus
+    from information_retrieval_project_spark.index.build import (
+        tokenize_tf,
+        with_doc_id,
+    )
+
+    ids = with_doc_id(generate_corpus(spark, 20, partitions=2))
+    p = plan(tokenize_tf(ids, stem=True, stopwords=True))
+    assert len(re.findall(r"^\(\d+\) MapInArrow$", p, re.M)) == 1, p
+    assert "MapInPandas" not in p, p
+
+
 def test_facet_counts_plan_shape(spark, sf_dir):
     """Facet counts must broadcast both small sides (query terms, match
     set) and explode facet dimensions through ONE generator — never a

@@ -8,10 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_project_spark.corpus import generate_corpus
-from information_retrieval_project_spark.index.build import (
+from information_retrieval_project_spark.functions.textnorm import (
     _SPLIT_PATTERNS,
-    with_doc_id,
+    normalize_tokenize,
 )
+from information_retrieval_project_spark.index.build import with_doc_id
 from information_retrieval_project_spark.index.positions import (
     build_positions,
     decode_position_rows,
@@ -98,6 +99,30 @@ def test_positions_build_tf_equals_tf_build(spark, strategy):
     tf = rows(tokenize_tf(with_doc_id(corpus), strategy))
     assert rows(pos.select("doc_id", "term", F.col("n_occ").alias("tf"))) == tf
     assert tf
+
+
+def test_positions_build_in_parity_mode(spark):
+    """build_index(positions=True) accepts stem/stopwords: its tf equals
+    the positions=False build's, and each position is the term's index
+    among the doc's kept (stemmed, non-stopword) terms."""
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        build_index,
+    )
+
+    corpus = generate_corpus(spark, 60, partitions=2)
+    cfg = BuildConfig(stem=True, stopwords=True)
+    idx, ds, cs, pos = build_index(corpus, cfg, positions=True)
+    idx2, ds2, cs2 = build_index(corpus, cfg)
+    assert sorted(idx.collect()) == sorted(idx2.collect())
+    assert sorted(ds.collect()) == sorted(ds2.collect())
+    want = {}
+    for r in with_doc_id(corpus).collect():
+        terms = normalize_tokenize(r["content"], stem=True, stopwords=True)
+        for i, t in enumerate(terms):
+            want.setdefault((t, r["doc_id"]), []).append(i)
+    got = {(r["term"], r["doc_id"]): r["positions"] for r in pos.collect()}
+    assert got == want and want
 
 
 def test_phrase_match_indexed_equals_corpus_semantics(spark):

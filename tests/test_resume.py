@@ -2,6 +2,8 @@
 (north_rule; SURVEY.md §7.1 M5)."""
 
 import os
+import re
+from dataclasses import replace
 
 import pytest
 
@@ -134,3 +136,37 @@ def test_finalize_commits_only_when_units_change(spark, tmp_path, jobs_run):
     second = finalize_index(spark, out, CFG)
     assert second != first and manifest.current(store).endswith(second)
     assert sorted(os.listdir(store)) == ["CURRENT", first, second]
+
+
+def test_finalize_follows_the_units_analyzer(spark, tmp_path):
+    """finalize_index commits a whole snapshot labelled with cfg's analyzer:
+    a rebuild into the same out_dir under another analyzer re-tokenizes
+    every unit and commits, replacing the old store; finalizing units
+    tokenized with another analyzer than cfg's is refused, naming out_dir."""
+    from information_retrieval_project_spark.functions.textnorm import Analyzer
+    from information_retrieval_project_spark.index.build import (
+        read_index_meta,
+        tokenize_tf,
+        with_doc_id,
+    )
+    from information_retrieval_project_spark.queryexec.wand import decode_candidates
+
+    corpus = generate_corpus(spark, 120, partitions=2).cache()
+    out = str(tmp_path / "build5")
+    store = os.path.join(out, "index_store")
+    resumable_build(spark, corpus, out, n_units=4, cfg=CFG)
+    finalize_index(spark, out, CFG)
+
+    keras = replace(CFG, strategy="keras")
+    with pytest.raises(ValueError, match=re.escape(out)):
+        finalize_index(spark, out, keras)
+    assert len(resumable_build(spark, corpus, out, n_units=4, cfg=keras)) == 4
+    with pytest.raises(ValueError, match=re.escape(out)):
+        finalize_index(spark, out, CFG)
+    finalize_index(spark, out, keras)
+    assert read_index_meta(spark, store)["analyzer"] == Analyzer("keras")
+    got = decode_candidates(read_index(spark, store)[0])
+    want = tokenize_tf(with_doc_id(corpus), "keras")
+    assert sorted(got.select("doc_id", "term", "tf").collect()) == sorted(
+        want.collect()
+    )

@@ -2,12 +2,17 @@
 the one-shot batch build."""
 
 import os
+import re
 import shutil
 
 from pyspark.sql import functions as F
 
 from information_retrieval_project_spark.corpus import generate_pdf
-from information_retrieval_project_spark.index.build import tokenize_tf, with_doc_id
+from information_retrieval_project_spark.index.build import (
+    read_index,
+    tokenize_tf,
+    with_doc_id,
+)
 from information_retrieval_project_spark.streaming.incremental import (
     incremental_tf_ingest,
 )
@@ -87,6 +92,13 @@ def test_incremental_index_update_merges_only_new_files(spark, tmp_path):
     tokenize_tf(with_doc_id(spark.createDataFrame(p2))).coalesce(1).write.mode(
         "append"
     ).parquet(tf_dir)
+    # the tf stream is written with the default analyzer: another cfg is
+    # refused, naming the dir, before anything is merged
+    import pytest
+
+    keras = BuildConfig(strategy="keras", hot_df_threshold=10_000)
+    with pytest.raises(ValueError, match=re.escape(tf_dir)):
+        incremental_index_update(spark, tf_dir, out, keras)
     r2 = incremental_index_update(spark, tf_dir, out, cfg)
     assert r2["mode"] == "merged" and r2["new_files"] >= 1
 
@@ -374,6 +386,68 @@ def test_incremental_corpus_update_maintains_both_stores(spark, tmp_path):
     # and the incorporated list caught up — a further run is a noop
     assert incremental_corpus_update(spark, corpus_dir, out)["mode"] == "noop"
     tf_full.unpersist()
+
+
+def test_corpus_update_keeps_the_committed_analyzer(spark, tmp_path):
+    """Both stores tokenize every delta with the analyzer they committed:
+    a keras store updated with a keras cfg holds keras terms after the
+    catch-up path and the fused path, and a cfg of another analyzer is
+    refused, naming the dir, before either store's CURRENT moves."""
+    import pytest
+
+    from information_retrieval_project_spark.functions.textnorm import Analyzer
+    from information_retrieval_project_spark.index import manifest
+    from information_retrieval_project_spark.index.build import (
+        BuildConfig,
+        read_index_meta,
+    )
+    from information_retrieval_project_spark.index.positions import read_positions
+    from information_retrieval_project_spark.queryexec.wand import decode_candidates
+    from information_retrieval_project_spark.streaming.incremental import (
+        incremental_corpus_update,
+    )
+
+    corpus_dir, out = str(tmp_path / "corpus"), str(tmp_path / "stores")
+    idx_dir = os.path.join(out, "index_store")
+    pos_dir = os.path.join(out, "positions_store")
+    keras = BuildConfig(strategy="keras", hot_detection_sample=1.0)
+
+    def add_file(start, name):
+        tmp = str(tmp_path / f"_chunk_{name}")
+        pdf = generate_pdf(30, start=start)
+        pdf["content"] += " self.path(x):"  # a keras term, three code terms
+        _write_chunk(spark, pdf, tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        os.makedirs(corpus_dir, exist_ok=True)
+        shutil.move(os.path.join(tmp, part), os.path.join(corpus_dir, name))
+
+    def stored_rows():
+        idx, _, _ = read_index(spark, idx_dir)
+        pos, _ = read_positions(spark, pos_dir)
+        return (
+            sorted(decode_candidates(idx).select("doc_id", "term", "tf").collect()),
+            sorted(pos.select("doc_id", "term", F.col("n_occ").alias("tf")).collect()),
+        )
+
+    add_file(0, "f1.parquet")
+    assert incremental_corpus_update(spark, corpus_dir, out, keras)["mode"] == "fused"
+    shutil.rmtree(pos_dir)  # the positions store lags: next run catches it up
+    add_file(30, "f2.parquet")
+    assert incremental_corpus_update(spark, corpus_dir, out, keras)["mode"] == "catchup"
+    add_file(60, "f3.parquet")
+    assert incremental_corpus_update(spark, corpus_dir, out, keras)["mode"] == "fused"
+
+    docs = with_doc_id(spark.read.parquet(corpus_dir))
+    want = sorted(tokenize_tf(docs, "keras").collect())
+    assert want != sorted(tokenize_tf(docs).collect())
+    assert stored_rows() == (want, want)
+    assert read_index_meta(spark, idx_dir)["analyzer"] == Analyzer("keras")
+
+    add_file(90, "f4.parquet")
+    pointers = [manifest.current(d) for d in (idx_dir, pos_dir)]
+    with pytest.raises(manifest.SnapshotStoreError, match=re.escape(idx_dir)):
+        incremental_corpus_update(spark, corpus_dir, out, BuildConfig())
+    assert [manifest.current(d) for d in (idx_dir, pos_dir)] == pointers
 
 
 def test_incremental_update_snapshots_are_term_bucketed(spark, tmp_path):

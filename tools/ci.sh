@@ -32,8 +32,18 @@ tools/spark_submit.sh --docs 2000 --units 4 --out "$OUT" | tail -1 \
 # a resumed run that built no unit commits no snapshot either
 test "$(cat "$OUT/index_store/CURRENT")" = "$before"
 echo "resume no-op ok"
+# 5 hits for the default analyzer's terms, which the build committed
 tools/spark_submit.sh --out "$OUT" --query "def return buffer" --k 5 | tail -1 \
-    | python -c 'import json, sys; assert len(json.load(sys.stdin)["hits"]) == 5'
+    | python -c '
+import json, sys
+got = json.load(sys.stdin)
+assert len(got["hits"]) == 5
+assert got["query"] == ["def", "return", "buffer"], got["query"]
+store = sys.argv[1] + "/index_store"
+snap = open(store + "/CURRENT").read().strip()
+analyzer = json.load(open(f"{store}/{snap}/state.json"))["analyzer"]
+assert analyzer == {"strategy": "code", "stem": False, "stopwords": False}, analyzer
+' "$OUT"
 echo "query mode ok"
 
 echo "ALL GREEN"

@@ -9,10 +9,12 @@ Build mode: builds the synthetic input_hint corpus, runs the
 checkpoint-resumable build, finalizes the compressed index, and prints
 JSON metrics; re-running with the same --out resumes from the lineage
 manifest. The finalized index is the snapshot store --out/index_store.
-Query mode (--query): reads that store with read_index and serves a BM25
-top-k through bm25_topk_compressed (one bucket-pruned scan at the stored
-modulus, one exhaustive posting decode), printing the ranked hits as JSON
-— the full build-then-serve lifecycle through one spark-submit surface.
+Query mode (--query): reads that store with read_index, tokenizes the
+query with the analyzer its snapshot committed and serves a BM25 top-k
+through bm25_topk_compressed (one bucket-pruned scan at the stored
+modulus, one exhaustive posting decode), printing the query's terms and
+the ranked hits as JSON — the full build-then-serve lifecycle through one
+spark-submit surface.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def main() -> None:
         import os
 
         from information_retrieval_project_spark.functions.textnorm import (
-            tokenize,
+            normalize_tokenize,
         )
         from information_retrieval_project_spark.index.build import (
             read_index,
@@ -61,7 +63,10 @@ def main() -> None:
         store = os.path.join(args.out, "index_store")
         idx, ds, _ = read_index(spark, store)
         meta = read_index_meta(spark, store)
-        tokens = tokenize(args.query)
+        a = meta["analyzer"]
+        tokens = normalize_tokenize(
+            args.query, a.strategy, stem=a.stem, stopwords=a.stopwords
+        )
         hits = bm25_topk_compressed(
             spark, idx, ds, meta["n_docs"], meta["avgdl"], tokens, k=args.k,
             term_buckets=meta["term_buckets"],
